@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines: exact,
@@ -280,19 +280,6 @@ object Dedup {
     df.join(dupped, df(idCol) === dupped("drop_id"), "left_anti")
   }
 
-  /** MinHash signature: k permutation-free min-hashes — sig_i =
-    * min over shingles of md5Hash60(i || ':' || shingle). One explode +
-    * one aggregate; k columns of BIGINT per doc. */
-  def minhashSignature(df: DataFrame, idCol: String, textCol: String,
-      k: Int): DataFrame = {
-    val index = shingleIndex(df, idCol, textCol)
-    val aggs = (0 until k).map { i =>
-      min(TextOps.md5Hash60(concat(lit(i.toString), lit(":"), col("shingle"))))
-        .cast("bigint").as(f"sig_$i%02d")
-    }
-    index.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-  }
-
   /** LSH band values: bands of `r` consecutive signature components,
     * hashed to one 60-bit value each → (doc_id, band_idx, band_hash). */
   def lshBands(sig: DataFrame, k: Int, r: Int): DataFrame = {
@@ -311,7 +298,7 @@ object Dedup {
   /** MinHash signature via the Kirsch-Mitzenmacher construction: ONE md5
     * per shingle yields two 30-bit halves (h1, h2); permutation i is the
     * affine combination (h1·(2i+1) + h2) mod 2^31. Hashing cost per
-    * shingle is constant in k (the per-permutation-md5 spelling above
+    * shingle is constant in k (a per-permutation-md5 spelling
     * costs k md5s per shingle — 16× the work at k=16). The affine formula
     * is pure integer arithmetic on the md5-60 halves, so the DuckDB
     * oracle replays the signatures exactly (op62) — which is also why the
@@ -696,10 +683,6 @@ object Dedup {
     tok.groupBy(col("doc_id")).agg(slices.head, slices.tail: _*)
       .select(col("doc_id"), fingerprint.as("simhash"))
   }
-
-  /** Hamming distance between two 60-bit fingerprints (column form). */
-  def hamming60(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b)).cast("bigint")
 
   /** Hamming distance, driver-side form (tests / thresholds). */
   def hammingDist(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)

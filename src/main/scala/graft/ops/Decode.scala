@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** Projection / scalar-expression operators of the decode surface
-  * (SURVEY.md §2.2, OP-10..OP-19). Each is a pure Catalyst expression or a
+  * (SURVEY.md §2.2, OP-11/13..OP-17; OP-10, OP-12, OP-18 and OP-19 are
+  * spelled inline by their queries). Each is a pure Catalyst expression or a
   * narrow projection — no shuffles, no state — so whole chains fuse into a
   * single WholeStageCodegen region and scale linearly with input partitions.
   *
@@ -15,20 +16,6 @@ import org.apache.spark.sql.types.StructType
   * null-on-missing contract without disabling ANSI globally.
   */
 object Decode {
-
-  /** OP-10: Kafka envelope binary→string projection with rename
-    * (`CAST(key AS STRING) key, CAST(value AS STRING) value`). */
-  def castKeyValue(df: DataFrame): DataFrame =
-    df.selectExpr("CAST(key AS STRING) key", "CAST(value AS STRING) value")
-
-  /** OP-11/OP-12: parse a JSON string column against an explicit schema,
-    * replacing the column (PERMISSIVE: malformed → null row). */
-  def parseJson(df: DataFrame, colName: String, schema: StructType): DataFrame =
-    df.withColumn(colName, from_json(col(colName), schema))
-
-  /** OP-13: flatten all fields of a struct column to top level. */
-  def expandStruct(df: DataFrame, colName: String): DataFrame =
-    df.select(col(s"$colName.*"))
 
   /** OP-11+13 fused: cast+parse+expand in one projection. */
   def parseAndExpand(df: DataFrame, schema: StructType): DataFrame =
@@ -55,8 +42,4 @@ object Decode {
   /** OP-17: `split(birthDay,'-')[0]` — year of a YYYY-MM-DD string.
     * split always returns ≥1 element, so index 0 is ANSI-safe. */
   def yearOf(birthDay: Column): Column = split(birthDay, "-").getItem(0)
-
-  /** OP-19: serialize all columns of each row into one JSON string. */
-  def toJsonAll(df: DataFrame, as: String = "value"): DataFrame =
-    df.select(to_json(struct(df.columns.map(col).toIndexedSeq: _*)).as(as))
 }

@@ -218,130 +218,97 @@ object SeqGraphQueries {
       "p_partkey")
   }
 
-  // ---------------------------------------------------------------- op176
+  // ------------------------------------------------ op176 / op226 (+ b)
 
-  /** op176: PageRank over the co-purchase graph — parts are vertices,
+  /** op176: PageRank over the co-purchase graph, broadcast ranks. */
+  val op176Pagerank: Q = (s, d) =>
+    dampedRanks(s, d, seeded = false, coPart = false)
+
+  /** op176b: op176 with co-partitioned joins, ranks never broadcast. */
+  val op176bPagerankPartitioned: Q = (s, d) =>
+    dampedRanks(s, d, seeded = false, coPart = true)
+
+  /** op226: random walk with restart from the op209 seeds, broadcast. */
+  val op226RandomWalkRestart: Q = (s, d) =>
+    dampedRanks(s, d, seeded = true, coPart = false)
+
+  /** op226b: op226 with co-partitioned joins, ranks never broadcast. */
+  val op226bRwrPartitioned: Q = (s, d) =>
+    dampedRanks(s, d, seeded = true, coPart = true)
+
+  /** Damped PageRank over the co-purchase graph — parts are vertices,
     * orders (≤ prBasketCap distinct parts) contribute cliques of edges;
-    * 5 damped iterations entirely in parts-per-billion BIGINT
-    * fixed-point (rank div degree contributions, (Σ·850000000) div 10⁹
-    * damping), so both engines replay the identical integer trajectory.
+    * [[prIters]] damped iterations entirely in parts-per-billion BIGINT
+    * fixed-point (rank div degree, (Σ·850000000) div 10⁹ damping), so
+    * both engines replay the identical integer trajectory (rank_ppb).
+    * seeded=true (op226, rwr_ppb) restricts the teleport mass to the
+    * op209 SOURCE SET (v ≡ 0 mod 97): rank restarts at the seeds, so
+    * the ppb measures relevance TO THE SEEDS (recommendation expansion,
+    * taint/exposure propagation); unreached vertices emit 0.
     *
     * 100 TB shape: each iteration is one shuffle — contributions
-    * re-keyed to the destination vertex and hash-aggregated; the edge
-    * list is pre-keyed by src so the join with the (|V|-sized) rank
-    * table broadcasts the ranks, never re-shuffles the edges. The
-    * basket cap bounds clique blowup exactly like op170's; dangling
-    * vertices can't exist by construction (every vertex is in ≥ 1
-    * edge). Fixed iteration count (the production form checkpoints
-    * ranks between rounds — the op126 BPE-checkpoint convention). */
-  val op176Pagerank: Q = (s, d) => {
+    * re-keyed to the destination vertex and hash-aggregated; seeding
+    * changes only the base term's support. The basket cap bounds clique
+    * blowup like op170's; every vertex is in ≥ 1 edge, so none dangles.
+    * coPart=false (op176/op226): the |V|-sized degree, rank and
+    * contribution tables ride broadcast hints and the edge list never
+    * shuffles — optimal while ranks fit in memory. coPart=true
+    * (op176b/op226b), the billion-vertex form: edges are hash-
+    * partitioned by src ONCE and each round's rank table meets them in
+    * a co-partitioned shuffle join, so only O(|V|) moves per round and
+    * the edge Exchange is reused. Both spellings sit under one oracle. */
+  private def dampedRanks(s: SparkSession, d: String, seeded: Boolean,
+      coPart: Boolean): DataFrame = {
+    val hint = broadcastUnless(coPart)
     val edges = basketCliqueUnd(s, d)
       .select(col("p1").as("src"), col("p2").as("dst"))
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     // NOT materialized: the per-iteration re-reads of the edge chain
     // collapse to one computation via ReuseExchange (identical
     // subplans); an eager checkpoint here measured 2x SLOWER at sf0.1.
-    // deg is |V|-sized — broadcast, so the edge list never sorts/shuffles
-    val esd = edges.join(broadcast(deg), "src")
+    // coPart pins the edge list's layout: hash by src, reused every
+    // iteration.
+    val esd =
+      if (coPart) edges.repartition(col("src")).join(deg, "src")
+      else edges.join(broadcast(deg), "src")
     val verts = deg.select(col("src").as("pk"))
-    // |V| attached via a 1-row cross join (plan-time scalar, no collect)
-    val nVerts = verts.agg(count(lit(1)).as("nv"))
-    var ranks = verts.crossJoin(nVerts)
-      .select(col("pk"), expr(s"$prScale div nv").as("r"))
+    // |V| (or the seed count) attached via a 1-row cross join
+    // (plan-time scalar, no collect)
+    val (n, out) = if (seeded) ("ns", "rwr_ppb") else ("nv", "rank_ppb")
+    val nRow =
+      if (seeded) broadcast(
+        verts.where(col("pk") % 97 === 0).agg(count(lit(1)).as(n)))
+      else verts.agg(count(lit(1)).as(n))
+    def teleport(num: Long): String =
+      if (seeded) s"CASE WHEN pk % 97 = 0 THEN $num div ns " +
+        "ELSE CAST(0 AS BIGINT) END"
+      else s"$num div nv"
+    var ranks = verts.crossJoin(nRow)
+      .select(col("pk"), expr(teleport(prScale)).as("r"))
     for (_ <- 1 to prIters) {
-      // ranks is |V|-sized — broadcast it so the 3M-row edge list is
-      // never re-shuffled per iteration. Valid while ranks fit in a
-      // broadcast (here |V| = parts, a dimension); past that, use the
-      // hash-partitioned spelling op176b below — co-partitioned
-      // shuffle joins, ranks never broadcast.
-      val contrib = esd.join(broadcast(ranks), esd("src") === ranks("pk"))
+      val contrib = esd.join(hint(ranks), esd("src") === ranks("pk"))
         .select(col("dst"), expr("r div deg").as("c"))
         .groupBy("dst").agg(sum("c").as("sc"))
-      ranks = verts.crossJoin(nVerts)
-        .join(broadcast(contrib), col("pk") === col("dst"), "left")
-        .select(col("pk"), col("nv"), coalesce(col("sc"), lit(0L)).as("sc"))
+      ranks = verts.crossJoin(nRow)
+        .join(hint(contrib), col("pk") === col("dst"), "left")
+        .select(col("pk"), col(n), coalesce(col("sc"), lit(0L)).as("sc"))
         .select(col("pk"),
-          expr(s"150000000 div nv + ($prDampNum * sc) div $prScale")
+          expr(s"${teleport(150000000L)} + ($prDampNum * sc) div $prScale")
             .as("r"))
     }
     ordered(
       ranks.join(broadcast(deg), col("pk") === col("src"))
-        .select(col("pk").as("p_partkey"), col("r").as("rank_ppb"),
-          col("deg")),
+        .select(col("pk").as("p_partkey"), col("r").as(out), col("deg")),
       "p_partkey")
   }
 
-  // --------------------------------------------------------------- op176b
-
-  /** op176b: PageRank, the BEYOND-BROADCAST spelling — identical
-    * iteration to op176 (same fixed-point integers, same oracle), but
-    * ranks are never broadcast: edges are hash-partitioned by src ONCE
-    * and each iteration's rank table meets them in a co-partitioned
-    * shuffle join (ranks are keyed by vertex throughout, so only the
-    * |V|-sized rank side moves per round — never the edge list, whose
-    * Exchange is identical every iteration and reused).
-    *
-    * 100 TB shape: THIS is the billion-vertex form — a rank table that
-    * no longer fits in a broadcast (|V| ≳ 10⁸) shuffles on the same key
-    * as the pre-partitioned edges, per-round traffic O(|V|) while the
-    * O(|E|) side stays put; op176's broadcast form stays optimal while
-    * ranks fit in memory (dimension-sized vertex sets). Both spellings
-    * sit under ONE oracle — the hash gate proves the partitioning
-    * strategy does not change a single emitted integer. */
-  val op176bPagerankPartitioned: Q = (s, d) => {
-    val edges = basketCliqueUnd(s, d)
-      .select(col("p1").as("src"), col("p2").as("dst"))
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    // pin the edge list's layout: hash by src, reused every iteration
-    val esd = edges.repartition(col("src")).join(deg, "src")
-    val verts = deg.select(col("src").as("pk"))
-    val nVerts = verts.agg(count(lit(1)).as("nv"))
-    var ranks = verts.crossJoin(nVerts)
-      .select(col("pk"), expr(s"$prScale div nv").as("r"))
-    for (_ <- 1 to prIters) {
-      // co-partitioned shuffle join: only the |V|-sized rank side moves
-      val contrib = esd.join(ranks, esd("src") === ranks("pk"))
-        .select(col("dst"), expr("r div deg").as("c"))
-        .groupBy("dst").agg(sum("c").as("sc"))
-      ranks = verts.crossJoin(nVerts)
-        .join(contrib, col("pk") === col("dst"), "left")
-        .select(col("pk"), col("nv"), coalesce(col("sc"), lit(0L)).as("sc"))
-        .select(col("pk"),
-          expr(s"150000000 div nv + ($prDampNum * sc) div $prScale")
-            .as("r"))
-    }
-    ordered(
-      ranks.join(broadcast(deg), col("pk") === col("src"))
-        .select(col("pk").as("p_partkey"), col("r").as("rank_ppb"),
-          col("deg")),
-      "p_partkey")
-  }
+  /** Join hint for a |V|-sized side: broadcast it (dimension-sized
+    * regime), or leave it to a co-partitioned shuffle join (coPart). */
+  private def broadcastUnless(coPart: Boolean): DataFrame => DataFrame =
+    if (coPart) identity else (df => broadcast(df))
 
   // ------------------------------------------------- shared graph base
 
-  /** The support-pruned co-purchase DIRECTED-pair list shared by op194 /
-    * op202 / op208 / op209 / op213: distinct (order, part) incidences,
-    * baskets capped at [[prBasketCap]] distinct parts, pairs kept only
-    * with support ≥ 2 co-occurring orders (the op170 A-priori prune —
-    * at 100 TB the prune bounds the edge list BEFORE any self-join).
-    * One row per undirected edge with p1 < p2. */
-  /** Canonical (p1 < p2) co-purchase pairs, one row per (order, pair) —
-    * the shared prefix of [[supportPrunedPairs]] and [[basketCliqueUnd]].
-    *
-    * Optimization r16 (guide §2.3/§2.4, measured): the original spelling
-    * — distinct → basket-size groupBy → semi-join → self-equi-join on
-    * l_orderkey → pair groupBy — planned FIVE exchanges and evaluated
-    * the scan+distinct+size-filter subtree twice (once per self-join
-    * side; Catalyst does not share it). Since the basket cap bounds a
-    * basket at [[prBasketCap]] parts, the whole pair generation fits
-    * map-side after ONE order-keyed aggregate: collect the basket as a
-    * sorted distinct array (collect_set ⊇ the old distinct; array_sort
-    * restores determinism), filter on its size (= the old distinct
-    * count), and explode the ≤ C(cap,2) = 21 ordered pairs with
-    * higher-order array functions (codegen'd, no UDF). Two exchanges
-    * total — (l_orderkey) then the consumer's (p1,p2) — and lineitem is
-    * scanned once. Every graph query downstream inherits the saving;
-    * results are bit-identical (hash-gated at sf0.001/0.01/0.1). */
   /** The size-capped distinct basket of each order as ONE sorted array
     * row — the shared aggregate [[basketPairs]] explodes into pairs and
     * op213's nbk explodes into (order, part) incidences.
@@ -359,6 +326,23 @@ object SeqGraphQueries {
       .agg(array_sort(collect_set(col("l_partkey"))).as("ps"))
       .where(size(col("ps")) <= prBasketCap)
 
+  /** Canonical (p1 < p2) co-purchase pairs, one row per (order, pair) —
+    * the shared prefix of [[supportPrunedPairs]] and [[basketCliqueUnd]].
+    *
+    * Optimization r16 (guide §2.3/§2.4, measured): the original spelling
+    * — distinct → basket-size groupBy → semi-join → self-equi-join on
+    * l_orderkey → pair groupBy — planned FIVE exchanges and evaluated
+    * the scan+distinct+size-filter subtree twice (once per self-join
+    * side; Catalyst does not share it). Since the basket cap bounds a
+    * basket at [[prBasketCap]] parts, the whole pair generation fits
+    * map-side after ONE order-keyed aggregate: collect the basket as a
+    * sorted distinct array (collect_set ⊇ the old distinct; array_sort
+    * restores determinism), filter on its size (= the old distinct
+    * count), and explode the ≤ C(cap,2) = 21 ordered pairs with
+    * higher-order array functions (codegen'd, no UDF). Two exchanges
+    * total — (l_orderkey) then the consumer's (p1,p2) — and lineitem is
+    * scanned once. Every graph query downstream inherits the saving;
+    * results are bit-identical (hash-gated at sf0.001/0.01/0.1). */
   private def basketPairs(s: SparkSession, d: String): DataFrame =
     basketArrays(s, d)
       // ps is sorted ascending + distinct, so pairing each element with
@@ -380,6 +364,12 @@ object SeqGraphQueries {
       .groupBy("p1", "p2").agg(count(lit(1)).as("supp"))
       .where(col("supp") >= 2)
 
+  /** The support-pruned co-purchase canonical pair list shared by op194 /
+    * op202 / op208 / op209 / op213: distinct (order, part) incidences,
+    * baskets capped at [[prBasketCap]] distinct parts, pairs kept only
+    * with support ≥ 2 co-occurring orders (the op170 A-priori prune —
+    * at 100 TB the prune bounds the edge list BEFORE any self-join).
+    * One row per undirected edge with p1 < p2. */
   private def supportPrunedPairs(s: SparkSession, d: String): DataFrame =
     supportPrunedPairsW(s, d).select("p1", "p2")
 
@@ -1137,8 +1127,7 @@ object SeqGraphQueries {
     // edge-side Exchange is reused, never re-planned
     val edges = (if (coPart) ebase.repartition(col("w")) else ebase)
       .localCheckpoint()
-    val attach: DataFrame => DataFrame =
-      if (coPart) identity else (df => broadcast(df))
+    val attach = broadcastUnless(coPart)
     val deg = edges.groupBy(col("v")).agg(big(count(lit(1))).as("k"))
       .localCheckpoint()
     val m2df = deg.agg(sum(col("k")).as("m2"))
@@ -1237,8 +1226,7 @@ object SeqGraphQueries {
   private def louvainTwoLevel(s: SparkSession, d: String,
       coPart: Boolean = false): DataFrame = {
     val (edges, deg, m2df, c1) = louvainPhase1(s, d, coPart)
-    val attach: DataFrame => DataFrame =
-      if (coPart) identity else (df => broadcast(df))
+    val attach = broadcastUnless(coPart)
     val ceAgg = edges
       .join(c1.select(col("v"), col("lab").as("cu")), "v")
       .join(c1.select(col("v").as("w"), col("lab").as("cv")), "w")
@@ -1508,8 +1496,15 @@ object SeqGraphQueries {
   private val hitsScale = 1000000000L
   private val hitsRounds = 2
 
-  /** op217: bipartite HITS — hubs (customers) and authorities (parts)
-    * over the distinct customer–part purchase incidence, iterated
+  /** op217: bipartite HITS authorities, broadcast score tables. */
+  val op217Hits: Q = (s, d) => hitsAuthorities(s, d, coPart = false)
+
+  /** op217b: op217 with co-partitioned joins, scores never broadcast. */
+  val op217bHitsPartitioned: Q = (s, d) =>
+    hitsAuthorities(s, d, coPart = true)
+
+  /** Bipartite HITS — hubs (customers) and authorities (parts) over
+    * the distinct customer–part purchase incidence, iterated
     * [[hitsRounds]] full rounds entirely in integers: each half-step
     * is authority = Σ neighbor hubs (or vice versa) followed by L1
     * renormalization spelled DIVISION-FIRST — x div greatest(total div
@@ -1521,73 +1516,28 @@ object SeqGraphQueries {
     * endorser's own breadth.
     *
     * 100 TB shape: each half-step is ONE equi-join of the edge list
-    * against the current (dimension-sized, broadcast) score table +
-    * one map-combinable sum — op176's per-iteration shape on a
-    * bipartite graph; totals are 1-row aggregates cross-joined in
-    * (plan-time scalars, no collect). Beyond broadcast range the
-    * op176b co-partitioned spelling applies unchanged. */
-  val op217Hits: Q = (s, d) => {
+    * against the current score table + one map-combinable sum —
+    * [[dampedRanks]]'s iteration on a bipartite graph; the 1-row
+    * renorm totals are broadcast at any scale. coPart=false (op217):
+    * the dimension-sized score tables ride broadcast hints. coPart=true
+    * (op217b), the billion-customer form: the edge list is pinned in
+    * TWO layouts once, by c for the hub push and by p for the authority
+    * push, and each half-step's score table meets its layout in a
+    * co-partitioned shuffle join, so only the |V|-sized side moves and
+    * both edge Exchanges are reused every round. One oracle for both. */
+  private def hitsAuthorities(s: SparkSession, d: String,
+      coPart: Boolean): DataFrame = {
+    val hint = broadcastUnless(coPart)
     val edges = Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_partkey"))
       .join(Tables.orders(s, d).select("o_orderkey", "o_custkey"),
         col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
       .distinct()
-    val hubs = edges.select("c").distinct()
-    val auths = edges.select("p").distinct()
-    def renorm(df: DataFrame, valCol: String): DataFrame = {
-      val tot = df.agg(sum(valCol).as("__tot"))
-      df.crossJoin(broadcast(tot))
-        .select(df.columns.filter(_ != valCol).map(col) :+
-          expr(s"$valCol div greatest(__tot div $hitsScale, 1)")
-            .as(valCol): _*)
-    }
-    var h = hubs.select(col("c"), lit(hitsScale).as("h"))
-    var a: DataFrame = null
-    for (_ <- 1 to hitsRounds) {
-      a = renorm(
-        edges.join(broadcast(h), "c")
-          .groupBy("p").agg(sum("h").as("a")), "a")
-      h = renorm(
-        edges.join(broadcast(a), "p")
-          .groupBy("c").agg(sum("a").as("h")), "h")
-    }
-    val deg = edges.groupBy("p").agg(big(count(lit(1))).as("deg"))
-    ordered(
-      a.join(deg, "p")
-        .select(col("p").as("p_partkey"), col("a").as("auth_ppb"),
-          col("deg")),
-      "p_partkey")
-  }
-
-  // --------------------------------------------------------------- op217b
-
-  /** op217b: HITS, the BEYOND-BROADCAST spelling — identical integer
-    * trajectory to op217 (same oracle proves it bit-for-bit), but the
-    * per-half-step score tables are NEVER broadcast: the edge list is
-    * pinned in TWO layouts once — hash-partitioned by c (for the
-    * hub-push half-step) and by p (for the authority-push) — and each
-    * half-step's score table meets its layout in a co-partitioned
-    * shuffle join, so only the |V|-sized score side moves per round
-    * while the O(|E|) side's two Exchanges are planned once and reused
-    * every iteration (ReuseExchange; HITS alternates join keys, hence
-    * two pinned layouts where op176b needs one).
-    *
-    * 100 TB shape: this is the billion-customer form — a hub table
-    * that no longer fits in a broadcast (|C| ≳ 10⁸) shuffles on the
-    * same key as the pre-partitioned edges. The 1-row renorm total
-    * stays a broadcast at any scale. op217's broadcast form remains
-    * optimal while scores are dimension-sized. */
-  val op217bHitsPartitioned: Q = (s, d) => {
-    val edges = Tables.lineitem(s, d)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .join(Tables.orders(s, d).select("o_orderkey", "o_custkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-      .distinct()
-    // the two pinned edge layouts, each reused by every iteration
-    val edgesByC = edges.repartition(col("c"))
-    val edgesByP = edges.repartition(col("p"))
+    // coPart: the two pinned edge layouts, each reused by every iteration
+    val (edgesByC, edgesByP) =
+      if (coPart) (edges.repartition(col("c")), edges.repartition(col("p")))
+      else (edges, edges)
     val hubs = edges.select("c").distinct()
     def renorm(df: DataFrame, valCol: String): DataFrame = {
       val tot = df.agg(sum(valCol).as("__tot"))
@@ -1600,10 +1550,10 @@ object SeqGraphQueries {
     var a: DataFrame = null
     for (_ <- 1 to hitsRounds) {
       a = renorm(
-        edgesByC.join(h, "c")
+        edgesByC.join(hint(h), "c")
           .groupBy("p").agg(sum("h").as("a")), "a")
       h = renorm(
-        edgesByP.join(a, "p")
+        edgesByP.join(hint(a), "p")
           .groupBy("c").agg(sum("a").as("h")), "h")
     }
     val deg = edges.groupBy("p").agg(big(count(lit(1))).as("deg"))
@@ -1664,109 +1614,6 @@ object SeqGraphQueries {
         .localCheckpoint()
     }
     ordered(dist, "v")
-  }
-
-  // ---------------------------------------------------------------- op226
-
-  /** op226: random walk with restart (personalized PageRank) — op176's
-    * damped fixed-point iteration with the teleport mass restricted to
-    * the op209 SOURCE SET (v ≡ 0 mod 97): rank flows outward from the
-    * seeds and restarts there, so the stationary ppb measures
-    * relevance TO THE SEEDS — the "related items for this seed set"
-    * primitive (recommendation expansion, taint/exposure propagation)
-    * that global PageRank structurally cannot give. Same ppb integer
-    * trajectory, same 5 unrolled iterations, same broadcast-rank /
-    * never-reshuffle-edges shape; vertices the walk never reaches
-    * emit 0 (in-band, not dropped).
-    *
-    * 100 TB shape: identical to op176 per iteration; the only change
-    * is the base term's support. Beyond broadcast range the op176b
-    * co-partitioned spelling applies verbatim. */
-  val op226RandomWalkRestart: Q = (s, d) => {
-    // r17: ride the shared one-aggregate basket-clique build (op176's
-    // substrate — identical distinct-pair edge set, hash-gated); the
-    // old inline 5-exchange self-join spelling re-expanded under every
-    // iteration of the unrolled loop (13k-line plans, r16 verdict).
-    val edges = basketCliqueUnd(s, d)
-      .select(col("p1").as("src"), col("p2").as("dst"))
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val esd = edges.join(broadcast(deg), "src")
-    val verts = deg.select(col("src").as("pk"))
-    val nSrc = verts.where(col("pk") % 97 === 0)
-      .agg(count(lit(1)).as("ns"))
-    var ranks = verts.crossJoin(broadcast(nSrc))
-      .select(col("pk"),
-        expr(s"CASE WHEN pk % 97 = 0 THEN $prScale div ns " +
-          "ELSE CAST(0 AS BIGINT) END").as("r"))
-    for (_ <- 1 to prIters) {
-      val contrib = esd.join(broadcast(ranks), esd("src") === ranks("pk"))
-        .select(col("dst"), expr("r div deg").as("c"))
-        .groupBy("dst").agg(sum("c").as("sc"))
-      ranks = verts.crossJoin(broadcast(nSrc))
-        .join(broadcast(contrib), col("pk") === col("dst"), "left")
-        .select(col("pk"), col("ns"),
-          coalesce(col("sc"), lit(0L)).as("sc"))
-        .select(col("pk"),
-          expr(s"CASE WHEN pk % 97 = 0 THEN 150000000 div ns " +
-            s"ELSE CAST(0 AS BIGINT) END + ($prDampNum * sc) div $prScale")
-            .as("r"))
-    }
-    ordered(
-      ranks.join(broadcast(deg), col("pk") === col("src"))
-        .select(col("pk").as("p_partkey"), col("r").as("rwr_ppb"),
-          col("deg")),
-      "p_partkey")
-  }
-
-  // --------------------------------------------------------------- op226b
-
-  /** op226b: random walk with restart, the BEYOND-BROADCAST spelling —
-    * op176b's co-partitioned iteration applied to op226's seeded base
-    * term, under op226's UNCHANGED oracle: edges are hash-partitioned
-    * by src ONCE, each round's rank table meets them in a
-    * co-partitioned shuffle join, and the contribution left-join is a
-    * plain vertex-keyed shuffle join — ranks and contributions are
-    * never broadcast. The 1-row seed count (nSrc) stays a broadcast
-    * at any scale.
-    *
-    * 100 TB shape: per-round traffic O(|V|) (the rank side) while the
-    * O(|E|) side's Exchange is planned once and reused; this is the
-    * spelling for billion-vertex personalization where the rank table
-    * outgrows broadcast memory. op226 stays the dimension-sized fast
-    * path. */
-  val op226bRwrPartitioned: Q = (s, d) => {
-    // r17: same shared basket-clique substitution as op226
-    val edges = basketCliqueUnd(s, d)
-      .select(col("p1").as("src"), col("p2").as("dst"))
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    // pin the edge layout: hash by src, reused every iteration
-    val esd = edges.repartition(col("src")).join(deg, "src")
-    val verts = deg.select(col("src").as("pk"))
-    val nSrc = verts.where(col("pk") % 97 === 0)
-      .agg(count(lit(1)).as("ns"))
-    var ranks = verts.crossJoin(broadcast(nSrc))
-      .select(col("pk"),
-        expr(s"CASE WHEN pk % 97 = 0 THEN $prScale div ns " +
-          "ELSE CAST(0 AS BIGINT) END").as("r"))
-    for (_ <- 1 to prIters) {
-      // co-partitioned shuffle join: only the |V|-sized rank side moves
-      val contrib = esd.join(ranks, esd("src") === ranks("pk"))
-        .select(col("dst"), expr("r div deg").as("c"))
-        .groupBy("dst").agg(sum("c").as("sc"))
-      ranks = verts.crossJoin(broadcast(nSrc))
-        .join(contrib, col("pk") === col("dst"), "left")
-        .select(col("pk"), col("ns"),
-          coalesce(col("sc"), lit(0L)).as("sc"))
-        .select(col("pk"),
-          expr(s"CASE WHEN pk % 97 = 0 THEN 150000000 div ns " +
-            s"ELSE CAST(0 AS BIGINT) END + ($prDampNum * sc) div $prScale")
-            .as("r"))
-    }
-    ordered(
-      ranks.join(broadcast(deg), col("pk") === col("src"))
-        .select(col("pk").as("p_partkey"), col("r").as("rwr_ppb"),
-          col("deg")),
-      "p_partkey")
   }
 
   // ---------------------------------------------------------------- op221

@@ -53,15 +53,6 @@ object KafkaIO {
     readStreamBuilder(spark, bootstrap, topic, startingOffsets,
       maxOffsetsPerTrigger, minPartitions).load()
 
-  /** OP-01 batch twin: bounded read of a whole topic (tests / backfill). */
-  def readBatch(spark: SparkSession, bootstrap: String, topic: String): DataFrame =
-    spark.read.format("kafka")
-      .option("kafka.bootstrap.servers", bootstrap)
-      .option("subscribe", topic)
-      .option("startingOffsets", "earliest")
-      .option("endingOffsets", "latest")
-      .load()
-
   /** OP-03: console sink, append mode. */
   def toConsole(df: DataFrame): DataStreamWriter[Row] =
     df.writeStream.outputMode("append").format("console")

@@ -199,24 +199,37 @@ class SeqGraphSpec extends SparkSpec {
     assert(tri > 0, "no triangles exercised in the fixture graph")
   }
 
-  test("op176b (hash-partitioned ranks) emits exactly op176's integers") {
-    // the partitioning strategy — broadcast ranks vs co-partitioned
-    // shuffle join — must not change a single emitted integer; both
-    // orderings are by p_partkey so the sequences compare directly
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r =>
-        (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val base = rows(SeqGraphQueries.op176Pagerank(spark, sfDir))
-    val part = rows(SeqGraphQueries.op176bPagerankPartitioned(spark, sfDir))
-    assert(base.nonEmpty)
-    assert(part == base)
-    // and the spelling keeps its promise: no broadcast of the rank
-    // table inside the iteration (deg/final attach broadcasts are fine
-    // — they're outside the loop's rank→contrib join)
-    val plan = SeqGraphQueries.op176bPagerankPartitioned(spark, sfDir)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("Exchange hashpartitioning"),
-      "partitioned spelling lost its hash exchanges")
+  // Every broadcast / co-partitioned twin sits under its base query's
+  // oracle: the join strategy must not change a single emitted integer.
+  // Both sides order by the same key, so the row sequences compare
+  // directly. (label, base key, twin key, plan fragment the twin keeps)
+  Seq(
+    ("op176b (hash-partitioned ranks)", "op176_pagerank",
+      "op176b_pagerank_partitioned", Some("Exchange hashpartitioning")),
+    ("op194b (broadcast degree attach)", "op194_triangles",
+      "op194b_triangles_broadcast", None),
+    ("op215b (co-partitioned degree attach)", "op215_assortativity",
+      "op215b_assortativity_partitioned", None),
+    ("op217b (co-partitioned scores)", "op217_hits",
+      "op217b_hits_partitioned", None),
+    ("op226b (co-partitioned ranks)", "op226_rwr",
+      "op226b_rwr_partitioned", None),
+    ("op300b (co-partitioned sweeps)", "op300_louvain",
+      "op300b_louvain_partitioned", None),
+    ("op301b (co-partitioned sweeps)", "op301_louvain_two_level",
+      "op301b_louvain_two_level_partitioned", None)
+  ).foreach { case (label, base, twin, planHas) =>
+    test(s"$label emits exactly ${base.takeWhile(_ != '_')}'s integers") {
+      val want = SeqGraphQueries.defs(base)(spark, sfDir).collect().toSeq
+      val twinDf = SeqGraphQueries.defs(twin)(spark, sfDir)
+      assert(want.nonEmpty)
+      assert(twinDf.collect().toSeq == want)
+      // the partitioned spelling keeps its promise: the rank side meets
+      // the pinned edge layout through hash exchanges
+      planHas.foreach(frag =>
+        assert(twinDf.queryExecution.executedPlan.toString.contains(frag),
+          s"$twin lost its $frag"))
+    }
   }
 
   test("op202: k-core peel matches a driver-side replay and reaches fixpoint") {
