@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{Dedup, Similarity}
 import graft.sources.Tables
+import graft.streaming.Drain
 import Det.{big, ordered}
 
 /** Deduplication / decontamination pack (split out of TrainQueries in
@@ -238,7 +239,7 @@ object DedupQueries {
     * mode (dedup emits rows, not a running aggregate). */
   private def drainDocStream(s: SparkSession, d: String, tag: String,
       xform: DataFrame => DataFrame): DataFrame =
-    TrainQueries.drainStream(s, d, tag, "documents", "append", "8")(xform)
+    Drain.files(s, d, tag, "documents", "append", "8")(xform)
 
   /** op134: the ONLINE decontamination gate — op82/op102's streaming
     * leg. The benchmark slice (doc_id % 50 == 0, the op82 split)

@@ -21,10 +21,6 @@ import org.apache.spark.sql.{Column, DataFrame}
   *    TIMESTAMP columns.
   */
 object Det {
-  /** Exact 4-decimal fixed-point — INTERNAL arithmetic only, never an
-    * output column (see bp4). */
-  def dec4(c: Column): Column = c.cast("decimal(18,4)")
-
   /** Basis-point output contract: quantize to 4 decimals (HALF_UP, the
     * same boundary the previous DECIMAL(18,4) contract used) and emit the
     * ×10000 integer. Width 27: large enough that no value a BIGINT bp can

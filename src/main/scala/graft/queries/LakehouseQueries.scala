@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{Layout, Similarity}
 import graft.sources.Tables
+import graft.streaming.Drain
 import Det.{big, ordered}
 
 /** Lakehouse / CDC / search pack (split out of TrainQueries in r11 —
@@ -60,7 +61,7 @@ object LakehouseQueries {
   val op108StreamChangelog: Q = (s, d) => {
     import s.implicits._
     import graft.streaming.Changelog
-    val updates = TrainQueries.drainStream(s, d, "op108", "events", "update", "8") { st =>
+    val updates = Drain.files(s, d, "op108", "events", "update", "8") { st =>
       // raw stream schema: ts is whatever the fixture carries (nanos-long
       // or micros timestamp) — tsUsExpr adapts (see Tables.eventsColumns)
       Changelog.latestState(
@@ -95,7 +96,7 @@ object LakehouseQueries {
     import s.implicits._
     import graft.streaming.{Changelog, StateStores}
     val updates = StateStores.withRocksDb(s) {
-      TrainQueries.drainStream(s, d, "op122", "events", "update", "8") { st =>
+      Drain.files(s, d, "op122", "events", "update", "8") { st =>
         Changelog.latestStateTws(
           st.select(col("user_id"), col("event_id"),
             Tables.tsUsExpr(st).as("ts_us"), col("event_type"),
@@ -128,7 +129,7 @@ object LakehouseQueries {
     import s.implicits._
     import graft.streaming.{ScdStream, StateStores}
     val closed = StateStores.withRocksDb(s) {
-      TrainQueries.drainStream(s, d, "op131", "events", "append", "8") { st =>
+      Drain.files(s, d, "op131", "events", "append", "8") { st =>
         ScdStream.closedIntervals(
           st.select(col("user_id"), col("event_type"),
             Tables.tsUsExpr(st).as("t_us"), col("event_id"),

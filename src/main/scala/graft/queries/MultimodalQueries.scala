@@ -191,8 +191,8 @@ object MultimodalQueries {
     import s.implicits._
     val stateDir = java.nio.file.Files
       .createTempDirectory("graft_audiodedup_state").toString
-    val recs = Multimodal.synthesizeFpAudio(s, d).collect()
-      .map(r => (r.doc_id, r.payload)).toSeq
+    val recs = Multimodal.synthesizeFpAudio(s, d).toDF()
+      .select("doc_id", "payload")
     ordered(graft.streaming.FpDedupStream.maintainedFlags(s, recs,
         df => Multimodal.audioFingerprint(
           df.as[Multimodal.AudioRecord]).toDF(),
@@ -210,8 +210,8 @@ object MultimodalQueries {
     import s.implicits._
     val stateDir = java.nio.file.Files
       .createTempDirectory("graft_videodedup_state").toString
-    val recs = Multimodal.synthesizeNdVideos(s, d).collect()
-      .map(r => (r.doc_id, r.payload)).toSeq
+    val recs = Multimodal.synthesizeNdVideos(s, d).toDF()
+      .select("doc_id", "payload")
     ordered(graft.streaming.FpDedupStream.maintainedFlags(s, recs,
         df => Multimodal.videoFingerprint(
           df.as[Multimodal.VideoRecord]).toDF(),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
+import graft.streaming.Drain
 import Det.{big, ordered}
 
 /** Sequence, interval, graph, and record-linkage pack — the classic
@@ -990,7 +991,7 @@ object SeqGraphQueries {
       dbscanModelWrite(s, d, _))
     val core = s.read.parquet(s"$dir/core_pts")
     val eps2 = dbscanEps * dbscanEps
-    val drained = TrainQueries.drainStream(s, d, "op299", "events",
+    val drained = Drain.files(s, d, "op299", "events",
       "complete", "8") { st =>
       val q = st.filter(col("event_type") === "view")
         .select(col("event_id").as("pid"),
@@ -1305,7 +1306,7 @@ object SeqGraphQueries {
     }
     val pc = s.read.parquet(s"$dir/part_comm")
     ordered(
-      TrainQueries.drainStream(s, d, "op302", "lineitem",
+      Drain.files(s, d, "op302", "lineitem",
         "complete", "8") { st =>
         st.select(col("l_orderkey"), col("l_partkey").as("v"))
           .join(pc, Seq("v"))

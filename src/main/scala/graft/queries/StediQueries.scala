@@ -7,6 +7,7 @@ import graft.model.Schemas
 import graft.ops.Decode
 import graft.pipeline.{Stedi, StediFixtures}
 import graft.sources.Tables
+import graft.streaming.Drain
 import Det.{big, ordered}
 
 /** Oracle-checked batch twins of the reference's decode surface
@@ -389,7 +390,7 @@ object StediQueries {
           .localCheckpoint()
       } finally java.nio.file.Files.deleteIfExists(path)
     val updates = StateStores.withRocksDb(s) {
-      TrainQueries.drainStream(s, d, "op287", "events", "update", "8") { st =>
+      Drain.files(s, d, "op287", "events", "update", "8") { st =>
         val changes = st
           .select(StediFixtures.emailFor(col("user_id")).as("email"),
             col("event_id"), Tables.tsUsExpr(st).as("ts_us"),

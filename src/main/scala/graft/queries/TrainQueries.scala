@@ -167,62 +167,6 @@ object TrainQueries {
       "doc_id", "pack_id")
   }
 
-  /** Shared drain for the streaming ANN probe queries: file-source
-    * stream of the fixture query vectors (vec_id < 8) → `probe` →
-    * memory sink, Trigger.AvailableNow — one replay carries every query
-    * in a single trigger, so the emitted top-k equals the batch probe
-    * exactly. The file streaming source lists a directory, so the
-    * single fixture file is exposed through a temp dir of symlinks
-    * (the op51 recipe). Bench note: each invocation constructs and
-    * starts a FRESH stream, so the measured time is mostly query
-    * start + plan codegen — a real serving deployment pays that once
-    * per stream, and the per-batch marginal cost is the pruned
-    * stream-static join. */
-  /** Shared drain for the streaming queries: file-source stream of ONE
-    * fixture table (the file source lists a directory, so the fixture
-    * file is exposed through a temp dir of symlinks — the op51 recipe)
-    * → `pipe` → memory sink, Trigger.AvailableNow. Stateful shuffle
-    * width is scoped to the stream (same rationale as
-    * WindowOps.streamedTumbling); symlink cleanup runs in finally so a
-    * failed stream doesn't leak the temp dir; the sink's rows are
-    * lifted out and the temp view dropped, so repeated invocations
-    * (Bench reps) don't pin result sets in the session. */
-  private[queries] def drainStream(s: SparkSession, d: String, tag: String,
-      table: String, mode: String, parts: String)(
-      pipe: DataFrame => DataFrame): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    // events goes through the adaptive loader for its SCHEMA so a nanos
-    // fixture in a session lacking the legacy flag fails with the
-    // helpful Tables.eventsRaw diagnostic instead of the raw
-    // PARQUET_TYPE_ILLEGAL error (the streaming read below then types
-    // ts identically to the batch path)
-    val schema =
-      if (table == "events") Tables.eventsRaw(s, d).schema
-      else s.read.parquet(s"$d/$table.parquet").schema
-    val streamDir = java.nio.file.Files.createTempDirectory(s"graft_${tag}_")
-    val link = streamDir.resolve(s"$table.parquet")
-    val name = s"graft_${tag}_${System.nanoTime()}"
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      java.nio.file.Files.createSymbolicLink(link,
-        java.nio.file.Paths.get(s"$d/$table.parquet"))
-      val src = s.readStream.schema(schema).parquet(streamDir.toString)
-      s.conf.set("spark.sql.shuffle.partitions", parts)
-      val q = pipe(src).writeStream.outputMode(mode)
-        .format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      java.nio.file.Files.deleteIfExists(link)
-      java.nio.file.Files.deleteIfExists(streamDir): Unit
-    }
-    val out = s.table(name)
-    val rows = out.collect()
-    s.catalog.dropTempView(name)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-  }
-
   /** op239: DSIR-style importance scoring — every document scored by
     * the log-likelihood ratio of a TARGET unigram model (the src0
     * slice) against the SOURCE model (the rest), add-one smoothed:
@@ -1184,6 +1128,5 @@ object TrainQueries {
         |FROM tok t JOIN w ON t.token = w.token
         |GROUP BY t.doc_id ORDER BY doc_id""".stripMargin,
   )
-
 
 }

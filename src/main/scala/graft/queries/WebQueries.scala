@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{TopKAgg, Urls}
 import graft.sources.Tables
+import graft.streaming.Drain
 import Det.{big, ordered}
 
 /** Web-curation pack — the crawl-side stage of a pretraining pipeline
@@ -190,7 +191,7 @@ object WebQueries {
   val op309StreamDomainQuota: Q = (s, d) => {
     import graft.streaming.{DomainQuota, StateStores}
     val admitted = StateStores.withRocksDb(s) {
-      TrainQueries.drainStream(s, d, "op309", "documents", "append", "8") {
+      Drain.files(s, d, "op309", "documents", "append", "8") {
         st =>
           import st.sparkSession.implicits._
           DomainQuota.admitted(
@@ -295,7 +296,7 @@ object WebQueries {
   val op315StreamUrlAdmission: Q = (s, d) => {
     import graft.streaming.{DomainQuota, StateStores}
     val admitted = StateStores.withRocksDb(s) {
-      TrainQueries.drainStream(s, d, "op315", "documents", "append", "8") {
+      Drain.files(s, d, "op315", "documents", "append", "8") {
         st =>
           import st.sparkSession.implicits._
           DomainQuota.urlAdmitted(
@@ -340,7 +341,7 @@ object WebQueries {
         s"example$k.com" -> Seq("/p/" -> false, s"/p/$k" -> true)
       }.toMap
     val admitted = StateStores.withRocksDb(s) {
-      TrainQueries.drainStream(s, d, "op316", "documents", "append", "8") {
+      Drain.files(s, d, "op316", "documents", "append", "8") {
         st =>
           AdmissionGate.robotsGatedAdmission(
             st.select(col("doc_id"),
@@ -1187,7 +1188,7 @@ object WebQueries {
     import graft.functions.Robots
     import graft.streaming.{Politeness, StateStores}
     val admitted = StateStores.withRocksDb(s) {
-      TrainQueries.drainStream(s, d, "op324", "documents", "append", "8") {
+      Drain.files(s, d, "op324", "documents", "append", "8") {
         st =>
           import st.sparkSession.implicits._
           Politeness.admitted(

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Streaming heavy-changer state maintenance (op260): the per-user
@@ -27,45 +26,15 @@ object ChangerStream {
     * `stateDir`, then return the merged (user_id, c1, c2) table. */
   def maintainedHalfCounts(spark: SparkSession, dir: String,
       stateDir: String, splitDay: Long = 15L): DataFrame = {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val evDf = graft.sources.Tables.events(spark, dir)
-    val rows = evDf
+    val rows = graft.sources.Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"),
         datediff(to_date(col("ts")),
           lit("2024-01-01").cast("date")).cast("long").as("day"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val in = MemoryStream[(Long, Long, Long)]
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = in.toDF().toDF("event_id", "user_id", "day")
-        .writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.groupBy("user_id")
-            .agg(sum(when(col("day") < splitDay, 1L).otherwise(0L))
-                .as("c1"),
-              sum(when(col("day") >= splitDay, 1L).otherwise(0L))
-                .as("c2"))
-            .coalesce(1).write.mode("append")
-            .parquet(s"$stateDir/partials")
-          (): Unit
-        }
-        .start()
-      (0 until 4).foreach { k =>
-        in.addData(rows.filter(_._1 % 4 == k))
-        q.processAllAvailable()
-      }
-      q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    val merged = spark.read.parquet(s"$stateDir/partials")
-      .groupBy("user_id")
-      .agg(sum("c1").as("c1"), sum("c2").as("c2"))
-      .localCheckpoint()
-    new scala.reflect.io.Directory(new java.io.File(stateDir))
-      .deleteRecursively()
-    merged
+    Drain.partials(spark, rows, "event_id", stateDir)(
+      _.groupBy("user_id")
+        .agg(sum(when(col("day") < splitDay, 1L).otherwise(0L)).as("c1"),
+          sum(when(col("day") >= splitDay, 1L).otherwise(0L)).as("c2")))(
+      _.groupBy("user_id").agg(sum("c1").as("c1"), sum("c2").as("c2")))
   }
 
   /** op262's state: the DISTINCT user set kept online — per batch one
@@ -74,34 +43,9 @@ object ChangerStream {
     * Returns the merged one-column (user_id) frame. */
   def maintainedDistinctUsers(spark: SparkSession, dir: String,
       stateDir: String): DataFrame = {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
     val rows = graft.sources.Tables.events(spark, dir)
-      .select(col("event_id"), col("user_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val in = MemoryStream[(Long, Long)]
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = in.toDF().toDF("event_id", "user_id")
-        .writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.select("user_id").distinct()
-            .coalesce(1).write.mode("append")
-            .parquet(s"$stateDir/partials")
-          (): Unit
-        }
-        .start()
-      (0 until 4).foreach { k =>
-        in.addData(rows.filter(_._1 % 4 == k))
-        q.processAllAvailable()
-      }
-      q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    val merged = spark.read.parquet(s"$stateDir/partials")
-      .distinct().localCheckpoint()
-    new scala.reflect.io.Directory(new java.io.File(stateDir))
-      .deleteRecursively()
-    merged
+      .select(col("event_id"), col("user_id"))
+    Drain.partials(spark, rows, "event_id", stateDir)(
+      _.select("user_id").distinct())(_.distinct())
   }
 }

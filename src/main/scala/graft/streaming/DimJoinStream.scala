@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Streaming fact–dimension join-view maintenance (op223): the
@@ -30,45 +29,17 @@ object DimJoinStream {
     * (c_nationkey, n_orders, sum_cents) view. */
   def maintainedJoinView(spark: SparkSession, dir: String,
       stateDir: String): DataFrame = {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
     val cust = spark.read.parquet(s"$dir/customer.parquet")
       .select(col("c_custkey"), col("c_nationkey"))
     val rows = spark.read.parquet(s"$dir/orders.parquet")
       .select(col("o_orderkey"), col("o_custkey"),
         round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .toSeq
-    val in = MemoryStream[(Long, Long, Long)]
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = in.toDF().toDF("o_orderkey", "o_custkey", "cents")
-        .writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.join(broadcast(cust),
-              batch("o_custkey") === cust("c_custkey"))
-            .groupBy("c_nationkey")
-            .agg(count(lit(1)).as("n_orders"),
-              sum("cents").as("sum_cents"))
-            .coalesce(1).write.mode("append")
-            .parquet(s"$stateDir/partials")
-          (): Unit
-        }
-        .start()
-      (0 until 4).foreach { k =>
-        in.addData(rows.filter(_._1 % 4 == k))
-        q.processAllAvailable()
-      }
-      q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    val merged = spark.read.parquet(s"$stateDir/partials")
-      .groupBy("c_nationkey")
-      .agg(sum("n_orders").as("n_orders"),
-        sum("sum_cents").as("sum_cents"))
-      .localCheckpoint()
-    new scala.reflect.io.Directory(new java.io.File(stateDir))
-      .deleteRecursively()
-    merged
+    Drain.partials(spark, rows, "o_orderkey", stateDir)(batch =>
+      batch.join(broadcast(cust), batch("o_custkey") === cust("c_custkey"))
+        .groupBy("c_nationkey")
+        .agg(count(lit(1)).as("n_orders"), sum("cents").as("sum_cents")))(
+      _.groupBy("c_nationkey")
+        .agg(sum("n_orders").as("n_orders"),
+          sum("sum_cents").as("sum_cents")))
   }
 }

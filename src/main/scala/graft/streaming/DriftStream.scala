@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Streaming drift-gate state maintenance (op193): the arriving slice's
@@ -28,41 +27,12 @@ object DriftStream {
     * then return the merged (v, c1) counts. */
   def maintainedLengthCounts(spark: SparkSession, dir: String,
       stateDir: String): DataFrame = {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .where(col("source") === "src0")
-      .select("doc_id", "n_chars").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val in = MemoryStream[(Long, Long)]
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = in.toDF().toDF("doc_id", "n_chars")
-        .writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.groupBy(col("n_chars").as("v"))
-            .agg(count(lit(1)).as("c"))
-            .coalesce(1).write.mode("append")
-            .parquet(s"$stateDir/partials")
-          (): Unit
-        }
-        .start()
-      // stop() in finally: a failing addData/processAllAvailable must
-      // not leak a started query for the rest of the session
-      try (0 until 4).foreach { k =>
-        in.addData(docs.filter(_._1 % 4 == k))
-        q.processAllAvailable()
-      } finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    // Merged histogram is O(distinct lengths) rows — materialize it
-    // (localCheckpoint severs the lineage) and reclaim the state dir.
-    val merged = spark.read.parquet(s"$stateDir/partials")
-      .groupBy("v").agg(sum("c").as("c1"))
-      .localCheckpoint()
-    new scala.reflect.io.Directory(new java.io.File(stateDir))
-      .deleteRecursively()
-    merged
+      .select("doc_id", "n_chars")
+    Drain.partials(spark, docs, "doc_id", stateDir)(
+      _.groupBy(col("n_chars").as("v")).agg(count(lit(1)).as("c")))(
+      _.groupBy("v").agg(sum("c").as("c1")))
   }
 
   /** op280: the op279 percentile grid — (lang, length) counts over the
@@ -74,37 +44,11 @@ object DriftStream {
     * folded as they land, never a corpus re-scan). */
   def maintainedLangLengthCounts(spark: SparkSession, dir: String,
       stateDir: String): DataFrame = {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select("doc_id", "lang", "n_chars").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
-    val in = MemoryStream[(Long, String, Long)]
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = in.toDF().toDF("doc_id", "lang", "n_chars")
-        .writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.groupBy(col("lang"), col("n_chars").as("v"))
-            .agg(count(lit(1)).as("c"))
-            .coalesce(1).write.mode("append")
-            .parquet(s"$stateDir/partials")
-          (): Unit
-        }
-        .start()
-      // stop() in finally: a failing addData/processAllAvailable must
-      // not leak a started query for the rest of the session
-      try (0 until 4).foreach { k =>
-        in.addData(docs.filter(_._1 % 4 == k))
-        q.processAllAvailable()
-      } finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    val merged = spark.read.parquet(s"$stateDir/partials")
-      .groupBy("lang", "v").agg(sum("c").as("c"))
-      .localCheckpoint()
-    new scala.reflect.io.Directory(new java.io.File(stateDir))
-      .deleteRecursively()
-    merged
+      .select("doc_id", "lang", "n_chars")
+    Drain.partials(spark, docs, "doc_id", stateDir)(
+      _.groupBy(col("lang"), col("n_chars").as("v"))
+        .agg(count(lit(1)).as("c")))(
+      _.groupBy("lang", "v").agg(sum("c").as("c")))
   }
 }

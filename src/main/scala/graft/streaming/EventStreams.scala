@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming event-hygiene legs over the events fixture: watermark-bounded
   * key dedup (op163) and the stream-stream LEFT OUTER time-bounded join
@@ -23,40 +22,11 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object EventStreams {
 
-  /** Run `build(stream)` over a file-source stream of events.parquet and
-    * drain to a memory sink in APPEND mode; returns the sink table.
-    * Stateful shuffle width is scoped to the stream (the WindowOps
-    * rationale: per-state-store overhead dominates at fixture group
-    * counts). */
-  private def drainEvents(spark: SparkSession, dir: String, tag: String)(
-      build: DataFrame => DataFrame): DataFrame = {
-    val schema = graft.sources.Tables.eventsRaw(spark, dir).schema
-    val streamDir = java.nio.file.Files.createTempDirectory(s"graft_${tag}_")
-    val link = streamDir.resolve("events.parquet")
-    val name = s"graft_${tag}_${System.nanoTime()}"
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      java.nio.file.Files.createSymbolicLink(link,
-        java.nio.file.Paths.get(s"$dir/events.parquet"))
-      val raw = spark.readStream.schema(schema).parquet(streamDir.toString)
-      // watermark needs TIMESTAMP (ltz); session pinned UTC throughout
-      val ev = raw.withColumn("ts",
-        timestamp_micros(graft.sources.Tables.tsUsExpr(raw)))
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = build(ev).writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      java.nio.file.Files.deleteIfExists(link)
-      java.nio.file.Files.deleteIfExists(streamDir): Unit
-    }
-    val out = spark.table(name)
-    val rows = out.collect()
-    spark.catalog.dropTempView(name)
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-  }
+  /** The events stream with `ts` typed TIMESTAMP (ltz), not NTZ, which
+    * watermarks need; with the session pinned to UTC the formatted
+    * output is identical to the NTZ batch twin. */
+  private[streaming] def withEventTs(raw: DataFrame): DataFrame =
+    raw.withColumn("ts", timestamp_micros(graft.sources.Tables.tsUsExpr(raw)))
 
   /** op163: watermarked streaming dedup — at most one event per
     * (user, type, day) survives, the throttling/idempotence shape.
@@ -66,8 +36,8 @@ object EventStreams {
     * reaches the result — the property the oracle needs). State: one
     * entry per in-horizon key, evicted as the watermark passes. */
   def dedupWithinWatermark(spark: SparkSession, dir: String): DataFrame = {
-    val deduped = drainEvents(spark, dir, "op163") { ev =>
-      ev.select(col("user_id"), col("event_type"),
+    val deduped = Drain.files(spark, dir, "op163", "events", "append", "4") { raw =>
+      withEventTs(raw).select(col("user_id"), col("event_type"),
           date_trunc("day", col("ts")).as("day"), col("ts"))
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("user_id", "event_type", "day")
@@ -86,7 +56,8 @@ object EventStreams {
     * the input — the oracle replays it with the same horizon predicate.
     * State: per-user in-horizon rows on both sides, watermark-evicted. */
   def leftOuterBoundedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val joined = drainEvents(spark, dir, "op164") { ev =>
+    val joined = Drain.files(spark, dir, "op164", "events", "append", "4") { raw =>
+      val ev = withEventTs(raw)
       val views = ev.where(col("event_type") === "view")
         .select(col("event_id").as("view_id"),
           col("user_id"), col("ts").as("view_ts"))
@@ -122,7 +93,8 @@ object EventStreams {
     * unique pair across all three row classes (the Det.ordered
     * contract). */
   def fullOuterBoundedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val joined = drainEvents(spark, dir, "op275") { ev =>
+    val joined = Drain.files(spark, dir, "op275", "events", "append", "4") { raw =>
+      val ev = withEventTs(raw)
       val views = ev.where(col("event_type") === "view")
         .select(col("event_id").as("view_id"),
           col("user_id"), col("ts").as("view_ts"))
@@ -156,10 +128,11 @@ object EventStreams {
       clickWithinNs: Long = Long.MaxValue,
       purchaseWithinNs: Long = Long.MaxValue): DataFrame =
     StateStores.withRocksDb(spark) {
-      drainEvents(spark, dir,
-        if (clickWithinNs == Long.MaxValue) "op199" else "op207") { ev =>
+      Drain.files(spark, dir,
+          if (clickWithinNs == Long.MaxValue) "op199" else "op207",
+          "events", "append", "4") { raw =>
         FunnelStream.stepHits(
-          ev.select(col("user_id"), col("event_type"),
+          withEventTs(raw).select(col("user_id"), col("event_type"),
             (expr("unix_micros(ts)") * lit(1000L)).as("ts_ns"))
             .as[FunnelStream.FEv](
               org.apache.spark.sql.Encoders.product[FunnelStream.FEv]),
@@ -176,9 +149,9 @@ object EventStreams {
   def closedSessionPaths(spark: SparkSession, dir: String, cap: Int,
       gapNs: Long): DataFrame =
     StateStores.withRocksDb(spark) {
-      drainEvents(spark, dir, "op203") { ev =>
+      Drain.files(spark, dir, "op203", "events", "append", "4") { raw =>
         SessionPathStream.closedPaths(
-          ev.select(col("user_id"), col("event_id"),
+          withEventTs(raw).select(col("user_id"), col("event_id"),
             (expr("unix_micros(ts)") * lit(1000L)).as("ts_ns"),
             col("event_type"))
             .as[SessionPathStream.PEv](
@@ -192,9 +165,9 @@ object EventStreams {
     * user's first. */
   def transitionPairs(spark: SparkSession, dir: String): DataFrame =
     StateStores.withRocksDb(spark) {
-      drainEvents(spark, dir, "op249") { ev =>
+      Drain.files(spark, dir, "op249", "events", "append", "4") { raw =>
         TransitionStream.transitions(
-          ev.select(col("user_id"), col("event_id"),
+          withEventTs(raw).select(col("user_id"), col("event_id"),
             (expr("unix_micros(ts)") * lit(1000L)).as("ts_ns"),
             col("event_type"))
             .as[TransitionStream.TEv](

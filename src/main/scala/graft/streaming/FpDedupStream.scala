@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Online near-dup maintenance for any SINGLE-LONG banded fingerprint —
@@ -58,20 +57,15 @@ object FpDedupStream {
       .select("doc_a", "doc_b", "hamming")
   }
 
-  /** Drain `records` through a 4-batch MemoryStream (split by doc id
-    * mod 4); per batch: fingerprint arrivals (the caller's decode maps
-    * a (doc_id, payload) frame to (doc_id, fp)), flag against the
-    * persisted store and within the batch, append fingerprints to the
-    * store. Returns the union of flags. */
-  def maintainedFlags(spark: SparkSession,
-      records: Seq[(Long, Array[Byte])],
+  /** Drain `records` (doc_id, payload) through a 4-batch MemoryStream
+    * (split by doc id mod 4); per batch: fingerprint arrivals (the
+    * caller's decode maps a (doc_id, payload) frame to (doc_id, fp)),
+    * flag against the persisted store and within the batch, append
+    * fingerprints to the store. Returns the union of flags. */
+  def maintainedFlags(spark: SparkSession, records: DataFrame,
       fingerprint: DataFrame => DataFrame,
       nBands: Int, bandBits: Int, maxHamming: Int,
       stateDir: String): DataFrame = {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val in = MemoryStream[(Long, Array[Byte])]
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     // flags are query OUTPUT (this function's return value), not
     // maintained state — only the fingerprint store must persist across
     // batches. Emitting flags through a per-batch parquet write + end
@@ -80,40 +74,28 @@ object FpDedupStream {
     // the streaming-correct replacement (r16, guide §1.2 per-task work
     // after the shape is right). Store writes/reads are UNCHANGED.
     val flagBatches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = in.toDF().toDF("doc_id", "payload")
-        .writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // a MemoryStream batch arrives as ONE partition, which ran
-          // the caller's codec decode serially; spread the payloads
-          // before the heavy per-row work (r16 — the codecDocIds rule
-          // at the streaming edge; per-row decode is
-          // partitioning-invariant)
-          val fps = fingerprint(batch
-              .repartition(spark.sparkContext.defaultParallelism))
-            .localCheckpoint()
-          val storePath = s"$stateDir/fps"
-          val prior =
-            if (new java.io.File(storePath).exists())
-              spark.read.parquet(storePath)
-            else spark.emptyDataFrame
-              .select(lit(0L).as("doc_id"), lit(0L).as("fp")).limit(0)
-          val sameBatch =
-            flaggedPairs(fps, fps, nBands, bandBits, maxHamming)
-          val crossBatch =
-            flaggedPairs(fps, prior, nBands, bandBits, maxHamming)
-          flagBatches += sameBatch.unionByName(crossBatch).localCheckpoint()
-          fps.coalesce(1).write.mode("append").parquet(storePath)
-          (): Unit
-        }
-        .start()
-      (0 until 4).foreach { k =>
-        in.addData(records.filter(_._1 % 4 == k))
-        q.processAllAvailable()
-      }
-      q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    Drain.slices(spark, records, "doc_id") { batch =>
+      // a MemoryStream batch arrives as ONE partition, which ran
+      // the caller's codec decode serially; spread the payloads
+      // before the heavy per-row work (r16 — the codecDocIds rule
+      // at the streaming edge; per-row decode is
+      // partitioning-invariant)
+      val fps = fingerprint(batch
+          .repartition(spark.sparkContext.defaultParallelism))
+        .localCheckpoint()
+      val storePath = s"$stateDir/fps"
+      val prior =
+        if (new java.io.File(storePath).exists())
+          spark.read.parquet(storePath)
+        else spark.emptyDataFrame
+          .select(lit(0L).as("doc_id"), lit(0L).as("fp")).limit(0)
+      val sameBatch =
+        flaggedPairs(fps, fps, nBands, bandBits, maxHamming)
+      val crossBatch =
+        flaggedPairs(fps, prior, nBands, bandBits, maxHamming)
+      flagBatches += sameBatch.unionByName(crossBatch).localCheckpoint()
+      fps.coalesce(1).write.mode("append").parquet(storePath)
+    }
     val flags = flagBatches.reduce(_ unionByName _).localCheckpoint()
     new scala.reflect.io.Directory(new java.io.File(stateDir))
       .deleteRecursively()

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.functions.Multimodal
@@ -65,50 +64,34 @@ object ImageDedupStream {
     * store. Returns the union of flags. */
   def maintainedNearDupFlags(spark: SparkSession, dir: String,
       stateDir: String): DataFrame = {
-    implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val images = Multimodal.synthesizeImages(spark, dir).collect()
-    val in = MemoryStream[(Long, String, Array[Byte])]
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     // flags are query OUTPUT, not maintained state — buffer them as
     // checkpointed frames instead of a per-batch parquet write + end
     // read (r16, same change as FpDedupStream; the hash STORE keeps
     // its per-batch persisted appends)
     val flagBatches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = in.toDF().toDF("doc_id", "format", "payload")
-        .writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // MemoryStream batches arrive as ONE partition — spread the
-          // payloads before the per-row decode (r16, the codecDocIds
-          // rule at the streaming edge)
-          val hh = Multimodal.imageAHash(
-              batch.select(col("doc_id"), col("format"), col("payload"))
-                .repartition(spark.sparkContext.defaultParallelism)
-                .as[Multimodal.ImageRecord])
-            .toDF().localCheckpoint()
-          val storePath = s"$stateDir/hashes"
-          val prior =
-            if (new java.io.File(storePath).exists())
-              spark.read.parquet(storePath)
-            else spark.emptyDataFrame
-              .select(lit(0L).as("doc_id"), lit(0L).as("h_lo"),
-                lit(0L).as("h_hi")).limit(0)
-          val sameBatch = flaggedPairs(hh, hh)
-          val crossBatch = flaggedPairs(hh, prior)
-          flagBatches += sameBatch.unionByName(crossBatch).localCheckpoint()
-          hh.coalesce(1).write.mode("append").parquet(storePath)
-          (): Unit
-        }
-        .start()
-      (0 until 4).foreach { k =>
-        in.addData(images.filter(_.doc_id % 4 == k)
-          .map(r => (r.doc_id, r.format, r.payload)).toSeq)
-        q.processAllAvailable()
-      }
-      q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    Drain.slices(spark, Multimodal.synthesizeImages(spark, dir).toDF(),
+        "doc_id") { batch =>
+      // MemoryStream batches arrive as ONE partition — spread the
+      // payloads before the per-row decode (r16, the codecDocIds
+      // rule at the streaming edge)
+      val hh = Multimodal.imageAHash(
+          batch.select(col("doc_id"), col("format"), col("payload"))
+            .repartition(spark.sparkContext.defaultParallelism)
+            .as[Multimodal.ImageRecord])
+        .toDF().localCheckpoint()
+      val storePath = s"$stateDir/hashes"
+      val prior =
+        if (new java.io.File(storePath).exists())
+          spark.read.parquet(storePath)
+        else spark.emptyDataFrame
+          .select(lit(0L).as("doc_id"), lit(0L).as("h_lo"),
+            lit(0L).as("h_hi")).limit(0)
+      val sameBatch = flaggedPairs(hh, hh)
+      val crossBatch = flaggedPairs(hh, prior)
+      flagBatches += sameBatch.unionByName(crossBatch).localCheckpoint()
+      hh.coalesce(1).write.mode("append").parquet(storePath)
+    }
     val flags = flagBatches.reduce(_ unionByName _).localCheckpoint()
     new scala.reflect.io.Directory(new java.io.File(stateDir))
       .deleteRecursively()

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Streaming RFM base maintenance (op214): per-customer
@@ -29,47 +28,19 @@ object RfmStream {
     * return the merged (o_custkey, last_day, frequency, cents) base. */
   def maintainedRfmBase(spark: SparkSession, dir: String,
       stateDir: String): DataFrame = {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
     val rows = spark.read.parquet(s"$dir/orders.parquet")
       .select(col("o_custkey"),
         datediff(to_date(col("o_orderdate")),
           lit("1995-01-01").cast("date")).cast("long").as("day"),
         round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .toSeq
-    val in = MemoryStream[(Long, Long, Long)]
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = in.toDF().toDF("o_custkey", "day", "cents")
-        .writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.groupBy("o_custkey")
-            .agg(max("day").as("last_day"),
-              count(lit(1)).as("frequency"),
-              sum("cents").as("cents"))
-            .coalesce(1).write.mode("append")
-            .parquet(s"$stateDir/partials")
-          (): Unit
-        }
-        .start()
-      (0 until 4).foreach { k =>
-        in.addData(rows.filter(_._2 % 4 == k))
-        q.processAllAvailable()
-      }
-      q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    // merged base is customer-dimension-sized — materialize and
-    // reclaim the state dir (the op169/op193 hygiene rule)
-    val merged = spark.read.parquet(s"$stateDir/partials")
-      .groupBy("o_custkey")
-      .agg(max("last_day").as("last_day"),
-        sum("frequency").as("frequency"),
-        sum("cents").as("cents"))
-      .localCheckpoint()
-    new scala.reflect.io.Directory(new java.io.File(stateDir))
-      .deleteRecursively()
-    merged
+    Drain.partials(spark, rows, "day", stateDir)(
+      _.groupBy("o_custkey")
+        .agg(max("day").as("last_day"),
+          count(lit(1)).as("frequency"),
+          sum("cents").as("cents")))(
+      _.groupBy("o_custkey")
+        .agg(max("last_day").as("last_day"),
+          sum("frequency").as("frequency"),
+          sum("cents").as("cents")))
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** Streaming seasonal-baseline maintenance (op220): the (event type,
@@ -27,42 +26,13 @@ object SeasonalStream {
     * grid. */
   def maintainedDailyCounts(spark: SparkSession, dir: String,
       stateDir: String): DataFrame = {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val evDf = graft.sources.Tables.events(spark, dir)
-    val rows = evDf
+    val rows = graft.sources.Tables.events(spark, dir)
       .select(col("event_id"), col("event_type"),
         datediff(to_date(col("ts")),
           lit("2024-01-01").cast("date")).cast("long").as("day_idx"))
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
-    val in = MemoryStream[(Long, String, Long)]
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = in.toDF().toDF("event_id", "event_type", "day_idx")
-        .writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.groupBy("event_type", "day_idx")
-            .agg(count(lit(1)).as("n"))
-            .coalesce(1).write.mode("append")
-            .parquet(s"$stateDir/partials")
-          (): Unit
-        }
-        .start()
-      (0 until 4).foreach { k =>
-        in.addData(rows.filter(_._1 % 4 == k))
-        q.processAllAvailable()
-      }
-      q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    val merged = spark.read.parquet(s"$stateDir/partials")
-      .groupBy("event_type", "day_idx")
-      .agg(sum("n").as("n"))
-      .localCheckpoint()
-    new scala.reflect.io.Directory(new java.io.File(stateDir))
-      .deleteRecursively()
-    merged
+    Drain.partials(spark, rows, "event_id", stateDir)(
+      _.groupBy("event_type", "day_idx").agg(count(lit(1)).as("n")))(
+      _.groupBy("event_type", "day_idx").agg(sum("n").as("n")))
   }
 
   /** op240's state: the (event_type, day, y-cents) daily-TOTAL grid
@@ -72,43 +42,13 @@ object SeasonalStream {
     * do). Returns the merged (event_type, day, y) grid. */
   def maintainedDailySums(spark: SparkSession, dir: String,
       stateDir: String): DataFrame = {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val evDf = graft.sources.Tables.events(spark, dir)
-    val rows = evDf
+    val rows = graft.sources.Tables.events(spark, dir)
       .select(col("event_id"), col("event_type"),
         datediff(to_date(col("ts")),
           lit("2024-01-01").cast("date")).cast("long").as("day"),
         round(col("value") * 100, 0).cast("long").as("cents"))
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        r.getLong(3))).toSeq
-    val in = MemoryStream[(Long, String, Long, Long)]
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = in.toDF().toDF("event_id", "event_type", "day", "cents")
-        .writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.groupBy("event_type", "day")
-            .agg(sum("cents").as("y"))
-            .coalesce(1).write.mode("append")
-            .parquet(s"$stateDir/partials")
-          (): Unit
-        }
-        .start()
-      (0 until 4).foreach { k =>
-        in.addData(rows.filter(_._1 % 4 == k))
-        q.processAllAvailable()
-      }
-      q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    val merged = spark.read.parquet(s"$stateDir/partials")
-      .groupBy("event_type", "day")
-      .agg(sum("y").as("y"))
-      .localCheckpoint()
-    new scala.reflect.io.Directory(new java.io.File(stateDir))
-      .deleteRecursively()
-    merged
+    Drain.partials(spark, rows, "event_id", stateDir)(
+      _.groupBy("event_type", "day").agg(sum("cents").as("y")))(
+      _.groupBy("event_type", "day").agg(sum("y").as("y")))
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.functions.CountMin
@@ -27,45 +26,15 @@ object SketchStream {
     * the element-wise-merged counters as (r, b, cnt). */
   def maintainedCounters(spark: SparkSession, dir: String,
       depth: Int, width: Int, stateDir: String): DataFrame = {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select("doc_id", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1))).toSeq
-    val in = MemoryStream[(Long, String)]
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = in.toDF().toDF("doc_id", "text")
-        .writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.select(explode(split(col("text"), " ")).as("w"))
-            .agg(CountMin.sketch(depth, width)(col("w")).as("sk"))
-            .select(posexplode(col("sk")))
-            .select(expr(s"CAST(pos div $width AS BIGINT)").as("r"),
-              expr(s"CAST(pos % $width AS BIGINT)").as("b"),
-              col("col").as("cnt"))
-            .coalesce(1).write.mode("append")
-            .parquet(s"$stateDir/partials")
-          (): Unit
-        }
-        .start()
-      // four deterministic arrival slices → four micro-batches → four
-      // partial grids (processAllAvailable fences each batch)
-      (0 until 4).foreach { k =>
-        in.addData(docs.filter(_._1 % 4 == k))
-        q.processAllAvailable()
-      }
-      q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    // The merged grid is d·w rows — materialize it off the partials
-    // (localCheckpoint severs the lineage) so the state dir can be
-    // deleted instead of leaking one temp dir per invocation.
-    val merged = spark.read.parquet(s"$stateDir/partials")
-      .groupBy("r", "b").agg(sum("cnt").as("cnt"))
-      .localCheckpoint()
-    new scala.reflect.io.Directory(new java.io.File(stateDir))
-      .deleteRecursively()
-    merged
+      .select("doc_id", "text")
+    Drain.partials(spark, docs, "doc_id", stateDir)(
+      _.select(explode(split(col("text"), " ")).as("w"))
+        .agg(CountMin.sketch(depth, width)(col("w")).as("sk"))
+        .select(posexplode(col("sk")))
+        .select(expr(s"CAST(pos div $width AS BIGINT)").as("r"),
+          expr(s"CAST(pos % $width AS BIGINT)").as("b"),
+          col("col").as("cnt")))(
+      _.groupBy("r", "b").agg(sum("cnt").as("cnt")))
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.queries.MonitorQueries
@@ -29,40 +28,14 @@ object TopKStream {
     * then return the merged (source, rank, doc_id, prio) selection. */
   def maintainedSample(spark: SparkSession, dir: String,
       stateDir: String): DataFrame = {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-      .select("source", "doc_id", "n_chars").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    val in = MemoryStream[(String, Long, Long)]
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = in.toDF().toDF("source", "doc_id", "n_chars")
-        .writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          MonitorQueries.wsSelect(MonitorQueries.wsScored(batch))
-            .select("source", "doc_id", "prio")
-            .coalesce(1).write.mode("append")
-            .parquet(s"$stateDir/partials")
-          (): Unit
-        }
-        .start()
-      // four deterministic arrival slices → four partial top-k lists
-      (0 until 4).foreach { k =>
-        in.addData(docs.filter(_._2 % 4 == k))
-        q.processAllAvailable()
-      }
-      q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    // serve-side merge: the partials re-enter the SAME bounded top-k;
-    // the result is ≤ k·|sources| rows — materialize it (localCheckpoint
-    // severs the lineage) and reclaim the state dir.
-    val merged = MonitorQueries
-      .wsSelect(spark.read.parquet(s"$stateDir/partials"))
-      .localCheckpoint()
-    new scala.reflect.io.Directory(new java.io.File(stateDir))
-      .deleteRecursively()
-    merged
+      .select("source", "doc_id", "n_chars")
+    // four deterministic arrival slices → four partial top-k lists; the
+    // serve-side merge re-enters the SAME bounded top-k, so the result
+    // is ≤ k·|sources| rows
+    Drain.partials(spark, docs, "doc_id", stateDir)(batch =>
+      MonitorQueries.wsSelect(MonitorQueries.wsScored(batch))
+        .select("source", "doc_id", "prio"))(
+      MonitorQueries.wsSelect)
   }
 }

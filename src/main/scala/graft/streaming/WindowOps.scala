@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Event-time windowing (SURVEY.md §2.6 extensions OP-51/52):
   * watermarks, tumbling/sliding windows — same column expressions serve
@@ -57,46 +56,8 @@ object WindowOps {
     * twin (and is DuckDB-checkable); the spec exercises actual
     * late-data dropping with a multi-batch MemoryStream. */
   def streamedTumbling(spark: SparkSession, dir: String,
-      width: String = "1 hour", delay: String = "10 minutes"): DataFrame = {
-    // adaptive raw read — see Tables.eventsRaw (nice error if the fixture
-    // is nanos and the session lacks the construction-time legacy flag)
-    val schema = graft.sources.Tables.eventsRaw(spark, dir).schema
-    // the file streaming source lists a directory; expose the single
-    // fixture file through a temp dir of symlinks
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_op51_")
-    java.nio.file.Files.createSymbolicLink(
-      streamDir.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
-    // watermarks require TIMESTAMP (ltz), not NTZ; with the session pinned
-    // to UTC the formatted output is identical to the NTZ batch twin
-    val rawStream = spark.readStream.schema(schema).parquet(streamDir.toString)
-    val raw = rawStream.withColumn(
-      "ts", timestamp_micros(graft.sources.Tables.tsUsExpr(rawStream)))
-    val agg = raw.withWatermark("ts", delay)
-      .groupBy(window(col("ts"), width).as("w"), col("event_type"))
-      .agg(count(lit(1)).cast("bigint").as("n"),
-           sumValueBp(col("value")).as("sum_value"))
-      .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("w_start"),
-        col("event_type"), col("n"), col("sum_value"))
-    val name = s"graft_op51_${System.nanoTime()}"
-    // scope the state-store width to the stream only: the aggregate has
-    // hundreds of groups, so 32 stateful shuffle partitions are pure
-    // per-task/state-store overhead (the dominant cost of this query);
-    // batch reads of the memory table don't consult this conf
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    // the on-heap memory-sink table IS the result — no driver collect /
-    // re-parallelize round-trip; the symlink dir can go immediately (the
-    // sink holds rows, not file references). The temp view stays
-    // registered (unique name) until the session drops it.
-    java.nio.file.Files.deleteIfExists(streamDir.resolve("events.parquet"))
-    java.nio.file.Files.deleteIfExists(streamDir)
-    spark.table(name)
-  }
+      width: String = "1 hour", delay: String = "10 minutes"): DataFrame =
+    Drain.files(spark, dir, "op51", "events", "complete", "4")(raw =>
+      tumblingCounts(EventStreams.withEventTs(raw).withWatermark("ts", delay),
+        width))
 }

@@ -755,7 +755,7 @@ class SimilaritySpec extends SparkSpec {
       val dir = java.nio.file.Files
         .createTempDirectory("graft_op305_spec_").toString
       // the real fixtures are single parquet FILES (the streaming file
-      // source in drainStream lists a symlink to them) — reduce the
+      // source in Drain.files lists a symlink to them) — reduce the
       // Spark output dir to one and move it into place
       (0L until 16L).map(id =>
           (id, if (id % 2 == 0) vec(0, 1) else odd))
