@@ -450,26 +450,19 @@ object Dedup {
     * through near-dup edges (A~B, B~C ⇒ A,B,C share one representative —
     * the pairwise `survivors` view under-merges exactly these chains).
     *
-    * Algorithm: min-label propagation with pointer jumping — labels
-    * start as doc_id; each round every vertex takes the min of its own
-    * and its neighbors' labels, then relabels through its label's label
-    * (cluster ids are doc ids, so one self-join chases the pointer).
-    * The jump doubles effective reach per round, so convergence is
-    * O(log diameter) — 20 rounds covers chains of length 2²⁰, making
-    * the hard cap unreachable in practice rather than a silent
-    * wrong-answer mode. Per round: two joins + one aggregate over the
-    * (tiny relative to corpus) vertex set; labels `localCheckpoint`ed
-    * per round to truncate lineage — mandatory for iterative DataFrame
-    * algorithms — and the fixpoint test is a driver-side count, the
-    * same driver-coordinated loop any BSP/Pregel-style computation
-    * runs. Singleton documents keep themselves as representative. */
+    * Algorithm: [[Components.minLabels]] with one pointer jump per
+    * round (cluster ids are doc ids, so one self-join chases the
+    * pointer): convergence is O(log diameter) — 20 rounds covers chains
+    * of length 2²⁰, making the hard cap unreachable in practice rather
+    * than a silent wrong-answer mode. Singleton documents keep
+    * themselves as representative. */
   def dedupClusters(df: DataFrame, idCol: String, textCol: String,
       minBp: Long, maxDocFreq: Option[Long] = None,
       maxRounds: Int = 20): DataFrame = {
     val pairs = jaccardPairs(df, idCol, textCol, minBp, maxDocFreq)
-      .select(col("doc_a"), col("doc_b")).localCheckpoint()
-    val edges = pairs.unionByName(
-      pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .localCheckpoint()
+    val edges = pairs.union(pairs.select(col("dst"), col("src")))
     // propagate over the EDGE-VERTEX SUBGRAPH only: a document with no
     // qualifying pair can never change label, so it stays out of every
     // per-round join and is appended as its own singleton cluster at the
@@ -477,44 +470,16 @@ object Dedup {
     // corpus (at 100 TB those differ by orders of magnitude; at fixture
     // scale the restriction is overhead-neutral — kept for the scale
     // contract, measured within noise of the full-corpus iteration)
-    val verts = edges.select(col("doc_a").as("doc_id")).distinct()
+    val verts = edges.select(col("src").as("doc_id")).distinct()
       .localCheckpoint()
-    var labels = verts.withColumn("cluster", col("doc_id"))
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      val nbMin = edges
-        .join(labels.select(col("doc_id").as("doc_b"),
-          col("cluster").as("nb_cluster")), "doc_b")
-        .groupBy(col("doc_a")).agg(min(col("nb_cluster")).as("nb_min"))
-      // carry the pre-round label through as `prev`: convergence becomes
-      // a scan of the already-materialized result instead of an extra
-      // full join-and-compare action per round
-      // NOT checkpointed: the pointer-jump self-join reads it twice, but
-      // over the dup subgraph the recompute is two cheap small-frame
-      // joins — an extra eager materialization per round costs more in
-      // job overhead than it saves (measured)
-      val merged = labels
-        .join(nbMin.withColumnRenamed("doc_a", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"), col("cluster").as("prev"),
-          least(col("cluster"), coalesce(col("nb_min"), col("cluster")))
-            .as("cluster"))
-      // pointer jump: cluster ← cluster's own cluster (labels only ever
-      // shrink, so chasing one hop per round doubles propagation speed)
-      val next = merged
-        .join(merged.select(col("doc_id").as("cluster"),
-          col("cluster").as("cc")), "cluster")
-        .select(col("doc_id"), col("prev"), col("cc").as("cluster"))
-        .localCheckpoint()
-      converged = next.filter(col("cluster") =!= col("prev")).isEmpty
-      labels = next.select(col("doc_id"), col("cluster"))
-      round += 1
-    }
+    val (labels, _) = Components.minLabels(edges,
+      verts.select(col("doc_id").as("v")), jumps = 1, maxRounds)
     // singletons (no qualifying pair) keep themselves as representative
-    labels.unionByName(
-      df.select(col(idCol).as("doc_id"))
-        .join(verts, Seq("doc_id"), "left_anti")
-        .withColumn("cluster", col("doc_id")))
+    labels.select(col("v").as("doc_id"), col("lab").as("cluster"))
+      .unionByName(
+        df.select(col(idCol).as("doc_id"))
+          .join(verts, Seq("doc_id"), "left_anti")
+          .withColumn("cluster", col("doc_id")))
   }
 
   /** SimHash-60: weighted majority of per-token hash bits. Tokens hashed

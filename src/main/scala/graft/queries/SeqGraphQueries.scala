@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.Components
 import graft.sources.Tables
 import graft.streaming.Drain
 import Det.{big, ordered}
@@ -260,9 +261,21 @@ object SeqGraphQueries {
     * the edge Exchange is reused. Both spellings sit under one oracle. */
   private def dampedRanks(s: SparkSession, d: String, seeded: Boolean,
       coPart: Boolean): DataFrame = {
-    val hint = broadcastUnless(coPart)
     val edges = basketCliqueUnd(s, d)
       .select(col("p1").as("src"), col("p2").as("dst"))
+    ordered(
+      pageRanks(edges, seeded, coPart)
+        .select(col("pk").as("p_partkey"),
+          col("r").as(if (seeded) "rwr_ppb" else "rank_ppb"), col("deg")),
+      "p_partkey")
+  }
+
+  /** The [[dampedRanks]] iteration over any symmetric edge list
+    * `(src, dst)` — op320 runs it on the crawl's URL graph. Returns
+    * (pk, r, deg): vertex, rank in ppb, out-degree. */
+  private[queries] def pageRanks(edges: DataFrame, seeded: Boolean,
+      coPart: Boolean): DataFrame = {
+    val hint = broadcastUnless(coPart)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     // NOT materialized: the per-iteration re-reads of the edge chain
     // collapse to one computation via ReuseExchange (identical
@@ -275,7 +288,7 @@ object SeqGraphQueries {
     val verts = deg.select(col("src").as("pk"))
     // |V| (or the seed count) attached via a 1-row cross join
     // (plan-time scalar, no collect)
-    val (n, out) = if (seeded) ("ns", "rwr_ppb") else ("nv", "rank_ppb")
+    val n = if (seeded) "ns" else "nv"
     val nRow =
       if (seeded) broadcast(
         verts.where(col("pk") % 97 === 0).agg(count(lit(1)).as(n)))
@@ -297,10 +310,8 @@ object SeqGraphQueries {
           expr(s"${teleport(150000000L)} + ($prDampNum * sc) div $prScale")
             .as("r"))
     }
-    ordered(
-      ranks.join(broadcast(deg), col("pk") === col("src"))
-        .select(col("pk").as("p_partkey"), col("r").as(out), col("deg")),
-      "p_partkey")
+    ranks.join(broadcast(deg), col("pk") === col("src"))
+      .select(col("pk"), col("r"), col("deg"))
   }
 
   /** Join hint for a |V|-sized side: broadcast it (dimension-sized
@@ -519,12 +530,10 @@ object SeqGraphQueries {
     else und.join(broadcast(deg), "p1").join(broadcast(d2), "p2")
   }
 
-  private def trianglesSummary(s: SparkSession, d: String,
+  /** Every triangle of a symmetric `(p1, p2)` edge list exactly once,
+    * as (src, v, w), by op194's degree orientation. */
+  private def orientedTriangles(und: DataFrame, deg: DataFrame,
       coPart: Boolean): DataFrame = {
-    val pairs = supportPrunedPairs(s, d)
-    val und = pairs.union(
-        pairs.select(col("p2").as("p1"), col("p1").as("p2")))
-    val deg = und.groupBy("p1").agg(count(lit(1)).as("deg"))
     // total order (deg, id) as one key; ids < 10^9 by fixture contract.
     // deg is |V|-sized and attached ONCE (not per-iteration) — strategy
     // adjudicated by the op194/op194b A/B in SCALE.md
@@ -540,9 +549,19 @@ object SeqGraphQueries {
     val e2 = oriented.select(col("src"), col("dst").as("w"),
       col("dk").as("wk"))
     val wedges = e1.join(e2, "src").where(col("vk") < col("wk"))
-    val triangles = wedges.join(
-      oriented.select(col("src").as("v2"), col("dst").as("w2")),
-      col("v") === col("v2") && col("w") === col("w2"))
+    wedges.join(
+        oriented.select(col("src").as("v2"), col("dst").as("w2")),
+        col("v") === col("v2") && col("w") === col("w2"))
+      .select(col("src"), col("v"), col("w"))
+  }
+
+  private def trianglesSummary(s: SparkSession, d: String,
+      coPart: Boolean): DataFrame = {
+    val pairs = supportPrunedPairs(s, d)
+    val und = pairs.union(
+        pairs.select(col("p2").as("p1"), col("p1").as("p2")))
+    val deg = und.groupBy("p1").agg(count(lit(1)).as("deg"))
+    val triangles = orientedTriangles(und, deg, coPart)
     val nV = deg.agg(count(lit(1)).as("n_vertices"))
     val nE = pairs.agg(count(lit(1)).as("n_edges"))
     // open+closed wedge total Σ deg·(deg−1)/2 for global transitivity.
@@ -569,64 +588,23 @@ object SeqGraphQueries {
   private val ccMaxRounds = 25
 
   /** op208: connected components over the support-pruned co-purchase
-    * graph — hash-min label propagation: every vertex starts as its own
-    * label and each round adopts the minimum of its own and its
-    * neighbors' labels, until a round changes nothing. Components are
-    * emitted as (component id = minimum member, size, member bounds);
-    * min_v == comp by construction, kept as an in-band self-check.
-    *
-    * 100 TB shape: each round is ONE equi-join (edges × labels, both
-    * keyed by vertex) + one map-combinable min-aggregate — the hash-min
-    * form every distributed CC implementation (GraphX, GraphFrames,
-    * Google's MapReduce CC) bootstraps from; rounds ≤ diameter, and
-    * co-purchase/social graphs have small diameters. Labels and edges
-    * are localCheckpointed between rounds (the op202 rule: `labels` is
-    * read three times per round — lazy unroll multiplies subplans
-    * ~3^rounds and stalls Catalyst long before execution). The
-    * convergence count is driver-side but O(1) per round, piggybacked
-    * on the checkpoint job. For diameter-heavy graphs (road networks)
-    * the production escalation is large-star/small-star contraction
-    * (O(log²) rounds) — same per-round join shape, so this spelling is
-    * the correct building block. The ORACLE walks the same graph as a
-    * recursive transitive-closure CTE — a completely different
-    * algorithm arriving at the identical partition. */
-  /** Hash-min label-propagation loop over a symmetric (p1,p2) edge
-    * list: every vertex starts as its own label, each round adopts
-    * the min of its own and its neighbors' labels, stops at the
-    * fixpoint (or `maxRounds` as a safety bound). Returns
-    * (labels(v,lbl), rounds-to-fixpoint) — package-private so the
-    * planted-chain spec can race the round count against
-    * [[starContract]]. */
-  private[graft] def hashMinLabels(
-      und0: DataFrame, maxRounds: Int): (DataFrame, Int) = {
-    val und = und0.localCheckpoint()
-    var labels = und.select(col("p1").as("v")).distinct()
-      .select(col("v"), col("v").as("lbl")).localCheckpoint()
-    var changed = 1L
-    var round = 0
-    while (changed > 0 && round < maxRounds) {
-      val nbrMin = und
-        .join(labels.select(col("v").as("p1"), col("lbl")), "p1")
-        .groupBy(col("p2")).agg(min("lbl").as("nbr"))
-        .select(col("p2").as("v"), col("nbr"))
-      val merged = labels.join(nbrMin, Seq("v"), "left")
-        .select(col("v"), col("lbl"),
-          least(col("lbl"), coalesce(col("nbr"), col("lbl"))).as("nlbl"))
-        .localCheckpoint()
-      changed = merged.where(col("nlbl") < col("lbl")).count()
-      labels = merged.select(col("v"), col("nlbl").as("lbl"))
-      round += 1
-    }
-    (labels, round)
-  }
-
+    * graph — plain hash-min label propagation ([[Components.minLabels]]
+    * with no pointer jumps): rounds ≤ diameter, and co-purchase graphs
+    * have small diameters. Components are emitted as (component id =
+    * minimum member, size, member bounds); min_v == comp by
+    * construction, kept as an in-band self-check. The ORACLE walks the
+    * same graph as a recursive transitive-closure CTE — a completely
+    * different algorithm arriving at the identical partition. */
   val op208ConnectedComponents: Q = (s, d) => {
-    val (labels, _) = hashMinLabels(supportPrunedUnd(s, d), ccMaxRounds)
+    val und = supportPrunedUnd(s, d)
+      .select(col("p1").as("src"), col("p2").as("dst")).localCheckpoint()
+    val (labels, _) = Components.minLabels(und,
+      und.select(col("src").as("v")).distinct(), jumps = 0, ccMaxRounds)
     ordered(
-      labels.groupBy(col("lbl"))
+      labels.groupBy(col("lab"))
         .agg(big(count(lit(1))).as("n_vertices"),
           min("v").as("min_v"), max("v").as("max_v"))
-        .select(col("lbl").as("comp"), col("n_vertices"),
+        .select(col("lab").as("comp"), col("n_vertices"),
           col("min_v"), col("max_v")),
       "comp")
   }
@@ -717,7 +695,8 @@ object SeqGraphQueries {
     * barrier rounds but star contraction ~40); per-round work is two
     * vertex-keyed join+groupBy-min pairs, map-combinable, never
     * all-pairs. SeqGraphSpec plants a 40-link chain and pins
-    * starContract's round count strictly below hashMinLabels'. */
+    * starContract's round count strictly below hash-min's
+    * ([[Components.minLabels]] with no jumps). */
   val op208bStarContraction: Q = (s, d) => {
     val canon = supportPrunedPairs(s, d)
       .select(greatest(col("p1"), col("p2")).as("u"),
@@ -824,10 +803,10 @@ object SeqGraphQueries {
     * side = eps makes that lossless) and pairs materialize only within
     * a cell, so pair volume is Σ|cell|·|nbr cells| ≈ N·ρ·eps² (ρ = local
     * density); a hot cell is a plan-visible skew key (op274's AQE
-    * handling applies). Components run hash-min WITH pointer jumping —
-    * each round one edge-keyed min plus two label-composition
-    * self-joins, all vertex-keyed equi-joins, localCheckpoint between
-    * rounds (the op202 rule) — so the round count is O(log diameter)
+    * handling applies). Components run [[Components.minLabels]] WITH
+    * two pointer jumps — each round one edge-keyed min plus two
+    * label-composition self-joins, all vertex-keyed equi-joins,
+    * localCheckpoint between rounds — so the round count is O(log diameter)
     * where op208's plain hash-min needs O(diameter): the measured
     * eps-graph here has diameter ≈ 145 and converges in 7 jumped
     * rounds. The oracle unrolls the identical trajectory with
@@ -867,10 +846,6 @@ object SeqGraphQueries {
     ordered(out, "pid")
   }
 
-  /** The shared op298 trajectory through the converged core labels:
-    * (points, eps-pairs, neighbor counts, core set, labels) — op298
-    * finishes with the border/noise attach, the op299 model write
-    * persists (x, y, lab) for online classification. */
   /** The quantized point set: (pid, x = minute-of-day, y = ⌊value⌋)
     * over purchase events. */
   private def dbscanPoints(s: SparkSession, d: String): DataFrame =
@@ -904,6 +879,10 @@ object SeqGraphQueries {
       .localCheckpoint()
   }
 
+  /** The shared op298 trajectory through the converged core labels:
+    * (points, eps-pairs, neighbor counts, core set, labels) — op298
+    * finishes with the border/noise attach, the op299 model write
+    * persists (x, y, lab) for online classification. */
   private def dbscanParts(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
     val p = dbscanPoints(s, d)
@@ -917,33 +896,12 @@ object SeqGraphQueries {
       .join(core.select(col("pid").as("a_pid")), "a_pid")
       .join(core.select(col("pid").as("b_pid")), "b_pid")
       .localCheckpoint()
-    // hash-min + pointer jumping: labels are always core pids, so the
-    // composition join is total (inner join loses nothing)
-    def jump(l: DataFrame): DataFrame =
-      l.join(l.select(col("pid").as("jp"), col("lab").as("jlab")),
-          col("lab") === col("jp"))
-        .select(col("pid"), col("jlab").as("lab"))
-    var lab = core.select(col("pid"), col("pid").as("lab")).localCheckpoint()
-    var round = 0
-    var stable = false
-    while (!stable && round < dbscanMaxRounds) {
-      val nbrMin = coreEdges
-        .join(lab.select(col("pid").as("b_pid"), col("lab").as("b_lab")),
-          "b_pid")
-        .groupBy(col("a_pid")).agg(min(col("b_lab")).as("nmin"))
-      val m1 = lab
-        .join(nbrMin.select(col("a_pid").as("pid"), col("nmin")),
-          Seq("pid"), "left")
-        .select(col("pid"),
-          least(col("lab"), coalesce(col("nmin"), col("lab"))).as("lab"))
-      val next = jump(jump(m1)).localCheckpoint()
-      val changed = next
-        .join(lab.select(col("pid"), col("lab").as("old")), "pid")
-        .filter(col("lab") =!= col("old")).count()
-      stable = changed == 0
-      lab = next
-      round += 1
-    }
+    // two pointer jumps per round: the oracle (dbscanModelCtes) unrolls
+    // exactly this trajectory for dbscanMaxRounds rounds
+    val (cl, _) = Components.minLabels(
+      coreEdges.select(col("a_pid").as("src"), col("b_pid").as("dst")),
+      core.select(col("pid").as("v")), jumps = 2, dbscanMaxRounds)
+    val lab = cl.select(col("v").as("pid"), col("lab"))
     (p, pairs, nb, core, lab)
   }
 
@@ -1060,13 +1018,7 @@ object SeqGraphQueries {
     * of exactly this sweep; contraction is a groupBy on
     * (community(u), community(v)) — op301's escalation, not needed
     * for one level. */
-  val op300Louvain: Q = (s, d) => {
-    val (_, deg, _, c) = louvainPhase1(s, d)
-    ordered(
-      c.join(deg, "v")
-        .select(col("v"), col("lab").as("community"), col("k")),
-      "v")
-  }
+  val op300Louvain: Q = (s, d) => louvainCommunities(s, d, coPart = false)
 
   /** op300b: phase-1 Louvain, the BEYOND-BROADCAST spelling — the
     * identical four synchronous sweeps (same integer gains, same
@@ -1080,8 +1032,13 @@ object SeqGraphQueries {
     * changes no emitted bit. Store-amortized under its own key (the
     * strategies are separate published artifacts; head-to-head fresh
     * build times in SCALE.md). */
-  val op300bLouvainPartitioned: Q = (s, d) => {
-    val (_, deg, _, c) = louvainPhase1(s, d, coPart = true)
+  val op300bLouvainPartitioned: Q = (s, d) =>
+    louvainCommunities(s, d, coPart = true)
+
+  /** op300/op300b's output: phase-1 labels as (v, community, k). */
+  private def louvainCommunities(s: SparkSession, d: String,
+      coPart: Boolean): DataFrame = {
+    val (_, deg, _, c) = louvainPhase1(s, d, coPart)
     ordered(
       c.join(deg, "v")
         .select(col("v"), col("lab").as("community"), col("k")),
@@ -1134,44 +1091,61 @@ object SeqGraphQueries {
     val m2df = deg.agg(sum(col("k")).as("m2"))
     var c = deg.select(col("v"), col("v").as("lab")).localCheckpoint()
     (1 to louvainSweeps).foreach { _ =>
-      val stot = c.join(deg, "v").groupBy(col("lab"))
-        .agg(sum(col("k")).as("stot"))
       val kuc = edges
         .join(c.select(col("v").as("w"), col("lab")), "w")
         .groupBy(col("v"), col("lab"))
         .agg(big(count(lit(1))).as("kuc"))
-      val cur = c.select(col("v"), col("lab").as("cur_lab"))
-      // best candidate per vertex as a map-combinable struct-max over
-      // (score, −lab) — (score desc, lab asc) without a sort window;
-      // the |E|-sized candidate table never crosses a second shuffle.
-      // r17 (guide §2.4): the old spelling scored neighbors and the own
-      // community in TWO separate join legs (4 extra joins + a final
-      // v-keyed join per sweep). One UNIONED candidate list replaces
-      // both: neighbor rows carry their real link weight kuc, and a
-      // zero-kuc floor row per vertex makes staying always legal. The
-      // score is the uniform  m2·kuc − k·(stot − k·[lab = cur_lab]);
-      // when a neighbor shares the own community the real-kuc copy
-      // scores ≥ the zero floor (m2 > 0, kuc ≥ 1), so the struct-max
-      // picks exactly the row the old greatest(best_nbr, own) picked —
-      // identical winner, identical tie-break, hash-gated.
-      val cand = kuc.select(col("v"), col("lab"), col("kuc"))
-        .union(cur.select(col("v"), col("cur_lab").as("lab"),
-          lit(0L).as("kuc")))
-      c = cand
-        .join(attach(deg), "v").join(attach(cur), "v")
-        .join(attach(stot), "lab")
-        .crossJoin(m2df)
-        .select(col("v"), struct(
-          (col("m2") * col("kuc") - col("k") *
-            (col("stot") -
-              when(col("lab") === col("cur_lab"), col("k"))
-                .otherwise(lit(0L)))).as("s"),
-          (-col("lab")).as("nl")).as("cand"))
-        .groupBy(col("v")).agg(max(col("cand")).as("best"))
-        .select(col("v"), (-col("best").getField("nl")).as("lab"))
-        .localCheckpoint()
+      c = louvainMove(kuc, c, deg, m2df, attach, downward = false)
     }
     (edges, deg, m2df, c)
+  }
+
+  /** One synchronous modularity-ascent sweep from assignment `c` (v,
+    * lab), degrees `deg` (v, k) and link weights `kuc` (v, lab, kuc):
+    * phase 1 moves freely, the contracted level `downward` only (see
+    * [[louvainContractedSweeps]]). Returns the new (v, lab). */
+  private def louvainMove(kuc: DataFrame, c: DataFrame, deg: DataFrame,
+      m2df: DataFrame, attach: DataFrame => DataFrame,
+      downward: Boolean): DataFrame = {
+    val stot = c.join(deg, "v").groupBy(col("lab"))
+      .agg(sum(col("k")).as("stot"))
+    val cur = c.select(col("v"), col("lab").as("cur_lab"))
+    // best candidate per vertex as a map-combinable struct-max over
+    // (score, −lab) — (score desc, lab asc) without a sort window;
+    // the |E|-sized candidate table never crosses a second shuffle.
+    // r17 (guide §2.4): the old spelling scored neighbors and the own
+    // community in TWO separate join legs (4 extra joins + a final
+    // v-keyed join per sweep). One UNIONED candidate list replaces
+    // both: neighbor rows carry their real link weight kuc, and a
+    // zero-kuc floor row per vertex makes staying always legal (the
+    // downward filter keeps it: cur_lab ≤ cur_lab). The score is the
+    // uniform  m2·kuc − k·(stot − k·[lab = cur_lab]); when a neighbor
+    // shares the own community the real-kuc copy scores ≥ the zero
+    // floor (m2 > 0, kuc ≥ 1), so the struct-max picks exactly the row
+    // the old greatest(best_nbr, own) picked — identical winner,
+    // identical tie-break, hash-gated.
+    val cand = kuc.select(col("v"), col("lab"), col("kuc"))
+      .union(cur.select(col("v"), col("cur_lab").as("lab"),
+        lit(0L).as("kuc")))
+    val scored = cand
+      .join(attach(deg), "v").join(attach(cur), "v")
+      .join(attach(stot), "lab")
+      .crossJoin(m2df)
+    (if (downward) scored.filter(col("lab") <= col("cur_lab")) else scored)
+      .select(col("v"), struct(
+        (col("m2") * col("kuc") - col("k") *
+          (col("stot") -
+            when(col("lab") === col("cur_lab"), col("k"))
+              .otherwise(lit(0L)))).as("s"),
+        (-col("lab")).as("nl")).as("cand"))
+      .groupBy(col("v")).agg(max(col("cand")).as("best"))
+      .select(col("v"), (-col("best").getField("nl")).as("lab"))
+      // r17 measured NOTE: dropping this per-sweep checkpoint (lazy
+      // 3-sweep chain over the ~115-row contracted graph) ran 1.6–2.8×
+      // SLOWER (op301 5.9→9.4 s, op301b 3.6–4.8→13.3 s) — the subtree
+      // triples per sweep and replicated planning dominates, the
+      // op202/beamWalk lesson again. The checkpoint stays.
+      .localCheckpoint()
   }
 
   // ---------------------------------------------------------------- op301
@@ -1235,49 +1209,21 @@ object SeqGraphQueries {
     // coPart: pin the super-edge layout on the per-sweep join key
     val ce = (if (coPart) ceAgg.repartition(col("cv")) else ceAgg)
       .localCheckpoint()
-    val supK = ce.groupBy(col("cu")).agg(sum(col("wgt")).as("kk"))
-      .select(col("cu").as("sv"), col("kk")).localCheckpoint()
-    var c2 = supK.select(col("sv"), col("sv").as("lab")).localCheckpoint()
+    // super-vertex weighted degrees, spelled (v, k) like phase 1's deg
+    val supK = ce.groupBy(col("cu")).agg(sum(col("wgt")).as("k"))
+      .select(col("cu").as("v"), col("k")).localCheckpoint()
+    var c2 = supK.select(col("v"), col("v").as("lab")).localCheckpoint()
     (1 to louvainContractedSweeps).foreach { _ =>
-      val stot = c2.join(supK, "sv").groupBy(col("lab"))
-        .agg(sum(col("kk")).as("stot"))
       // neighbor-community weight EXCLUDING self-loops (a super-vertex's
       // internal mass moves with it; it never counts as a link to a
       // candidate community)
       val kuc = ce.filter(col("cu") =!= col("cv"))
-        .join(c2.select(col("sv").as("cv"), col("lab")), "cv")
+        .join(c2.select(col("v").as("cv"), col("lab")), "cv")
         .groupBy(col("cu"), col("lab")).agg(sum(col("wgt")).as("kuc"))
-        .select(col("cu").as("sv"), col("lab"), col("kuc"))
-      val cur = c2.select(col("sv"), col("lab").as("cur_lab"))
-      // r17: same unioned-candidate fold as the phase-1 sweep (see
-      // louvainPhase1Compute) — the zero-kuc floor row makes staying
-      // always legal, so the old own-leg joins AND the final left-join
-      // fallback both disappear; the downward filter keeps the floor
-      // row (cur_lab ≤ cur_lab), so every super-vertex still emits.
-      val cand = kuc.select(col("sv"), col("lab"), col("kuc"))
-        .union(cur.select(col("sv"), col("cur_lab").as("lab"),
-          lit(0L).as("kuc")))
-      c2 = cand
-        .join(attach(supK), "sv").join(attach(cur), "sv")
-        .join(attach(stot), "lab")
-        .crossJoin(m2df)
-        .filter(col("lab") <= col("cur_lab"))
-        .select(col("sv"), struct(
-          (col("m2") * col("kuc") - col("kk") *
-            (col("stot") -
-              when(col("lab") === col("cur_lab"), col("kk"))
-                .otherwise(lit(0L)))).as("s"),
-          (-col("lab")).as("nl")).as("cand"))
-        .groupBy(col("sv")).agg(max(col("cand")).as("best"))
-        .select(col("sv"), (-col("best").getField("nl")).as("lab"))
-        // r17 measured NOTE: dropping this per-sweep checkpoint (lazy
-        // 3-sweep chain over the ~115-row contracted graph) ran 1.6–2.8×
-        // SLOWER (op301 5.9→9.4 s, op301b 3.6–4.8→13.3 s) — the c2
-        // subtree triples per sweep and replicated planning dominates,
-        // the op202/beamWalk lesson again. The checkpoint stays.
-        .localCheckpoint()
+        .select(col("cu").as("v"), col("lab"), col("kuc"))
+      c2 = louvainMove(kuc, c2, supK, m2df, attach, downward = true)
     }
-    c1.join(c2.select(col("sv").as("lab"), col("lab").as("community")),
+    c1.join(c2.select(col("v").as("lab"), col("lab").as("community")),
         "lab")
       .join(deg, "v")
       .select(col("v"), col("community"), col("k"))
@@ -1708,9 +1654,10 @@ object SeqGraphQueries {
   /** op225: local clustering coefficient — per vertex: degree,
     * triangle count, and lcc = 2·tri/(deg·(deg−1)) in basis points —
     * THE per-node cohesion feature (spam/fraud rings cluster, bridges
-    * don't). Triangles enumerated ONCE via op194's degree-oriented
-    * chain, then each triangle credits its THREE corners (explode) —
-    * per-vertex counts without per-vertex enumeration.
+    * don't). Triangles enumerated ONCE by the chain op194 shares
+    * ([[orientedTriangles]], broadcast degree attach), then each
+    * triangle credits its THREE corners (explode) — per-vertex counts
+    * without per-vertex enumeration.
     *
     * 100 TB shape: op194's cost exactly (the oriented wedge join is
     * the whole bill) plus one explode(3) + vertex-keyed aggregate;
@@ -1718,28 +1665,9 @@ object SeqGraphQueries {
     * can't exist here (support-pruned symmetric graph has min degree
     * 1 — guard the denominator with the CASE). */
   val op225ClusteringCoeff: Q = (s, d) => {
-    val pairs = supportPrunedPairs(s, d)
-    val und = pairs.union(
-        pairs.select(col("p2").as("p1"), col("p1").as("p2")))
+    val und = supportPrunedUnd(s, d)
     val deg = und.groupBy("p1").agg(count(lit(1)).as("deg"))
-    val keyed = und
-      .join(broadcast(deg), "p1")
-      .join(broadcast(deg.select(col("p1").as("p2"),
-        col("deg").as("deg2"))), "p2")
-      .select(col("p1"), col("p2"),
-        expr("deg * 1000000000 + p1").as("k1"),
-        expr("deg2 * 1000000000 + p2").as("k2"))
-    val oriented = keyed.where(col("k1") < col("k2"))
-      .select(col("p1").as("src"), col("p2").as("dst"),
-        col("k2").as("dk"))
-    val e1 = oriented.select(col("src"), col("dst").as("v"),
-      col("dk").as("vk"))
-    val e2 = oriented.select(col("src"), col("dst").as("w"),
-      col("dk").as("wk"))
-    val wedges = e1.join(e2, "src").where(col("vk") < col("wk"))
-    val triangles = wedges.join(
-      oriented.select(col("src").as("v2"), col("dst").as("w2")),
-      col("v") === col("v2") && col("w") === col("w2"))
+    val triangles = orientedTriangles(und, deg, coPart = false)
     val perVertex = triangles
       .select(explode(array(col("src"), col("v"), col("w"))).as("p1"))
       .groupBy("p1").agg(big(count(lit(1))).as("tri"))

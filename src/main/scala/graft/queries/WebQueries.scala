@@ -601,13 +601,13 @@ object WebQueries {
     * deduplicated, then op176's exact integer PageRank (same ppb
     * scale, damping and iteration count — the oracle literally appends
     * [[SeqGraphQueries.prIterChainSql]], so the two ops cannot drift).
-    * The Spark loop mirrors op176's broadcast spelling: ranks and
+    * The Spark loop IS op176's broadcast spelling
+    * ([[SeqGraphQueries.pageRanks]], coPart = false): ranks and
     * degrees are |V|-sized (pages with out-links — a dimension
     * relative to the corpus), so the edge list never re-shuffles per
     * iteration; past broadcast scale the op176b co-partitioned
     * spelling applies unchanged. */
   val op320PageRank: Q = (s, d) => {
-    import SeqGraphQueries.{prDampNum, prIters, prScale}
     // staged decode (r16): canonicalize references its argument 4x, so
     // the decode+synthesis trees are bound as attributes first and each
     // evaluates once (the oracle's `base` CTE already spells it so)
@@ -631,25 +631,8 @@ object WebQueries {
     val edges = pairs.union(pairs.select(col("b"), col("a"))).distinct()
       .toDF("src", "dst").localCheckpoint(false) // lazy: plan inspection
       // and query CONSTRUCTION stay job-free; first action materializes
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val esd = edges.join(broadcast(deg), "src")
-    val verts = deg.select(col("src").as("pk"))
-    val nVerts = verts.agg(count(lit(1)).as("nv"))
-    var ranks = verts.crossJoin(nVerts)
-      .select(col("pk"), expr(s"$prScale div nv").as("r"))
-    for (_ <- 1 to prIters) {
-      val contrib = esd.join(broadcast(ranks), esd("src") === ranks("pk"))
-        .select(col("dst"), expr("r div deg").as("c"))
-        .groupBy("dst").agg(sum("c").as("sc"))
-      ranks = verts.crossJoin(nVerts)
-        .join(broadcast(contrib), col("pk") === col("dst"), "left")
-        .select(col("pk"), col("nv"), coalesce(col("sc"), lit(0L)).as("sc"))
-        .select(col("pk"),
-          expr(s"150000000 div nv + ($prDampNum * sc) div $prScale")
-            .as("r"))
-    }
     ordered(
-      ranks.join(deg, ranks("pk") === deg("src"))
+      SeqGraphQueries.pageRanks(edges, seeded = false, coPart = false)
         .select(col("pk").as("url_canon"), big(col("r")).as("rank_ppb"),
           big(col("deg")).as("deg")),
       "url_canon")

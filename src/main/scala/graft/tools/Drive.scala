@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Manual driver: runs SparkEntry.entry (and optionally named queries)
   * exactly as the harness would, printing result samples. Usage:
   *   sbt "runMain graft.tools.Drive"            — entry() on sf0.001
@@ -11,16 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Drive {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // custom Catalyst rules (base64 round-trip elimination)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     if (args.isEmpty) {
       val df = graft.SparkEntry.entry(spark)
       println(s"[drive] entry rows=${df.count()}")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan and timed count for
   * named queries. Usage:
   *   SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.Explain op61_dedup_ngram"
@@ -9,19 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // custom Catalyst rules (base64 round-trip elimination)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // events.parquet is TIMESTAMP(NANOS); Tables.events fails fast
-      // unless this is set at construction
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     args.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, dir)
       println(s"===== $name =====")

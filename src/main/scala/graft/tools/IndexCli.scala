@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.Similarity
@@ -24,14 +23,7 @@ object IndexCli {
       if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("graft_index_cli_").toString
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val emb = Tables.embeddings(spark, sfDir)
     val half = emb.filter(col("vec_id") % 2 === 0)
     val rest = emb.filter(col("vec_id") % 2 =!= 0)

@@ -1,24 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Streaming-probes-only bench entry: the batch suite takes ~10 min at
   * sf0.1, but iterating on serving throughput (BenchStreaming) needs a
   * seconds-scale loop. Same session shape as [[graft.Bench]]. */
 object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // optional first arg: repetitions (r16 — the serving-matrix
     // adjudication loop needs run-to-run spread, not one shot; each rep
     // is a full probe pass, so reps are minutes apart like Bench's

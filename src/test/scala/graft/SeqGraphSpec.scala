@@ -653,7 +653,9 @@ class SeqGraphSpec extends SparkSpec {
     val und = chain.union(chain.select(col("p2").as("p1"),
       col("p1").as("p2")))
     val canon = chain.select(col("p2").as("u"), col("p1").as("v"))
-    val (hmLabels, hmRounds) = SeqGraphQueries.hashMinLabels(und, 100)
+    val (hmLabels, hmRounds) = graft.functions.Components.minLabels(
+      und.toDF("src", "dst"), und.select(col("p1").as("v")).distinct(),
+      jumps = 0, 100)
     val (stars, starRounds) = SeqGraphQueries.starContract(canon, 100)
     // the planted chain is one component rooted at vertex 1
     val hm = hmLabels.collect().map(r => r.getLong(0) -> r.getLong(1))
