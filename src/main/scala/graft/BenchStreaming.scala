@@ -364,7 +364,7 @@ object BenchStreaming {
       sfDir: String): Double = {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    import graft.streaming.{AdmissionGate, StateStores}
+    import graft.streaming.{AdmissionGate, Drain, StateStores}
     val n = 20000
     val arrivals = (0 until n).map { i =>
       val dom = s"site${i % 200}.com"
@@ -378,15 +378,14 @@ object BenchStreaming {
     val in = MemoryStream[(Long, String, String, String)]
     in.addData(arrivals)
     val t0 = System.nanoTime()
-    StateStores.withRocksDb(spark) {
-      val q = AdmissionGate.robotsGatedAdmission(
+    val q = Drain.start(spark, StateStores.rocksDbConf)(
+      AdmissionGate.robotsGatedAdmission(
           in.toDF().toDF("doc_id", "domain", "path", "url_canon"),
           rules, k = 10L)
         .writeStream.outputMode("append").format("memory")
-        .queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-    }
+        .queryName(name))
+    q.processAllAvailable()
+    q.stop()
     val secs = (System.nanoTime() - t0) / 1e9
     spark.catalog.dropTempView(name)
     n / secs

@@ -328,7 +328,7 @@ object AnnQueries {
   private def drainQueryVecStream(s: SparkSession, d: String, tag: String,
       probe: DataFrame => DataFrame): DataFrame =
     // the aggregate holds 8 groups → 4 shuffle partitions
-    Drain.files(s, d, tag, "embeddings", "complete", "4")(st =>
+    Drain.files(s, d, tag, "embeddings", "complete", Drain.width("4"))(st =>
       probe(st.filter(col("vec_id") < 8)))
 
   /** ANN recall-evaluation harness as a first-class query: per sampled
@@ -627,7 +627,7 @@ object AnnQueries {
 
   val op304StreamGram: Q = (s, d) => {
     val drained = Drain.files(s, d, "op304", "embeddings",
-      "complete", "8")(streamedGram)
+      "complete", Drain.width("8"))(streamedGram)
     ordered(drained.select(col("i"), col("j"), col("c")), "i", "j")
   }
 
@@ -658,7 +658,7 @@ object AnnQueries {
     val ref = pcaGram(Tables.embeddings(s, d)
       .where(col("vec_id") % 2 === 0)).localCheckpoint()
     val cur = Drain.files(s, d, "op305", "embeddings",
-        "complete", "8") { st =>
+        "complete", Drain.width("8")) { st =>
         streamedGram(st.where(col("vec_id") % 2 === 1))
       }.localCheckpoint()
     val xr = powerIterate(s, ref, "op305").select(col("i"), col("x").as("xr"))

@@ -239,7 +239,7 @@ object DedupQueries {
     * mode (dedup emits rows, not a running aggregate). */
   private def drainDocStream(s: SparkSession, d: String, tag: String,
       xform: DataFrame => DataFrame): DataFrame =
-    Drain.files(s, d, tag, "documents", "append", "8")(xform)
+    Drain.files(s, d, tag, "documents", "append", Drain.width("8"))(xform)
 
   /** op134: the ONLINE decontamination gate — op82/op102's streaming
     * leg. The benchmark slice (doc_id % 50 == 0, the op82 split)

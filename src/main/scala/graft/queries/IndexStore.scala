@@ -62,9 +62,16 @@ object IndexStore {
     })
   }
 
+  /** Where every store lives: `target/graft_index/v2` under the working
+    * directory, resolved once. sbt, Bench and Verify run from the
+    * checkout, so a copy of the repo reads and writes only its own
+    * stores. */
+  private val storeRoot: String =
+    s"${System.getProperty("user.dir")}/target/graft_index/v2"
+
   private[queries] def indexRoot(d: String, kind: String,
       table: String = "embeddings"): String =
-    s"/root/repo/target/graft_index/v2/${new java.io.File(d).getName}-$table-${tableFp(d, table)}/$kind"
+    s"$storeRoot/${new java.io.File(d).getName}-$table-${tableFp(d, table)}/$kind"
 
   /** Multi-table variant of [[indexRoot]] for stores that materialize
     * MORE than one source table (e.g. the bucketed orders⋈lineitem
@@ -77,7 +84,7 @@ object IndexStore {
     val ts = tables.sorted
     val tag = ts.mkString("_")
     val fp = ts.map(tableFp(d, _)).mkString("")
-    s"/root/repo/target/graft_index/v2/${new java.io.File(d).getName}-$tag-$fp/$kind"
+    s"$storeRoot/${new java.io.File(d).getName}-$tag-$fp/$kind"
   }
 
   /** An index written by ivfIndexWrite/pqIndexWrite is complete iff its

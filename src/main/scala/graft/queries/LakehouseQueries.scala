@@ -61,7 +61,8 @@ object LakehouseQueries {
   val op108StreamChangelog: Q = (s, d) => {
     import s.implicits._
     import graft.streaming.Changelog
-    val updates = Drain.files(s, d, "op108", "events", "update", "8") { st =>
+    val updates = Drain.files(s, d, "op108", "events", "update",
+        Drain.width("8")) { st =>
       // raw stream schema: ts is whatever the fixture carries (nanos-long
       // or micros timestamp) — tsUsExpr adapts (see Tables.eventsColumns)
       Changelog.latestState(
@@ -95,14 +96,13 @@ object LakehouseQueries {
   val op122StreamChangelogTws: Q = (s, d) => {
     import s.implicits._
     import graft.streaming.{Changelog, StateStores}
-    val updates = StateStores.withRocksDb(s) {
-      Drain.files(s, d, "op122", "events", "update", "8") { st =>
-        Changelog.latestStateTws(
-          st.select(col("user_id"), col("event_id"),
-            Tables.tsUsExpr(st).as("ts_us"), col("event_type"),
-            round(col("value") * 100, 0).cast("bigint").as("value_cents"))
-            .as[Changelog.Change]).toDF()
-      }
+    val updates = Drain.files(s, d, "op122", "events", "update",
+        Drain.width("8") ++ StateStores.rocksDbConf) { st =>
+      Changelog.latestStateTws(
+        st.select(col("user_id"), col("event_id"),
+          Tables.tsUsExpr(st).as("ts_us"), col("event_type"),
+          round(col("value") * 100, 0).cast("bigint").as("value_cents"))
+          .as[Changelog.Change]).toDF()
     }
     ordered(
       updates.groupBy(col("user_id"))
@@ -128,14 +128,13 @@ object LakehouseQueries {
   val op131StreamScd2: Q = (s, d) => {
     import s.implicits._
     import graft.streaming.{ScdStream, StateStores}
-    val closed = StateStores.withRocksDb(s) {
-      Drain.files(s, d, "op131", "events", "append", "8") { st =>
-        ScdStream.closedIntervals(
-          st.select(col("user_id"), col("event_type"),
-            Tables.tsUsExpr(st).as("t_us"), col("event_id"),
-            Det.bp4(col("value")).as("val_bp"))
-            .as[ScdStream.Ev]).toDF()
-      }
+    val closed = Drain.files(s, d, "op131", "events", "append",
+        Drain.width("8") ++ StateStores.rocksDbConf) { st =>
+      ScdStream.closedIntervals(
+        st.select(col("user_id"), col("event_type"),
+          Tables.tsUsExpr(st).as("t_us"), col("event_id"),
+          Det.bp4(col("value")).as("val_bp"))
+          .as[ScdStream.Ev]).toDF()
     }
     ordered(closed, "user_id", "event_type", "ver")
   }

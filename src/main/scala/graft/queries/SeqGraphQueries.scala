@@ -950,7 +950,7 @@ object SeqGraphQueries {
     val core = s.read.parquet(s"$dir/core_pts")
     val eps2 = dbscanEps * dbscanEps
     val drained = Drain.files(s, d, "op299", "events",
-      "complete", "8") { st =>
+      "complete", Drain.width("8")) { st =>
       val q = st.filter(col("event_type") === "view")
         .select(col("event_id").as("pid"),
           (hour(col("ts")) * 60 + minute(col("ts")))
@@ -1253,7 +1253,7 @@ object SeqGraphQueries {
     val pc = s.read.parquet(s"$dir/part_comm")
     ordered(
       Drain.files(s, d, "op302", "lineitem",
-        "complete", "8") { st =>
+        "complete", Drain.width("8")) { st =>
         st.select(col("l_orderkey"), col("l_partkey").as("v"))
           .join(pc, Seq("v"))
           .groupBy(col("l_orderkey"))

@@ -165,55 +165,24 @@ object StediQueries {
 
   /** Drive the decoded STEDI pair (risk stream + customer stream, both
     * through the real wire-frame synthesis on FILE-SOURCE streams) into
-    * `pipe` and drain under Trigger.AvailableNow / append. Customers
-    * get the deterministic seenAt op123's oracle replays. Factored so
-    * op306 chains its second stateful operator onto the same inputs. */
+    * `pipe` and drain under Trigger.AvailableNow / append at stateful
+    * width 8 (stream-stream join state over a handful of keys).
+    * Customers get the deterministic seenAt op123's oracle replays.
+    * Factored so op306 chains its second stateful operator onto the
+    * same inputs. */
   private def drainStediPair(s: SparkSession, d: String, tag: String)(
-      pipe: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val custSchema = s.read.parquet(s"$d/customer.parquet").schema
-    val evSchema = Tables.eventsRaw(s, d).schema
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_${tag}_")
-    val custDir = java.nio.file.Files.createDirectory(dir.resolve("customer"))
-    val evDir = java.nio.file.Files.createDirectory(dir.resolve("events"))
-    val custLink = custDir.resolve("customer.parquet")
-    val evLink = evDir.resolve("events.parquet")
-    val name = s"graft_${tag}_${System.nanoTime()}"
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    try {
-      java.nio.file.Files.createSymbolicLink(custLink,
-        java.nio.file.Paths.get(s"$d/customer.parquet"))
-      java.nio.file.Files.createSymbolicLink(evLink,
-        java.nio.file.Paths.get(s"$d/events.parquet"))
+      pipe: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    Drain.files(s, d, tag, Seq("customer", "events"), "append",
+        Drain.width("8")) { case Seq(cust, ev) =>
       val customers = Stedi.decodeCustomers(
-          StediFixtures.redisFramesFrom(
-            s.readStream.schema(custSchema).parquet(custDir.toString)))
+          StediFixtures.redisFramesFrom(cust))
         .withColumn("seenAt",
           seenAtFor(regexp_extract(col("email"), "customer(\\d+)@", 1)
             .cast("long")))
       val risks = Stedi.parseRiskEventsFull(
-        StediFixtures.riskFramesFrom(Tables.eventsColumns(
-          s.readStream.schema(evSchema).parquet(evDir.toString))))
-      // stream-stream join state over a handful of keys: narrow the
-      // stateful shuffle for the drain's duration
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q = pipe(risks, customers)
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      java.nio.file.Files.deleteIfExists(custLink)
-      java.nio.file.Files.deleteIfExists(evLink)
-      java.nio.file.Files.deleteIfExists(custDir)
-      java.nio.file.Files.deleteIfExists(evDir)
-      java.nio.file.Files.deleteIfExists(dir): Unit
+        StediFixtures.riskFramesFrom(Tables.eventsColumns(ev)))
+      pipe(risks, customers)
     }
-    val out = s.table(name)
-    val rows = out.collect()
-    s.catalog.dropTempView(name)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
-  }
 
   /** The deterministic customer ingestion time the op123/op306 oracles
     * replay: 2024-01-01 + (custkey % 720) hours — ONE spelling shared
@@ -389,18 +358,17 @@ object StediQueries {
           .select(col("email"), col("birthYear")).as[SnapshotRow]
           .localCheckpoint()
       } finally java.nio.file.Files.deleteIfExists(path)
-    val updates = StateStores.withRocksDb(s) {
-      Drain.files(s, d, "op287", "events", "update", "8") { st =>
-        val changes = st
-          .select(StediFixtures.emailFor(col("user_id")).as("email"),
-            col("event_id"), Tables.tsUsExpr(st).as("ts_us"),
-            when(col("event_id") % 3 === 0,
-              (lit(1900) + (col("user_id") + col("event_id")) % 90)
-                .cast("string")).as("birth_year_update"))
-          .join(broadcast(snap.select("email")), "email")
-          .as[ProfileEvent]
-        RdbBootstrapStream.bootstrappedProfiles(changes, snap).toDF()
-      }
+    val updates = Drain.files(s, d, "op287", "events", "update",
+        Drain.width("8") ++ StateStores.rocksDbConf) { st =>
+      val changes = st
+        .select(StediFixtures.emailFor(col("user_id")).as("email"),
+          col("event_id"), Tables.tsUsExpr(st).as("ts_us"),
+          when(col("event_id") % 3 === 0,
+            (lit(1900) + (col("user_id") + col("event_id")) % 90)
+              .cast("string")).as("birth_year_update"))
+        .join(broadcast(snap.select("email")), "email")
+        .as[ProfileEvent]
+      RdbBootstrapStream.bootstrappedProfiles(changes, snap).toDF()
     }
     ordered(
       updates.groupBy(col("email"))

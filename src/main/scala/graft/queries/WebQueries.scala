@@ -190,17 +190,15 @@ object WebQueries {
     * arrivals. */
   val op309StreamDomainQuota: Q = (s, d) => {
     import graft.streaming.{DomainQuota, StateStores}
-    val admitted = StateStores.withRocksDb(s) {
-      Drain.files(s, d, "op309", "documents", "append", "8") {
-        st =>
-          import st.sparkSession.implicits._
-          DomainQuota.admitted(
-            st.select(col("doc_id"),
-                Urls.registeredDomain(Urls.canonicalHost(urlOf))
-                  .as("domain"))
-              .as[DomainQuota.DocArrival],
-            k = 25L).toDF()
-      }
+    val admitted = Drain.files(s, d, "op309", "documents", "append",
+        Drain.width("8") ++ StateStores.rocksDbConf) { st =>
+      import st.sparkSession.implicits._
+      DomainQuota.admitted(
+        st.select(col("doc_id"),
+            Urls.registeredDomain(Urls.canonicalHost(urlOf))
+              .as("domain"))
+          .as[DomainQuota.DocArrival],
+        k = 25L).toDF()
     }
     ordered(
       admitted.select(col("doc_id"), col("domain"),
@@ -295,20 +293,18 @@ object WebQueries {
     * spec'd with controlled arrivals. */
   val op315StreamUrlAdmission: Q = (s, d) => {
     import graft.streaming.{DomainQuota, StateStores}
-    val admitted = StateStores.withRocksDb(s) {
-      Drain.files(s, d, "op315", "documents", "append", "8") {
-        st =>
-          import st.sparkSession.implicits._
-          DomainQuota.urlAdmitted(
-            st.select(col("doc_id"),
-                Urls.registeredDomain(Urls.canonicalHost(urlOf))
-                  .as("domain"),
-                Urls.pctDecode(urlOf).as("dec"))
-              .select(col("doc_id"), col("domain"),
-                Urls.canonicalizeDecoded(col("dec")).as("url_canon"))
-              .as[DomainQuota.UrlArrival],
-            k = 25L).toDF()
-      }
+    val admitted = Drain.files(s, d, "op315", "documents", "append",
+        Drain.width("8") ++ StateStores.rocksDbConf) { st =>
+      import st.sparkSession.implicits._
+      DomainQuota.urlAdmitted(
+        st.select(col("doc_id"),
+            Urls.registeredDomain(Urls.canonicalHost(urlOf))
+              .as("domain"),
+            Urls.pctDecode(urlOf).as("dec"))
+          .select(col("doc_id"), col("domain"),
+            Urls.canonicalizeDecoded(col("dec")).as("url_canon"))
+          .as[DomainQuota.UrlArrival],
+        k = 25L).toDF()
     }
     ordered(
       admitted.select(col("doc_id"), col("domain"), col("url_canon"),
@@ -340,18 +336,16 @@ object WebQueries {
       (0 to 3).map { k =>
         s"example$k.com" -> Seq("/p/" -> false, s"/p/$k" -> true)
       }.toMap
-    val admitted = StateStores.withRocksDb(s) {
-      Drain.files(s, d, "op316", "documents", "append", "8") {
-        st =>
-          AdmissionGate.robotsGatedAdmission(
-            st.select(col("doc_id"),
-              Urls.registeredDomain(Urls.canonicalHost(urlOf)).as("domain"),
-              Urls.pathOf(urlOf).as("path"),
-              Urls.pctDecode(urlOf).as("dec"))
-              .select(col("doc_id"), col("domain"), col("path"),
-                Urls.canonicalizeDecoded(col("dec")).as("url_canon")),
-            rules, k = 25L)
-      }
+    val admitted = Drain.files(s, d, "op316", "documents", "append",
+        Drain.width("8") ++ StateStores.rocksDbConf) { st =>
+      AdmissionGate.robotsGatedAdmission(
+        st.select(col("doc_id"),
+          Urls.registeredDomain(Urls.canonicalHost(urlOf)).as("domain"),
+          Urls.pathOf(urlOf).as("path"),
+          Urls.pctDecode(urlOf).as("dec"))
+          .select(col("doc_id"), col("domain"), col("path"),
+            Urls.canonicalizeDecoded(col("dec")).as("url_canon")),
+        rules, k = 25L)
     }
     ordered(
       admitted.select(col("doc_id"), col("domain"), col("url_canon"),
@@ -1170,20 +1164,18 @@ object WebQueries {
   val op324StreamPoliteness: Q = (s, d) => {
     import graft.functions.Robots
     import graft.streaming.{Politeness, StateStores}
-    val admitted = StateStores.withRocksDb(s) {
-      Drain.files(s, d, "op324", "documents", "append", "8") {
-        st =>
-          import st.sparkSession.implicits._
-          Politeness.admitted(
-            st.select(col("doc_id"),
-                Urls.registeredDomain(Urls.canonicalHost(urlOf))
-                  .as("domain"),
-                ((col("doc_id") * 37L) % 1009L).as("fetch_s"))
-              .select(col("doc_id"), col("domain"), col("fetch_s"),
-                Robots.crawlDelay(robotsTxtFor(col("domain")))
-                  .as("delay_s"))
-              .as[Politeness.Fetch]).toDF()
-      }
+    val admitted = Drain.files(s, d, "op324", "documents", "append",
+        Drain.width("8") ++ StateStores.rocksDbConf) { st =>
+      import st.sparkSession.implicits._
+      Politeness.admitted(
+        st.select(col("doc_id"),
+            Urls.registeredDomain(Urls.canonicalHost(urlOf))
+              .as("domain"),
+            ((col("doc_id") * 37L) % 1009L).as("fetch_s"))
+          .select(col("doc_id"), col("domain"), col("fetch_s"),
+            Robots.crawlDelay(robotsTxtFor(col("domain")))
+              .as("delay_s"))
+          .as[Politeness.Fetch]).toDF()
     }
     ordered(
       admitted.select(col("doc_id"), col("domain"),

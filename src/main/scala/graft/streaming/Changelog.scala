@@ -14,7 +14,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   * State per key is ONE row (latest change by the unique total order
   * (ts_us, event_id), plus a change counter): O(active keys), keyed and
   * partitioned by user exactly as the state store shards — RocksDB
-  * provider recommended at 100 TB ([[StateStores.withRocksDb]]).
+  * provider recommended at 100 TB ([[StateStores.rocksDbConf]]).
   * Update output mode emits a key's current state whenever a batch
   * touches it; a downstream upsert sink (Redis/Kafka-compacted-topic)
   * applies rows in batch order, so the last write per key IS the

@@ -1,39 +1,61 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
+  Trigger}
 
 /** The stream-drain harnesses, written once. [[slices]] and [[partials]]
   * replay a collected frame through a MemoryStream in four arrival
   * slices (the incremental, mergeable-state shape of Structured
   * Streaming: `foreachBatch` partials plus a merge run at serve time);
-  * [[files]] drains one fixture table as a file-source stream. Each sets
-  * the stateful shuffle width for the stream only and restores it in
-  * `finally`, so a failed batch leaves neither the width nor a started
-  * query behind. */
+  * [[files]] drains fixture tables as file-source streams. Every query
+  * starts through [[start]], so its settings (stateful shuffle width,
+  * state-store provider) belong to that query alone and the caller's
+  * session keeps its own; a failed batch leaves no started query
+  * behind. */
 object Drain {
+
+  /** The conf map that sets a stream's stateful shuffle width. */
+  def width(parts: String): Map[String, String] =
+    Map("spark.sql.shuffle.partitions" -> parts)
+
+  /** Start `writer` with `conf` set in `spark`'s session only while
+    * `start()` runs, then restore the previous values (unsetting keys
+    * that had none). That is enough: StreamExecution's constructor
+    * clones the session, and the stream's batches and offset log read
+    * that clone, so the settings stay pinned to the query. */
+  private[graft] def start(spark: SparkSession, conf: Map[String, String])(
+      writer: DataStreamWriter[_]): StreamingQuery = {
+    val prev = conf.keys.map(k => k -> spark.conf.getOption(k))
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try writer.start()
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
   /** Feed `rows` through a 4-batch MemoryStream, batch k holding the
     * rows whose `sliceBy` (a LONG column) is ≡ k (mod 4), and run
     * `perBatch` on each micro-batch (`processAllAvailable` fences each
-    * one). */
+    * one) at stateful width 4. The batch frame carries the stream's
+    * session; a frame `perBatch` reads from `spark` plans at the
+    * caller's width. */
   def slices(spark: SparkSession, rows: DataFrame, sliceBy: String)(
       perBatch: DataFrame => Unit): Unit = {
     val all = rows.collect()
     val key = rows.schema.fieldIndex(sliceBy)
     val in = MemoryStream(Encoders.row(rows.schema), spark)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = in.toDF().writeStream.outputMode("update")
-        .foreachBatch((batch: DataFrame, _: Long) => perBatch(batch))
-        .start()
-      try (0 until 4).foreach { k =>
-        in.addData(all.filter(_.getLong(key) % 4 == k).toSeq)
-        q.processAllAvailable()
-      } finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    val q = start(spark, width("4"))(
+      in.toDF().writeStream.outputMode("update")
+        .foreachBatch((batch: DataFrame, _: Long) => perBatch(batch)))
+    try (0 until 4).foreach { k =>
+      in.addData(all.filter(_.getLong(key) % 4 == k).toSeq)
+      q.processAllAvailable()
+    } finally q.stop()
   }
 
   /** [[slices]] with one `partial` appended per micro-batch to
@@ -54,43 +76,53 @@ object Drain {
     merged
   }
 
-  /** File-source stream of ONE fixture table (the file source lists a
-    * directory, so the fixture file is exposed through a temp dir of
-    * symlinks — the op51 recipe) → `pipe` → memory sink,
-    * Trigger.AvailableNow. Stateful shuffle width `parts` is scoped to
-    * the stream: at fixture group counts, per-state-store overhead
-    * dominates a wider shuffle. Symlink cleanup runs in finally so a
-    * failed stream doesn't leak the temp dir; the sink's rows are
-    * lifted out and the temp view dropped, so repeated invocations
-    * (Bench reps) don't pin result sets in the session. */
-  def files(s: SparkSession, d: String, tag: String,
-      table: String, mode: String, parts: String)(
-      pipe: DataFrame => DataFrame): DataFrame = {
+  /** [[files]] over ONE fixture table. */
+  def files(s: SparkSession, d: String, tag: String, table: String,
+      mode: String, conf: Map[String, String])(
+      pipe: DataFrame => DataFrame): DataFrame =
+    files(s, d, tag, Seq(table), mode, conf)(srcs => pipe(srcs.head))
+
+  /** File-source streams of the fixture `tables` (the file source lists
+    * a directory, so each fixture file is exposed through its own temp
+    * dir holding one symlink — the op51 recipe) → `pipe`, which gets
+    * one stream per table in order → memory sink, Trigger.AvailableNow,
+    * started under `conf` (at fixture group counts a narrow stateful
+    * width pays: per-state-store overhead dominates a wider shuffle).
+    * Symlink cleanup runs in finally so a failed stream doesn't leak
+    * the temp dir; the sink's rows are lifted out and the temp view
+    * dropped, so repeated invocations (Bench reps) don't pin result
+    * sets in the session. */
+  def files(s: SparkSession, d: String, tag: String, tables: Seq[String],
+      mode: String, conf: Map[String, String])(
+      pipe: Seq[DataFrame] => DataFrame): DataFrame = {
     // events goes through the adaptive loader for its SCHEMA so a nanos
     // fixture in a session lacking the legacy flag fails with the
     // helpful Tables.eventsRaw diagnostic instead of the raw
     // PARQUET_TYPE_ILLEGAL error (the streaming read below then types
     // ts identically to the batch path)
-    val schema =
-      if (table == "events") graft.sources.Tables.eventsRaw(s, d).schema
-      else s.read.parquet(s"$d/$table.parquet").schema
-    val streamDir = java.nio.file.Files.createTempDirectory(s"graft_${tag}_")
-    val link = streamDir.resolve(s"$table.parquet")
+    val schemas = tables.map { t =>
+      if (t == "events") graft.sources.Tables.eventsRaw(s, d).schema
+      else s.read.parquet(s"$d/$t.parquet").schema
+    }
+    val streamDir = Files.createTempDirectory(s"graft_${tag}_")
+    val links = tables.map(t => streamDir.resolve(t).resolve(s"$t.parquet"))
     val name = s"graft_${tag}_${System.nanoTime()}"
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
     try {
-      java.nio.file.Files.createSymbolicLink(link,
-        java.nio.file.Paths.get(s"$d/$table.parquet"))
-      val src = s.readStream.schema(schema).parquet(streamDir.toString)
-      s.conf.set("spark.sql.shuffle.partitions", parts)
-      val q = pipe(src).writeStream.outputMode(mode)
+      val srcs = tables.lazyZip(schemas).lazyZip(links).map {
+        (t, schema, link) =>
+          Files.createDirectory(link.getParent)
+          Files.createSymbolicLink(link, Paths.get(s"$d/$t.parquet"))
+          s.readStream.schema(schema).parquet(link.getParent.toString)
+      }
+      start(s, conf)(pipe(srcs).writeStream.outputMode(mode)
         .format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        .trigger(Trigger.AvailableNow())).awaitTermination()
     } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      java.nio.file.Files.deleteIfExists(link)
-      java.nio.file.Files.deleteIfExists(streamDir): Unit
+      links.foreach { link =>
+        Files.deleteIfExists(link)
+        Files.deleteIfExists(link.getParent)
+      }
+      Files.deleteIfExists(streamDir): Unit
     }
     val out = s.table(name)
     val rows = out.collect()

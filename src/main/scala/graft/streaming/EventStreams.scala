@@ -36,7 +36,8 @@ object EventStreams {
     * reaches the result — the property the oracle needs). State: one
     * entry per in-horizon key, evicted as the watermark passes. */
   def dedupWithinWatermark(spark: SparkSession, dir: String): DataFrame = {
-    val deduped = Drain.files(spark, dir, "op163", "events", "append", "4") { raw =>
+    val deduped = Drain.files(spark, dir, "op163", "events", "append",
+        Drain.width("4")) { raw =>
       withEventTs(raw).select(col("user_id"), col("event_type"),
           date_trunc("day", col("ts")).as("day"), col("ts"))
         .withWatermark("ts", "1 hour")
@@ -56,7 +57,8 @@ object EventStreams {
     * the input — the oracle replays it with the same horizon predicate.
     * State: per-user in-horizon rows on both sides, watermark-evicted. */
   def leftOuterBoundedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val joined = Drain.files(spark, dir, "op164", "events", "append", "4") { raw =>
+    val joined = Drain.files(spark, dir, "op164", "events", "append",
+        Drain.width("4")) { raw =>
       val ev = withEventTs(raw)
       val views = ev.where(col("event_type") === "view")
         .select(col("event_id").as("view_id"),
@@ -93,7 +95,8 @@ object EventStreams {
     * unique pair across all three row classes (the Det.ordered
     * contract). */
   def fullOuterBoundedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val joined = Drain.files(spark, dir, "op275", "events", "append", "4") { raw =>
+    val joined = Drain.files(spark, dir, "op275", "events", "append",
+        Drain.width("4")) { raw =>
       val ev = withEventTs(raw)
       val views = ev.where(col("event_type") === "view")
         .select(col("event_id").as("view_id"),
@@ -127,18 +130,17 @@ object EventStreams {
   def funnelStepHits(spark: SparkSession, dir: String,
       clickWithinNs: Long = Long.MaxValue,
       purchaseWithinNs: Long = Long.MaxValue): DataFrame =
-    StateStores.withRocksDb(spark) {
-      Drain.files(spark, dir,
-          if (clickWithinNs == Long.MaxValue) "op199" else "op207",
-          "events", "append", "4") { raw =>
-        FunnelStream.stepHits(
-          withEventTs(raw).select(col("user_id"), col("event_type"),
-            (expr("unix_micros(ts)") * lit(1000L)).as("ts_ns"))
-            .as[FunnelStream.FEv](
-              org.apache.spark.sql.Encoders.product[FunnelStream.FEv]),
-          clickWithinNs, purchaseWithinNs)
-          .toDF()
-      }
+    Drain.files(spark, dir,
+        if (clickWithinNs == Long.MaxValue) "op199" else "op207",
+        "events", "append",
+        Drain.width("4") ++ StateStores.rocksDbConf) { raw =>
+      FunnelStream.stepHits(
+        withEventTs(raw).select(col("user_id"), col("event_type"),
+          (expr("unix_micros(ts)") * lit(1000L)).as("ts_ns"))
+          .as[FunnelStream.FEv](
+            org.apache.spark.sql.Encoders.product[FunnelStream.FEv]),
+        clickWithinNs, purchaseWithinNs)
+        .toDF()
     }
 
   /** op203: streaming session-path emission — the events fixture
@@ -148,31 +150,29 @@ object EventStreams {
     * (the op131 closed-rows contract). */
   def closedSessionPaths(spark: SparkSession, dir: String, cap: Int,
       gapNs: Long): DataFrame =
-    StateStores.withRocksDb(spark) {
-      Drain.files(spark, dir, "op203", "events", "append", "4") { raw =>
-        SessionPathStream.closedPaths(
-          withEventTs(raw).select(col("user_id"), col("event_id"),
-            (expr("unix_micros(ts)") * lit(1000L)).as("ts_ns"),
-            col("event_type"))
-            .as[SessionPathStream.PEv](
-              org.apache.spark.sql.Encoders.product[SessionPathStream.PEv]),
-          cap, gapNs).toDF()
-      }
+    Drain.files(spark, dir, "op203", "events", "append",
+        Drain.width("4") ++ StateStores.rocksDbConf) { raw =>
+      SessionPathStream.closedPaths(
+        withEventTs(raw).select(col("user_id"), col("event_id"),
+          (expr("unix_micros(ts)") * lit(1000L)).as("ts_ns"),
+          col("event_type"))
+          .as[SessionPathStream.PEv](
+            org.apache.spark.sql.Encoders.product[SessionPathStream.PEv]),
+        cap, gapNs).toDF()
     }
 
   /** op249: the events fixture drained through [[TransitionStream]] —
     * one append-mode (prev_type, cur_type) row per arrival after each
     * user's first. */
   def transitionPairs(spark: SparkSession, dir: String): DataFrame =
-    StateStores.withRocksDb(spark) {
-      Drain.files(spark, dir, "op249", "events", "append", "4") { raw =>
-        TransitionStream.transitions(
-          withEventTs(raw).select(col("user_id"), col("event_id"),
-            (expr("unix_micros(ts)") * lit(1000L)).as("ts_ns"),
-            col("event_type"))
-            .as[TransitionStream.TEv](
-              org.apache.spark.sql.Encoders.product[TransitionStream.TEv]))
-          .toDF()
-      }
+    Drain.files(spark, dir, "op249", "events", "append",
+        Drain.width("4") ++ StateStores.rocksDbConf) { raw =>
+      TransitionStream.transitions(
+        withEventTs(raw).select(col("user_id"), col("event_id"),
+          (expr("unix_micros(ts)") * lit(1000L)).as("ts_ns"),
+          col("event_type"))
+          .as[TransitionStream.TEv](
+            org.apache.spark.sql.Encoders.product[TransitionStream.TEv]))
+        .toDF()
     }
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 /** State-store provider selection for the stateful streaming operators
   * (stream-stream join, dropDuplicates, sessionization, windowed aggs).
   *
@@ -9,35 +7,21 @@ import org.apache.spark.sql.SparkSession
   * state map ON HEAP — at 100 TB/day the join/dedup state is tens of GB
   * per partition and the executor heap becomes the ceiling. RocksDB
   * state (SURVEY §4) moves it off-heap with incremental changelog
-  * checkpoints; these helpers make that a one-line switch on any graft
-  * streaming entry point, and the specs run the stateful operators under
-  * it to prove the plumbing (StreamingSpec / ScaleSpec).
+  * checkpoints. [[rocksDbConf]] is a start-time conf: pass it to
+  * [[Drain.files]] or [[Drain.start]] and it holds for that query only
+  * (the specs run the stateful operators under it to prove the
+  * plumbing: StreamingSpec / WebSpec / RecoverySpec).
   */
 object StateStores {
 
   val RocksDbProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** The session conf block a 100 TB deployment sets: RocksDB provider +
+  /** The conf block a 100 TB deployment sets: RocksDB provider +
     * changelog checkpointing (incremental commits instead of full
     * snapshot uploads per batch). */
   def rocksDbConf: Map[String, String] = Map(
     "spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider,
     "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
       -> "true")
-
-  /** Run `f` (typically: build + drain one streaming query) with the
-    * RocksDB state store active, restoring the previous provider after —
-    * the provider is read at QUERY START, so queries started inside `f`
-    * run their stateful operators on RocksDB. */
-  def withRocksDb[A](spark: SparkSession)(f: => A): A = {
-    val prev = rocksDbConf.keys
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    rocksDbConf.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 }

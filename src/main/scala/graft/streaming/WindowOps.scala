@@ -57,7 +57,8 @@ object WindowOps {
     * late-data dropping with a multi-batch MemoryStream. */
   def streamedTumbling(spark: SparkSession, dir: String,
       width: String = "1 hour", delay: String = "10 minutes"): DataFrame =
-    Drain.files(spark, dir, "op51", "events", "complete", "4")(raw =>
+    Drain.files(spark, dir, "op51", "events", "complete",
+        Drain.width("4"))(raw =>
       tumblingCounts(EventStreams.withEventTs(raw).withWatermark("ts", delay),
         width))
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{FunnelStream, StateStores}
+import graft.streaming.{Drain, FunnelStream, StateStores}
 import graft.streaming.FunnelStream.{FEv, FunnelState, StepHit, Unset}
 
 /** op199's streaming funnel semantics: the per-user state machine must
@@ -68,10 +68,11 @@ class FunnelStreamSpec extends SparkSpec {
       all.filter(e => e.ts_ns >= s(100) && e.ts_ns < s(200)).reverse,
       all.filter(_.ts_ns >= s(200)).reverse)
     val in = MemoryStream[FEv]
-    val got = StateStores.withRocksDb(spark) {
-      val q = FunnelStream.stepHits(in.toDS())
-        .writeStream.outputMode("append").format("memory")
-        .queryName("funnel_tws").start()
+    val got = {
+      val q = Drain.start(spark, StateStores.rocksDbConf)(
+        FunnelStream.stepHits(in.toDS())
+          .writeStream.outputMode("append").format("memory")
+          .queryName("funnel_tws"))
       slices.foreach { sl => in.addData(sl); q.processAllAvailable() }
       val metrics = q.lastProgress.stateOperators.flatMap(
         _.customMetrics.keySet().toArray(Array.empty[String]))

@@ -1,12 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.pipeline.Stedi
+import graft.streaming.Drain
 
 /** Exactly-once semantics: checkpointed streaming queries resume from
   * committed offsets without reprocessing (OP-04 checkpoint contract),
@@ -15,8 +14,8 @@ class RecoverySpec extends SparkSpec {
   import spark.implicits._
 
   test("checkpointed file-stream query resumes without duplicating processed data") {
-    val srcDir = Files.createTempDirectory("graft_src_").toFile
-    val ckpt = Files.createTempDirectory("graft_ckpt_").toString
+    val srcDir = tempDir("graft_src_").toFile
+    val ckpt = tempDir("graft_ckpt_").toString
     val outName = "recovery_out"
 
     def writeBatch(id: Int, rows: Seq[Long]): Unit =
@@ -56,8 +55,8 @@ class RecoverySpec extends SparkSpec {
     // pre-restart winner
     import graft.streaming.Changelog
     import graft.streaming.Changelog.Change
-    val srcDir = Files.createTempDirectory("graft_clog_src_").toFile
-    val ckpt = Files.createTempDirectory("graft_clog_ckpt_").toString
+    val srcDir = tempDir("graft_clog_src_").toFile
+    val ckpt = tempDir("graft_clog_ckpt_").toString
     def write(rows: Seq[Change]): Unit =
       rows.toDF().coalesce(1).write.mode("append")
         .parquet(srcDir.getAbsolutePath)
@@ -99,28 +98,27 @@ class RecoverySpec extends SparkSpec {
     // does — restarted counter continues, straggler no-regress holds
     import graft.streaming.{Changelog, StateStores}
     import graft.streaming.Changelog.Change
-    val srcDir = Files.createTempDirectory("graft_tws_src_").toFile
-    val ckpt = Files.createTempDirectory("graft_tws_ckpt_").toString
+    val srcDir = tempDir("graft_tws_src_").toFile
+    val ckpt = tempDir("graft_tws_ckpt_").toString
     def write(rows: Seq[Change]): Unit =
       rows.toDF().coalesce(1).write.mode("append")
         .parquet(srcDir.getAbsolutePath)
     def runOnce(): Seq[(Long, Long, Long, Long)] = {
       val buf =
         scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-      StateStores.withRocksDb(spark) {
-        val in = spark.readStream
-          .schema(org.apache.spark.sql.Encoders.product[Change].schema)
-          .parquet(srcDir.getAbsolutePath).as[Change]
-        val q = Changelog.latestStateTws(in).writeStream.outputMode("update")
+      val in = spark.readStream
+        .schema(org.apache.spark.sql.Encoders.product[Change].schema)
+        .parquet(srcDir.getAbsolutePath).as[Change]
+      val q = Drain.start(spark, StateStores.rocksDbConf)(
+        Changelog.latestStateTws(in).writeStream.outputMode("update")
           .option("checkpointLocation", ckpt)
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[Changelog.LatestRow], _: Long) =>
             buf ++= batch.collect().map(r =>
               (r.user_id, r.n_changes, r.last_event_id, r.last_value_cents))
             ()
           }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+          .trigger(Trigger.AvailableNow()))
+      q.awaitTermination()
       buf.toSeq.sortBy(_._1)
     }
     write(Seq(Change(1L, 10L, 100L, "a", 5L), Change(1L, 11L, 200L, "b", 6L),
@@ -139,19 +137,19 @@ class RecoverySpec extends SparkSpec {
     // both come from the checkpoint, not the new batch
     import graft.streaming.{ScdStream, StateStores}
     import graft.streaming.ScdStream.Ev
-    val srcDir = Files.createTempDirectory("graft_scd_src_").toFile
-    val ckpt = Files.createTempDirectory("graft_scd_ckpt_").toString
+    val srcDir = tempDir("graft_scd_src_").toFile
+    val ckpt = tempDir("graft_scd_ckpt_").toString
     def write(rows: Seq[Ev]): Unit =
       rows.toDF().coalesce(1).write.mode("append")
         .parquet(srcDir.getAbsolutePath)
     def runOnce(): Seq[(Long, String, Long, Long, Long, Long)] = {
       val buf = scala.collection.mutable
         .ArrayBuffer.empty[(Long, String, Long, Long, Long, Long)]
-      StateStores.withRocksDb(spark) {
-        val in = spark.readStream
-          .schema(org.apache.spark.sql.Encoders.product[Ev].schema)
-          .parquet(srcDir.getAbsolutePath).as[Ev]
-        val q = ScdStream.closedIntervals(in).writeStream.outputMode("append")
+      val in = spark.readStream
+        .schema(org.apache.spark.sql.Encoders.product[Ev].schema)
+        .parquet(srcDir.getAbsolutePath).as[Ev]
+      val q = Drain.start(spark, StateStores.rocksDbConf)(
+        ScdStream.closedIntervals(in).writeStream.outputMode("append")
           .option("checkpointLocation", ckpt)
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[ScdStream.Closed], _: Long) =>
             buf ++= batch.collect().map(r =>
@@ -159,9 +157,8 @@ class RecoverySpec extends SparkSpec {
                 r.valid_to))
             ()
           }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+          .trigger(Trigger.AvailableNow()))
+      q.awaitTermination()
       buf.toSeq.sortBy(t => (t._1, t._3))
     }
     // batch 1: user 1 changes once (one closed interval emitted); user 2
@@ -189,8 +186,8 @@ class RecoverySpec extends SparkSpec {
     // last + gap
     import graft.streaming.Sessionize
     import graft.streaming.Sessionize.TimedEvent
-    val srcDir = Files.createTempDirectory("graft_sess_src_").toFile
-    val ckpt = Files.createTempDirectory("graft_sess_ckpt_").toString
+    val srcDir = tempDir("graft_sess_src_").toFile
+    val ckpt = tempDir("graft_sess_ckpt_").toString
     def ev(u: Long, ms: Long, v: Double) =
       TimedEvent(u, new java.sql.Timestamp(ms), v)
     def write(rows: Seq[TimedEvent]): Unit =
@@ -237,8 +234,8 @@ class RecoverySpec extends SparkSpec {
     // its re-armed timer in a later process lifetime
     import graft.streaming.{Sessionize, StateStores}
     import graft.streaming.Sessionize.TimedEvent
-    val srcDir = Files.createTempDirectory("graft_twss_src_").toFile
-    val ckpt = Files.createTempDirectory("graft_twss_ckpt_").toString
+    val srcDir = tempDir("graft_twss_src_").toFile
+    val ckpt = tempDir("graft_twss_ckpt_").toString
     def ev(u: Long, ms: Long, v: Double) =
       TimedEvent(u, new java.sql.Timestamp(ms), v)
     def write(rows: Seq[TimedEvent]): Unit =
@@ -246,19 +243,18 @@ class RecoverySpec extends SparkSpec {
         .parquet(srcDir.getAbsolutePath)
     def runOnce(): Seq[Sessionize.Session] = {
       val buf = scala.collection.mutable.ArrayBuffer.empty[Sessionize.Session]
-      StateStores.withRocksDb(spark) {
-        val in = spark.readStream
-          .schema(org.apache.spark.sql.Encoders.product[TimedEvent].schema)
-          .parquet(srcDir.getAbsolutePath).as[TimedEvent]
-        val q = Sessionize.sessionsTws(in, gapMs = 60000, delay = "0 seconds")
+      val in = spark.readStream
+        .schema(org.apache.spark.sql.Encoders.product[TimedEvent].schema)
+        .parquet(srcDir.getAbsolutePath).as[TimedEvent]
+      val q = Drain.start(spark, StateStores.rocksDbConf)(
+        Sessionize.sessionsTws(in, gapMs = 60000, delay = "0 seconds")
           .writeStream.outputMode("append")
           .option("checkpointLocation", ckpt)
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[Sessionize.Session], _: Long) =>
             buf ++= batch.collect(); ()
           }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+          .trigger(Trigger.AvailableNow()))
+      q.awaitTermination()
       buf.toSeq
     }
     write(Seq(ev(1L, 100000L, 1.0), ev(1L, 130000L, 2.0)))
@@ -281,9 +277,9 @@ class RecoverySpec extends SparkSpec {
     // match a risk event arriving AFTER the restart (symmetric-hash
     // state restored from the checkpoint), and the checkpointed
     // watermark must keep filtering late rows after the restart
-    val custDir = Files.createTempDirectory("graft_bj_cust_").toFile
-    val riskDir = Files.createTempDirectory("graft_bj_risk_").toFile
-    val ckpt = Files.createTempDirectory("graft_bj_ckpt_").toString
+    val custDir = tempDir("graft_bj_cust_").toFile
+    val riskDir = tempDir("graft_bj_risk_").toFile
+    val ckpt = tempDir("graft_bj_ckpt_").toString
     def writeCust(rows: Seq[(String, String, String)]): Unit =
       rows.toDF("email", "birthYear", "seen_str").coalesce(1)
         .write.mode("append").parquet(custDir.getAbsolutePath)
@@ -341,9 +337,9 @@ class RecoverySpec extends SparkSpec {
     // restored from the RocksDB checkpoint), while genuinely new
     // arrivals still match against the static store
     import graft.streaming.{StateStores, StreamingNearDedup}
-    val srcDir = Files.createTempDirectory("graft_nd_src_").toFile
-    val ckpt = Files.createTempDirectory("graft_nd_ckpt_").toString
-    val storeDir = Files.createTempDirectory("graft_nd_store_").toString
+    val srcDir = tempDir("graft_nd_src_").toFile
+    val ckpt = tempDir("graft_nd_ckpt_").toString
+    val storeDir = tempDir("graft_nd_store_").toString
     val tA = "quick brown fox jumps over the lazy dog today"
     val tB = "pack my box with five dozen liquor jugs tonight"
     StreamingNearDedup.storeWrite(
@@ -354,10 +350,10 @@ class RecoverySpec extends SparkSpec {
         .parquet(srcDir.getAbsolutePath)
     def runOnce(): Seq[(Long, Long, Long)] = {
       val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-      StateStores.withRocksDb(spark) {
-        val in = spark.readStream.schema("doc_id LONG, text STRING")
-          .parquet(srcDir.getAbsolutePath)
-        val q = StreamingNearDedup.matchesAgainstStore(
+      val in = spark.readStream.schema("doc_id LONG, text STRING")
+        .parquet(srcDir.getAbsolutePath)
+      val q = Drain.start(spark, StateStores.rocksDbConf)(
+        StreamingNearDedup.matchesAgainstStore(
             in, storeDir, "doc_id", "text", 8000L)
           .writeStream.outputMode("append")
           .option("checkpointLocation", ckpt)
@@ -366,9 +362,8 @@ class RecoverySpec extends SparkSpec {
               (r.getLong(0), r.getLong(1), r.getLong(2)))
             ()
           }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+          .trigger(Trigger.AvailableNow()))
+      q.awaitTermination()
       buf.toSeq.sorted
     }
     // run 1: arrival 10 is an exact copy of store doc 3
@@ -413,27 +408,26 @@ class RecoverySpec extends SparkSpec {
     import graft.streaming.{FunnelStream, StateStores}
     import graft.streaming.FunnelStream.{FEv, StepHit}
     def s(n: Long): Long = n * 1000000000L
-    val srcDir = Files.createTempDirectory("graft_funnel_src_").toFile
-    val ckpt = Files.createTempDirectory("graft_funnel_ckpt_").toString
+    val srcDir = tempDir("graft_funnel_src_").toFile
+    val ckpt = tempDir("graft_funnel_ckpt_").toString
     def write(rows: Seq[FEv]): Unit =
       rows.toDF().coalesce(1).write.mode("append")
         .parquet(srcDir.getAbsolutePath)
     def runOnce(): Seq[StepHit] = {
       val buf = scala.collection.mutable.ArrayBuffer.empty[StepHit]
-      StateStores.withRocksDb(spark) {
-        val in = spark.readStream
-          .schema(org.apache.spark.sql.Encoders.product[FEv].schema)
-          .parquet(srcDir.getAbsolutePath).as[FEv]
-        val q = FunnelStream.stepHits(in).writeStream
+      val in = spark.readStream
+        .schema(org.apache.spark.sql.Encoders.product[FEv].schema)
+        .parquet(srcDir.getAbsolutePath).as[FEv]
+      val q = Drain.start(spark, StateStores.rocksDbConf)(
+        FunnelStream.stepHits(in).writeStream
           .outputMode("append")
           .option("checkpointLocation", ckpt)
           .foreachBatch {
             (batch: org.apache.spark.sql.Dataset[StepHit], _: Long) =>
               buf ++= batch.collect(); ()
           }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+          .trigger(Trigger.AvailableNow()))
+      q.awaitTermination()
       buf.toSeq.sortBy(h => (h.user_id, h.step))
     }
     write(Seq(FEv(1, "view", s(10)), FEv(1, "click", s(20)),
@@ -459,27 +453,26 @@ class RecoverySpec extends SparkSpec {
     import graft.streaming.SessionPathStream.{ClosedPath, PEv}
     def s(n: Long): Long = n * 1000000000L
     val gap = s(1800)
-    val srcDir = Files.createTempDirectory("graft_paths_src_").toFile
-    val ckpt = Files.createTempDirectory("graft_paths_ckpt_").toString
+    val srcDir = tempDir("graft_paths_src_").toFile
+    val ckpt = tempDir("graft_paths_ckpt_").toString
     def write(rows: Seq[PEv]): Unit =
       rows.toDF().coalesce(1).write.mode("append")
         .parquet(srcDir.getAbsolutePath)
     def runOnce(): Seq[ClosedPath] = {
       val buf = scala.collection.mutable.ArrayBuffer.empty[ClosedPath]
-      StateStores.withRocksDb(spark) {
-        val in = spark.readStream
-          .schema(org.apache.spark.sql.Encoders.product[PEv].schema)
-          .parquet(srcDir.getAbsolutePath).as[PEv]
-        val q = SessionPathStream.closedPaths(in, 8, gap).writeStream
+      val in = spark.readStream
+        .schema(org.apache.spark.sql.Encoders.product[PEv].schema)
+        .parquet(srcDir.getAbsolutePath).as[PEv]
+      val q = Drain.start(spark, StateStores.rocksDbConf)(
+        SessionPathStream.closedPaths(in, 8, gap).writeStream
           .outputMode("append")
           .option("checkpointLocation", ckpt)
           .foreachBatch {
             (batch: org.apache.spark.sql.Dataset[ClosedPath], _: Long) =>
               buf ++= batch.collect(); ()
           }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+          .trigger(Trigger.AvailableNow()))
+      q.awaitTermination()
       buf.toSeq.sortBy(p => (p.user_id, p.path))
     }
     write(Seq(PEv(1, 1, s(0), "a"), PEv(1, 2, s(10), "b")))
@@ -498,27 +491,26 @@ class RecoverySpec extends SparkSpec {
     import graft.streaming.{StateStores, TransitionStream}
     import graft.streaming.TransitionStream.{TEv, Transition}
     def s(n: Long): Long = n * 1000000000L
-    val srcDir = Files.createTempDirectory("graft_trans_src_").toFile
-    val ckpt = Files.createTempDirectory("graft_trans_ckpt_").toString
+    val srcDir = tempDir("graft_trans_src_").toFile
+    val ckpt = tempDir("graft_trans_ckpt_").toString
     def write(rows: Seq[TEv]): Unit =
       rows.toDF().coalesce(1).write.mode("append")
         .parquet(srcDir.getAbsolutePath)
     def runOnce(): Seq[Transition] = {
       val buf = scala.collection.mutable.ArrayBuffer.empty[Transition]
-      StateStores.withRocksDb(spark) {
-        val in = spark.readStream
-          .schema(org.apache.spark.sql.Encoders.product[TEv].schema)
-          .parquet(srcDir.getAbsolutePath).as[TEv]
-        val q = TransitionStream.transitions(in).writeStream
+      val in = spark.readStream
+        .schema(org.apache.spark.sql.Encoders.product[TEv].schema)
+        .parquet(srcDir.getAbsolutePath).as[TEv]
+      val q = Drain.start(spark, StateStores.rocksDbConf)(
+        TransitionStream.transitions(in).writeStream
           .outputMode("append")
           .option("checkpointLocation", ckpt)
           .foreachBatch {
             (batch: org.apache.spark.sql.Dataset[Transition], _: Long) =>
               buf ++= batch.collect(); ()
           }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+          .trigger(Trigger.AvailableNow()))
+      q.awaitTermination()
       buf.toSeq.sortBy(t => (t.user_id, t.prev_type, t.cur_type))
     }
     write(Seq(TEv(1, 1, s(10), "view"), TEv(1, 2, s(20), "click"),
@@ -541,8 +533,8 @@ class RecoverySpec extends SparkSpec {
     // latest-wins stamp for updated ones
     import graft.streaming.{RdbBootstrapStream, StateStores}
     import RdbBootstrapStream.{ProfileEvent, ProfileRow, SnapshotRow}
-    val srcDir = Files.createTempDirectory("graft_rdbboot_src_").toFile
-    val ckpt = Files.createTempDirectory("graft_rdbboot_ckpt_").toString
+    val srcDir = tempDir("graft_rdbboot_src_").toFile
+    val ckpt = tempDir("graft_rdbboot_ckpt_").toString
     val snap = Seq(SnapshotRow("a@x", "1950"), SnapshotRow("b@x", "1960"),
       SnapshotRow("c@x", "1970")).toDS()
     def write(rows: Seq[ProfileEvent]): Unit =
@@ -551,11 +543,11 @@ class RecoverySpec extends SparkSpec {
     def runOnce(): Seq[(String, String, Long, Long)] = {
       val buf =
         scala.collection.mutable.ArrayBuffer.empty[(String, String, Long, Long)]
-      StateStores.withRocksDb(spark) {
-        val in = spark.readStream
-          .schema(org.apache.spark.sql.Encoders.product[ProfileEvent].schema)
-          .parquet(srcDir.getAbsolutePath).as[ProfileEvent]
-        val q = RdbBootstrapStream.bootstrappedProfiles(in, snap)
+      val in = spark.readStream
+        .schema(org.apache.spark.sql.Encoders.product[ProfileEvent].schema)
+        .parquet(srcDir.getAbsolutePath).as[ProfileEvent]
+      val q = Drain.start(spark, StateStores.rocksDbConf)(
+        RdbBootstrapStream.bootstrappedProfiles(in, snap)
           .writeStream.outputMode("update")
           .option("checkpointLocation", ckpt)
           .foreachBatch { (batch: org.apache.spark.sql.Dataset[ProfileRow], _: Long) =>
@@ -563,9 +555,8 @@ class RecoverySpec extends SparkSpec {
               (r.email, r.birthYear, r.n_events, r.n_updates))
             ()
           }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+          .trigger(Trigger.AvailableNow()))
+      q.awaitTermination()
       buf.toSeq.sortBy(_._1)
     }
     write(Seq(ProfileEvent("a@x", 10L, 100L, "1999"),
@@ -592,18 +583,18 @@ class RecoverySpec extends SparkSpec {
     // (quota half)
     import graft.streaming.{DomainQuota, StateStores}
     import graft.streaming.DomainQuota.{UrlArrival, UrlAdmitted}
-    val srcDir = Files.createTempDirectory("graft_urladm_src_").toFile
-    val ckpt = Files.createTempDirectory("graft_urladm_ckpt_").toString
+    val srcDir = tempDir("graft_urladm_src_").toFile
+    val ckpt = tempDir("graft_urladm_ckpt_").toString
     def write(rows: Seq[UrlArrival]): Unit =
       rows.toDF().coalesce(1).write.mode("append")
         .parquet(srcDir.getAbsolutePath)
     def runOnce(): Seq[(Long, String, Long)] = {
       val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
-      StateStores.withRocksDb(spark) {
-        val in = spark.readStream
-          .schema(org.apache.spark.sql.Encoders.product[UrlArrival].schema)
-          .parquet(srcDir.getAbsolutePath).as[UrlArrival]
-        val q = DomainQuota.urlAdmitted(in, k = 2L).writeStream
+      val in = spark.readStream
+        .schema(org.apache.spark.sql.Encoders.product[UrlArrival].schema)
+        .parquet(srcDir.getAbsolutePath).as[UrlArrival]
+      val q = Drain.start(spark, StateStores.rocksDbConf)(
+        DomainQuota.urlAdmitted(in, k = 2L).writeStream
           .outputMode("append")
           .option("checkpointLocation", ckpt)
           .foreachBatch {
@@ -611,9 +602,8 @@ class RecoverySpec extends SparkSpec {
               buf ++= batch.collect().map(a =>
                 (a.doc_id, a.url_canon, a.admit_seq)); ()
           }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+          .trigger(Trigger.AvailableNow()))
+      q.awaitTermination()
       buf.toSeq.sorted
     }
     write(Seq(UrlArrival(1L, "a.com", "X")))
@@ -635,18 +625,18 @@ class RecoverySpec extends SparkSpec {
     // may never be admitted OR consume a quota slot, in either life
     import graft.streaming.{AdmissionGate, StateStores}
     val rules = Map("a.com" -> Seq("/p/" -> false, "/p/ok" -> true))
-    val srcDir = Files.createTempDirectory("graft_gate316_src_").toFile
-    val ckpt = Files.createTempDirectory("graft_gate316_ckpt_").toString
+    val srcDir = tempDir("graft_gate316_src_").toFile
+    val ckpt = tempDir("graft_gate316_ckpt_").toString
     def write(rows: Seq[(Long, String, String, String)]): Unit =
       rows.toDF("doc_id", "domain", "path", "url_canon").coalesce(1)
         .write.mode("append").parquet(srcDir.getAbsolutePath)
     def runOnce(): Seq[(Long, String, Long)] = {
       val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
-      StateStores.withRocksDb(spark) {
-        val in = spark.readStream
-          .schema(spark.read.parquet(srcDir.getAbsolutePath).schema)
-          .parquet(srcDir.getAbsolutePath)
-        val q = AdmissionGate.robotsGatedAdmission(in, rules, k = 2L)
+      val in = spark.readStream
+        .schema(spark.read.parquet(srcDir.getAbsolutePath).schema)
+        .parquet(srcDir.getAbsolutePath)
+      val q = Drain.start(spark, StateStores.rocksDbConf)(
+        AdmissionGate.robotsGatedAdmission(in, rules, k = 2L)
           .writeStream
           .outputMode("append")
           .option("checkpointLocation", ckpt)
@@ -656,9 +646,8 @@ class RecoverySpec extends SparkSpec {
               buf ++= batch.collect().map(r =>
                 (r.getLong(0), r.getString(2), r.getLong(3))); ()
           }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+          .trigger(Trigger.AvailableNow()))
+      q.awaitTermination()
       buf.toSeq.sorted
     }
     // run 1: X admitted through the re-allowed subtree; B disallowed

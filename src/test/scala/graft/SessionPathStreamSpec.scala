@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{SessionPathStream, StateStores}
+import graft.streaming.{Drain, SessionPathStream, StateStores}
 import graft.streaming.SessionPathStream.{ClosedPath, OpenSession, PEv}
 
 /** op203's streaming session-path semantics: gap-close emission equals
@@ -49,10 +49,11 @@ class SessionPathStreamSpec extends SparkSpec {
       all.filter(e => e.ts_ns >= s(3000) && e.ts_ns < s(8000)).reverse,
       all.filter(_.ts_ns >= s(8000)).reverse)
     val in = MemoryStream[PEv]
-    val got = StateStores.withRocksDb(spark) {
-      val q = SessionPathStream.closedPaths(in.toDS(), 8, gap)
-        .writeStream.outputMode("append").format("memory")
-        .queryName("paths_tws").start()
+    val got = {
+      val q = Drain.start(spark, StateStores.rocksDbConf)(
+        SessionPathStream.closedPaths(in.toDS(), 8, gap)
+          .writeStream.outputMode("append").format("memory")
+          .queryName("paths_tws"))
       slices.foreach { sl => in.addData(sl); q.processAllAvailable() }
       q.stop()
       spark.table("paths_tws").as[ClosedPath].collect().toSet

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.pipeline.Stedi
-import graft.streaming.Sessionize
+import graft.streaming.{Drain, Sessionize}
 
 /** Streaming semantics through MemoryStream → memory sink: the reference
   * pipelines as actual streaming queries, watermark late-data dropping,
@@ -405,7 +405,7 @@ class StreamingSpec extends SparkSpec {
     // crashing on empty.max in the codebook geometry (ivf-pq)
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.StreamingAnn
-    val dir = java.nio.file.Files.createTempDirectory("graft_empty_idx_")
+    val dir = tempDir("graft_empty_idx_")
     try {
       def cents(p: String): Unit =
         Seq.empty[(Long, Seq[Long], Long)]
@@ -460,7 +460,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.StreamingAnn
     import graft.sources.Tables
     val emb = Tables.embeddings(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_ann_")
+    val dir = tempDir("graft_stream_ann_")
     try {
       Similarity.ivfIndexWrite(emb, s"$dir/ivf", nCells = 16)
       val queries = emb.filter(col("vec_id") < 8)
@@ -499,7 +499,7 @@ class StreamingSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
       .orderBy("doc_id").limit(150).collect()
       .map(r => (r.getLong(0), r.getString(1)))
-    val dir = java.nio.file.Files.createTempDirectory("graft_fp_store_")
+    val dir = tempDir("graft_fp_store_")
     val store = s"$dir/fps"
     try {
       // seed the store with docs 0..99 (a previous run's corpus)
@@ -554,7 +554,7 @@ class StreamingSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
       .orderBy("doc_id").limit(150).collect()
       .map(r => (r.getLong(0), r.getString(1)))
-    val dir = java.nio.file.Files.createTempDirectory("graft_fp_bloom_")
+    val dir = tempDir("graft_fp_bloom_")
     val store = s"$dir/fps"
     try {
       IncrementalDedup.fingerprints(
@@ -579,7 +579,7 @@ class StreamingSpec extends SparkSpec {
       assert(plain == (100L until 150L).toSeq)
       assert(bloom == plain)
       // and against a MISSING store the bloom path bootstraps too
-      val fresh = java.nio.file.Files.createTempDirectory("graft_fp_none_")
+      val fresh = tempDir("graft_fp_none_")
       try {
         val in = MemoryStream[(Long, String)]
         val q = IncrementalDedup.dedupAgainstStoreBloom(
@@ -606,7 +606,7 @@ class StreamingSpec extends SparkSpec {
     // in-stream only, and an existing-but-empty dir behaves the same
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.IncrementalDedup
-    val dir = java.nio.file.Files.createTempDirectory("graft_fp_boot_")
+    val dir = tempDir("graft_fp_boot_")
     try {
       val missing = s"$dir/never_written"
       val in = MemoryStream[(Long, String)]
@@ -645,29 +645,30 @@ class StreamingSpec extends SparkSpec {
     // windowed-agg paths have their own RocksDB cases): same results as
     // the default provider, and the query's state-operator metrics must
     // carry rocksdb* entries — proof the provider actually served the
-    // dropDuplicates state, not just that the conf was set
+    // dropDuplicates state, not just that the conf was set. (The name
+    // keeps the old helper's, so the test id stays stable; the query now
+    // starts through Drain.start with StateStores.rocksDbConf.)
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.{IncrementalDedup, StateStores}
-    val dir = java.nio.file.Files.createTempDirectory("graft_fp_rocks_")
+    val dir = tempDir("graft_fp_rocks_")
     try {
       val store = s"$dir/fps"
       IncrementalDedup.fingerprints(
           Seq((1L, "seeded")).toDF("doc_id", "text"), "text")
         .write.mode("overwrite").parquet(store)
-      StateStores.withRocksDb(spark) {
-        val in = MemoryStream[(Long, String)]
-        val q = IncrementalDedup.dedupAgainstStore(
+      val in = MemoryStream[(Long, String)]
+      val q = Drain.start(spark, StateStores.rocksDbConf)(
+        IncrementalDedup.dedupAgainstStore(
             in.toDF().toDF("doc_id", "text"), store, "text")
           .writeStream.outputMode("append").format("memory")
-          .queryName("inc_dedup_rocks").start()
-        in.addData((2L, "fresh"), (3L, "seeded"), (4L, "fresh"))
-        q.processAllAvailable()
-        val metrics = q.lastProgress.stateOperators.flatMap(
-          _.customMetrics.keySet().toArray(Array.empty[String]))
-        q.stop()
-        assert(metrics.exists(_.startsWith("rocksdb")),
-          s"state metrics carry no rocksdb entries: ${metrics.mkString(",")}")
-      }
+          .queryName("inc_dedup_rocks"))
+      in.addData((2L, "fresh"), (3L, "seeded"), (4L, "fresh"))
+      q.processAllAvailable()
+      val metrics = q.lastProgress.stateOperators.flatMap(
+        _.customMetrics.keySet().toArray(Array.empty[String]))
+      q.stop()
+      assert(metrics.exists(_.startsWith("rocksdb")),
+        s"state metrics carry no rocksdb entries: ${metrics.mkString(",")}")
       assert(spark.table("inc_dedup_rocks").select("doc_id").as[Long]
         .collect().sorted.toSeq == Seq(2L),
         "RocksDB-backed dedup diverged from expected output")
@@ -678,7 +679,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("RocksDB matrix: every streaming state shape runs on the 100TB provider") {
-    // StateStores.withRocksDb is spec'd on the dedup path above; this
+    // StateStores.rocksDbConf is spec'd on the dedup path above; this
     // matrix runs EVERY other stateful streaming shape the library
     // ships under the RocksDB provider — the six online ANN serving
     // legs (TopKAgg / topKDistinct aggregation state) and the
@@ -695,7 +696,7 @@ class StreamingSpec extends SparkSpec {
     val queryVecs = emb.filter(col("vec_id") < 8)
       .select("vec_id", "embedding").collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft_rocks_matrix_")
+    val dir = tempDir("graft_rocks_matrix_")
     def rocksMetrics(q: org.apache.spark.sql.streaming.StreamingQuery)
         : Array[String] =
       q.lastProgress.stateOperators.flatMap(
@@ -721,11 +722,12 @@ class StreamingSpec extends SparkSpec {
         "op120_ivfpq" ->
           (df => StreamingAnn.ivfPqProbeStream(df, s"$dir/ivfpq", 5)))
       for ((name, leg) <- annLegs) {
-        StateStores.withRocksDb(spark) {
+        locally {
           val in = MemoryStream[(Long, Seq[Float])]
-          val q = leg(in.toDF().toDF("vec_id", "embedding"))
-            .writeStream.outputMode("complete").format("memory")
-            .queryName(s"rocks_$name").start()
+          val q = Drain.start(spark, StateStores.rocksDbConf)(
+            leg(in.toDF().toDF("vec_id", "embedding"))
+              .writeStream.outputMode("complete").format("memory")
+              .queryName(s"rocks_$name"))
           in.addData(queryVecs)
           q.processAllAvailable()
           val metrics = rocksMetrics(q)
@@ -739,11 +741,12 @@ class StreamingSpec extends SparkSpec {
         spark.sql(s"DROP VIEW IF EXISTS rocks_$name")
       }
       // the changelog's fMGWS state (op108): one held row per key
-      StateStores.withRocksDb(spark) {
+      locally {
         val in = MemoryStream[Changelog.Change]
-        val q = Changelog.latestState(in.toDS())
-          .writeStream.outputMode("update").format("memory")
-          .queryName("rocks_changelog").start()
+        val q = Drain.start(spark, StateStores.rocksDbConf)(
+          Changelog.latestState(in.toDS())
+            .writeStream.outputMode("update").format("memory")
+            .queryName("rocks_changelog"))
         in.addData(
           Changelog.Change(1L, 10L, 100L, "upd", 5L),
           Changelog.Change(1L, 11L, 200L, "upd", 7L),
@@ -757,12 +760,13 @@ class StreamingSpec extends SparkSpec {
       }
       // the streaming SCD2's open-version state (op131): one typed
       // ValueState row per (user, event_type) under transformWithState
-      StateStores.withRocksDb(spark) {
+      locally {
         import graft.streaming.ScdStream
         val in = MemoryStream[ScdStream.Ev]
-        val q = ScdStream.closedIntervals(in.toDS())
-          .writeStream.outputMode("append").format("memory")
-          .queryName("rocks_scd2").start()
+        val q = Drain.start(spark, StateStores.rocksDbConf)(
+          ScdStream.closedIntervals(in.toDS())
+            .writeStream.outputMode("append").format("memory")
+            .queryName("rocks_scd2"))
         in.addData(
           ScdStream.Ev(1L, "a", 10L, 1L, 50000L),
           ScdStream.Ev(1L, "a", 20L, 2L, 70000L),
@@ -780,7 +784,7 @@ class StreamingSpec extends SparkSpec {
       spark.sql("DROP VIEW IF EXISTS rocks_scd2")
       // the production bounded join's symmetric-hash state (op123):
       // both sides' keyed state lives in the provider under swap too
-      StateStores.withRocksDb(spark) {
+      locally {
         import graft.pipeline.Stedi
         val customers = MemoryStream[(String, String, String)]
         val risks = MemoryStream[(String, String, String)]
@@ -788,9 +792,10 @@ class StreamingSpec extends SparkSpec {
           .select(col("email"), col("birthYear"),
             col("seen_str").cast("timestamp").as("seenAt"))
         val riskDf = risks.toDF().toDF("customer", "score", "riskDate")
-        val q = Stedi.joinRiskBounded(riskDf, custDf, maxAge = "1 hour")
-          .writeStream.outputMode("append").format("memory")
-          .queryName("rocks_bounded_join").start()
+        val q = Drain.start(spark, StateStores.rocksDbConf)(
+          Stedi.joinRiskBounded(riskDf, custDf, maxAge = "1 hour")
+            .writeStream.outputMode("append").format("memory")
+            .queryName("rocks_bounded_join"))
         customers.addData(("a@test.com", "1950", "2024-01-01 10:00:00"))
         risks.addData(("a@test.com", "5.0", "2024-01-01T10:30:00.000Z"))
         q.processAllAvailable()
@@ -831,7 +836,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.StreamingAnn
     import graft.sources.Tables
     val emb = Tables.embeddings(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_lsh_")
+    val dir = tempDir("graft_stream_lsh_")
     try {
       Similarity.lshIndexWrite(emb, s"$dir/lsh")
       val queries = emb.filter(col("vec_id") < 8)
@@ -869,7 +874,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.StreamingAnn
     import graft.sources.Tables
     val emb = Tables.embeddings(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_sq8_")
+    val dir = tempDir("graft_stream_sq8_")
     try {
       Similarity.sq8IndexWrite(emb, s"$dir/sq8", nCells = 16, lloydIters = 2)
       val queries = emb.filter(col("vec_id") < 4)
@@ -936,7 +941,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.StreamingAnn
     import graft.sources.Tables
     val emb = Tables.embeddings(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_pq_")
+    val dir = tempDir("graft_stream_pq_")
     try {
       Similarity.pqIndexWrite(emb, s"$dir/pq", m = 8, nCents = 16)
       val queries = emb.filter(col("vec_id") < 4)
@@ -1099,7 +1104,7 @@ class StreamingSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
       .orderBy("doc_id").limit(200).collect()
       .map(r => (r.getLong(0), r.getString(1)))
-    val dir = java.nio.file.Files.createTempDirectory("graft_decon_")
+    val dir = tempDir("graft_decon_")
     try {
       StreamingDecontaminate.storeWrite(
         spark.createDataFrame(docs.filter(_._1 % 50 == 0).toSeq)
@@ -1143,7 +1148,7 @@ class StreamingSpec extends SparkSpec {
     // instead of crashing at the static-side read
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.{StreamingDecontaminate, StreamingNearDedup}
-    val dir = java.nio.file.Files.createTempDirectory("graft_boot_r9_")
+    val dir = tempDir("graft_boot_r9_")
     try {
       val rows = Seq(
         (1L, "quick brown fox jumps over dogs"),
@@ -1191,7 +1196,7 @@ class StreamingSpec extends SparkSpec {
       case (22L, _) => (22L, texts(21L))
       case other    => other
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft_neardup_")
+    val dir = tempDir("graft_neardup_")
     try {
       StreamingNearDedup.storeWrite(
         spark.createDataFrame(corpus.filter(_._1 % 3 == 0).toSeq)
@@ -1207,23 +1212,22 @@ class StreamingSpec extends SparkSpec {
       assert(pairs.contains((10L, 9L)) && pairs.contains((22L, 21L)),
         s"planted copies not matched: $want")
       def run(tag: String, rocks: Boolean): Seq[(Long, Long, Long)] = {
-        def go(): Seq[(Long, Long, Long)] = {
-          val in = MemoryStream[(Long, String)]
-          val q = StreamingNearDedup.matchesAgainstStore(
+        val in = MemoryStream[(Long, String)]
+        val q = Drain.start(spark,
+            if (rocks) StateStores.rocksDbConf else Map.empty)(
+          StreamingNearDedup.matchesAgainstStore(
               in.toDF().toDF("doc_id", "text"), dir.toString,
               "doc_id", "text", 8000L)
             .writeStream.outputMode("append").format("memory")
-            .queryName(tag).start()
-          // two micro-batches so the band join runs incrementally
-          in.addData(streamRows.take(20))
-          q.processAllAvailable()
-          in.addData(streamRows.drop(20))
-          q.processAllAvailable()
-          q.stop()
-          spark.table(tag).collect()
-            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
-        }
-        if (rocks) StateStores.withRocksDb(spark)(go()) else go()
+            .queryName(tag))
+        // two micro-batches so the band join runs incrementally
+        in.addData(streamRows.take(20))
+        q.processAllAvailable()
+        in.addData(streamRows.drop(20))
+        q.processAllAvailable()
+        q.stop()
+        spark.table(tag).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq
       }
       assert(run("neardup_default", rocks = false) == want)
       assert(run("neardup_rocksdb", rocks = true) == want)
@@ -1313,7 +1317,7 @@ class StreamingSpec extends SparkSpec {
     // formula (op306Cutoff scaladoc): only the Jan-01 window closes
     // (end Jan-02 ≤ Jan-02 12:00); a max(ts)−24h cutoff would wrongly
     // keep Jan-02 too.
-    val dir = java.nio.file.Files.createTempDirectory("graft_op306_open_")
+    val dir = tempDir("graft_op306_open_")
     // the sf layout is a single FILE per table (the streaming drain
     // symlinks it as one file) — write the dir, then move the part out
     def writeOne(df: org.apache.spark.sql.DataFrame, name: String): Unit = {

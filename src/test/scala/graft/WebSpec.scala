@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.functions.Urls
-import graft.streaming.{DomainQuota, StateStores}
+import graft.streaming.{DomainQuota, Drain, StateStores}
 
 /** Web-curation primitives: URL canonicalization semantics and the
   * streaming domain-quota's cross-trigger state contract. */
@@ -418,22 +418,21 @@ class WebSpec extends SparkSpec {
   test("op315 URL admission: dedup + quota share one bounded state across triggers") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String, String)]
-    StateStores.withRocksDb(spark) {
-      val arrivals = in.toDF().toDF("doc_id", "domain", "url_canon")
-        .as[DomainQuota.UrlArrival]
-      val q = DomainQuota.urlAdmitted(arrivals, k = 2L)
+    val arrivals = in.toDF().toDF("doc_id", "domain", "url_canon")
+      .as[DomainQuota.UrlArrival]
+    val q = Drain.start(spark, StateStores.rocksDbConf)(
+      DomainQuota.urlAdmitted(arrivals, k = 2L)
         .toDF().writeStream.outputMode("append").format("memory")
-        .queryName("url_admit_out").start()
-      // trigger 1: X admitted (doc 1), X's dup (doc 2) dropped by the
-      // DEDUP half, Y admitted (doc 3) — quota now full
-      in.addData((1L, "a.com", "X"), (2L, "a.com", "X"), (3L, "a.com", "Y"))
-      q.processAllAvailable()
-      // trigger 2: X re-arrival must stay dropped (admitted set
-      // persisted), Z must be dropped by the QUOTA half, b.com fresh
-      in.addData((4L, "a.com", "X"), (5L, "a.com", "Z"), (6L, "b.com", "W"))
-      q.processAllAvailable()
-      q.stop()
-    }
+        .queryName("url_admit_out"))
+    // trigger 1: X admitted (doc 1), X's dup (doc 2) dropped by the
+    // DEDUP half, Y admitted (doc 3) — quota now full
+    in.addData((1L, "a.com", "X"), (2L, "a.com", "X"), (3L, "a.com", "Y"))
+    q.processAllAvailable()
+    // trigger 2: X re-arrival must stay dropped (admitted set
+    // persisted), Z must be dropped by the QUOTA half, b.com fresh
+    in.addData((4L, "a.com", "X"), (5L, "a.com", "Z"), (6L, "b.com", "W"))
+    q.processAllAvailable()
+    q.stop()
     val out = spark.table("url_admit_out")
       .select("doc_id", "domain", "url_canon", "admit_seq")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2),
@@ -452,16 +451,15 @@ class WebSpec extends SparkSpec {
     // prefix-take would keep the k LARGEST)
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String)]
-    StateStores.withRocksDb(spark) {
-      val arrivals = in.toDF().toDF("doc_id", "domain")
-        .as[DomainQuota.DocArrival]
-      val q = DomainQuota.admitted(arrivals, k = 5L)
+    val arrivals = in.toDF().toDF("doc_id", "domain")
+      .as[DomainQuota.DocArrival]
+    val q = Drain.start(spark, StateStores.rocksDbConf)(
+      DomainQuota.admitted(arrivals, k = 5L)
         .toDF().writeStream.outputMode("append").format("memory")
-        .queryName("hot_quota_out").start()
-      in.addData((20000L to 1L by -1L).map(i => (i, "hot.com")))
-      q.processAllAvailable()
-      q.stop()
-    }
+        .queryName("hot_quota_out"))
+    in.addData((20000L to 1L by -1L).map(i => (i, "hot.com")))
+    q.processAllAvailable()
+    q.stop()
     val out = spark.table("hot_quota_out")
       .select("doc_id", "admit_seq")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
@@ -477,17 +475,16 @@ class WebSpec extends SparkSpec {
     // Sequential-in-doc_id-order semantics admit A@3 then B@4.
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String, String)]
-    StateStores.withRocksDb(spark) {
-      val arrivals = in.toDF().toDF("doc_id", "domain", "url_canon")
-        .as[DomainQuota.UrlArrival]
-      val q = DomainQuota.urlAdmitted(arrivals, k = 2L)
+    val arrivals = in.toDF().toDF("doc_id", "domain", "url_canon")
+      .as[DomainQuota.UrlArrival]
+    val q = Drain.start(spark, StateStores.rocksDbConf)(
+      DomainQuota.urlAdmitted(arrivals, k = 2L)
         .toDF().writeStream.outputMode("append").format("memory")
-        .queryName("evict_admit_out").start()
-      in.addData((10L, "a.com", "A"), (4L, "a.com", "B"), (6L, "a.com", "C"),
-        (3L, "a.com", "A"), (5L, "a.com", "D"))
-      q.processAllAvailable()
-      q.stop()
-    }
+        .queryName("evict_admit_out"))
+    in.addData((10L, "a.com", "A"), (4L, "a.com", "B"), (6L, "a.com", "C"),
+      (3L, "a.com", "A"), (5L, "a.com", "D"))
+    q.processAllAvailable()
+    q.stop()
     val out = spark.table("evict_admit_out")
       .select("doc_id", "url_canon", "admit_seq")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -504,17 +501,16 @@ class WebSpec extends SparkSpec {
     // one and then corrupted the other's eviction — r14 review find)
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String, String)]
-    StateStores.withRocksDb(spark) {
-      val arrivals = in.toDF().toDF("doc_id", "domain", "url_canon")
-        .as[DomainQuota.UrlArrival]
-      val q = DomainQuota.urlAdmitted(arrivals, k = 2L)
+    val arrivals = in.toDF().toDF("doc_id", "domain", "url_canon")
+      .as[DomainQuota.UrlArrival]
+    val q = Drain.start(spark, StateStores.rocksDbConf)(
+      DomainQuota.urlAdmitted(arrivals, k = 2L)
         .toDF().writeStream.outputMode("append").format("memory")
-        .queryName("dup_doc_admit_out").start()
-      in.addData((7L, "a.com", "U1"), (7L, "a.com", "U2"),
-        (3L, "a.com", "U1"))
-      q.processAllAvailable()
-      q.stop()
-    }
+        .queryName("dup_doc_admit_out"))
+    in.addData((7L, "a.com", "U1"), (7L, "a.com", "U2"),
+      (3L, "a.com", "U1"))
+    q.processAllAvailable()
+    q.stop()
     val out = spark.table("dup_doc_admit_out")
       .select("doc_id", "url_canon", "admit_seq")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -554,22 +550,21 @@ class WebSpec extends SparkSpec {
   test("op309 domain quota depletes ACROSS triggers (RocksDB state)") {
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[(Long, String)]
-    StateStores.withRocksDb(spark) {
-      val arrivals = in.toDF().toDF("doc_id", "domain")
-        .as[DomainQuota.DocArrival]
-      val q = DomainQuota.admitted(arrivals, k = 2L)
+    val arrivals = in.toDF().toDF("doc_id", "domain")
+      .as[DomainQuota.DocArrival]
+    val q = Drain.start(spark, StateStores.rocksDbConf)(
+      DomainQuota.admitted(arrivals, k = 2L)
         .toDF().writeStream.outputMode("append").format("memory")
-        .queryName("quota_out").start()
-      // trigger 1: three a.com docs -> quota 2 admits the two smallest
-      // doc_ids (the deterministic within-trigger rule)
-      in.addData((5L, "a.com"), (3L, "a.com"), (9L, "a.com"))
-      q.processAllAvailable()
-      // trigger 2: a.com is EXHAUSTED (state must persist across the
-      // trigger), b.com starts fresh
-      in.addData((1L, "a.com"), (7L, "b.com"))
-      q.processAllAvailable()
-      q.stop()
-    }
+        .queryName("quota_out"))
+    // trigger 1: three a.com docs -> quota 2 admits the two smallest
+    // doc_ids (the deterministic within-trigger rule)
+    in.addData((5L, "a.com"), (3L, "a.com"), (9L, "a.com"))
+    q.processAllAvailable()
+    // trigger 2: a.com is EXHAUSTED (state must persist across the
+    // trigger), b.com starts fresh
+    in.addData((1L, "a.com"), (7L, "b.com"))
+    q.processAllAvailable()
+    q.stop()
     val out = spark.table("quota_out")
       .select("doc_id", "domain", "admit_seq")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -585,27 +580,26 @@ class WebSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.Politeness
     val in = MemoryStream[(Long, String, Long, Long)]
-    StateStores.withRocksDb(spark) {
-      val arrivals = in.toDF().toDF("doc_id", "domain", "fetch_s", "delay_s")
-        .as[Politeness.Fetch]
-      val q = Politeness.admitted(arrivals)
+    val arrivals = in.toDF().toDF("doc_id", "domain", "fetch_s", "delay_s")
+      .as[Politeness.Fetch]
+    val q = Drain.start(spark, StateStores.rocksDbConf)(
+      Politeness.admitted(arrivals)
         .toDF().writeStream.outputMode("append").format("memory")
-        .queryName("polite_out").start()
-      // trigger 1, UNSORTED arrival: the processor must fold in
-      // (fetch_s, doc_id) order — 100 admits, 130 is 30 s after and
-      // drops under a.com's 60 s Crawl-delay (a wrong unordered fold
-      // would admit 130 then drop 100)
-      in.addData((2L, "a.com", 130L, 60L), (1L, "a.com", 100L, 60L))
-      q.processAllAvailable()
-      // trigger 2: state carries last=100 — 90 is LATE (before the
-      // admitted fetch, must reject, never rewind state), 150 < 160
-      // rejects, 161 admits; b.com's first arrival always admits and
-      // its own (shorter) Crawl-delay applies per domain
-      in.addData((3L, "a.com", 150L, 60L), (5L, "a.com", 90L, 60L),
-        (4L, "a.com", 161L, 60L), (6L, "b.com", 10L, 30L))
-      q.processAllAvailable()
-      q.stop()
-    }
+        .queryName("polite_out"))
+    // trigger 1, UNSORTED arrival: the processor must fold in
+    // (fetch_s, doc_id) order — 100 admits, 130 is 30 s after and
+    // drops under a.com's 60 s Crawl-delay (a wrong unordered fold
+    // would admit 130 then drop 100)
+    in.addData((2L, "a.com", 130L, 60L), (1L, "a.com", 100L, 60L))
+    q.processAllAvailable()
+    // trigger 2: state carries last=100 — 90 is LATE (before the
+    // admitted fetch, must reject, never rewind state), 150 < 160
+    // rejects, 161 admits; b.com's first arrival always admits and
+    // its own (shorter) Crawl-delay applies per domain
+    in.addData((3L, "a.com", 150L, 60L), (5L, "a.com", 90L, 60L),
+      (4L, "a.com", 161L, 60L), (6L, "b.com", 10L, 30L))
+    q.processAllAvailable()
+    q.stop()
     val out = spark.table("polite_out")
       .select("doc_id", "domain", "fetch_s", "admit_seq")
       .collect()
