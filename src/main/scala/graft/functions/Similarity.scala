@@ -323,39 +323,43 @@ object Similarity {
         quantize(col("embedding")).as("vec"))
       .withColumn("n2", intDot(col("vec"), col("vec")))
       .localCheckpoint()
-    var cents = vecs.orderBy(col("vec_id")).limit(nCells)
+    val seeds = vecs.orderBy(col("vec_id")).limit(nCells)
       .select(col("vec_id").as("cent_id"), col("vec").as("cent_vec"),
         col("n2").as("cent_n2"))
       .localCheckpoint()
-    for (_ <- 0 until iters) {
-      val assigned = vecs.crossJoin(broadcast(cents))
+    (0 until iters).foldLeft(seeds) { (cents, _) =>
+      val scored = vecs.crossJoin(broadcast(cents))
         .select(col("vec_id"), col("vec"), col("cent_id"),
           cosBpFrom(intDot(col("vec"), col("cent_vec")),
             col("n2"), col("cent_n2")).as("cent_cos"))
-        .groupBy(col("vec_id"))
-        .agg(
-          max_by(col("cent_id"), struct(col("cent_cos"), -col("cent_id")))
-            .as("cent_id"),
-          first(col("vec")).as("vec"))
-      // element-wise integer mean in ONE hash aggregate: 64 per-position
-      // sums as plain columns (bounded state, map-side partials) instead
-      // of posexplode + positional groupBy + array reassembly
-      val sums = (0 until dim).map(i =>
-        sum(element_at(col("vec"), i + 1)).as(s"m$i"))
-      val meanVec = array((0 until dim).map(i =>
-        (col(s"m$i").cast("double") / col("n")).cast("bigint")): _*)
-      val means = assigned
-        .groupBy(col("cent_id"))
-        .agg(count(lit(1)).as("n"), sums: _*)
-        .select(col("cent_id"), meanVec.as("cent_vec"))
-        .withColumn("cent_n2", intDot(col("cent_vec"), col("cent_vec")))
-      // empty cells vanish from `means`; retain their previous centroid
-      cents = means
-        .unionByName(cents.join(means.select(col("cent_id")),
-          Seq("cent_id"), "left_anti"))
-        .localCheckpoint()
+      lloydUpdate(nearestCell(scored, "vec_id", Seq("vec")), cents,
+        Seq("cent_id"), "vec", dim)
     }
-    cents
+  }
+
+  /** One integer-Lloyd mean update, shared by [[lloydCentroids]] and the
+    * PQ codebook: each `keys` group of `assigned` becomes the
+    * element-wise integer mean of its `vecCol` members (`width`
+    * positions) plus its norm; a group that won no members keeps its row
+    * of `prev`. Returns (keys…, cent_vec, cent_n2), checkpointed. */
+  private def lloydUpdate(assigned: DataFrame, prev: DataFrame,
+      keys: Seq[String], vecCol: String, width: Int): DataFrame = {
+    // element-wise integer mean in ONE hash aggregate: per-position sums
+    // as plain columns (bounded state, map-side partials) instead of
+    // posexplode + positional groupBy + array reassembly
+    val sums = (0 until width).map(i =>
+      sum(element_at(col(vecCol), i + 1)).as(s"m$i"))
+    val meanVec = array((0 until width).map(i =>
+      (col(s"m$i").cast("double") / col("n")).cast("bigint")): _*)
+    val means = assigned
+      .groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n"), sums: _*)
+      .select(keys.map(col) :+ meanVec.as("cent_vec"): _*)
+      .withColumn("cent_n2", intDot(col("cent_vec"), col("cent_vec")))
+    // empty cells vanish from `means`; retain their previous centroid
+    means
+      .unionByName(prev.join(means.select(keys.map(col): _*), keys, "left_anti"))
+      .localCheckpoint()
   }
 
   /** IVF-flat ANN: partition the corpus into `nCells` inverted lists by
@@ -400,20 +404,24 @@ object Similarity {
     (cents, assignCells(corpus, broadcast(cents)))
   }
 
-  /** Nearest-centroid assignment of `df` against broadcast `cents`:
-    * (n_id, cent_id, n_id_vec, n_id_n2) — the deterministic max-cos /
-    * lowest-cent_id rule shared by the index builds and every append.
-    * An aggregation, not a window: max_by with a total tiebreak does
-    * map-side partials and shuffles N rows, not N×nCells; vec/n2 are
-    * constant per group. */
-  private def assignCells(df: DataFrame, cents: DataFrame): DataFrame =
-    cellScored(df, "n_id", cents)
-      .groupBy(col("n_id"))
-      .agg(
-        max_by(col("cent_id"), struct(col("cent_cos"), -col("cent_id")))
+  /** Nearest IVF cell per `key` of a (key, cent_id, cent_cos, carry…)
+    * scored frame: the deterministic max-cos / lowest-cent_id rule
+    * shared by Lloyd training, the index builds and every append, with
+    * the `carry` columns (constant per key) riding along. An
+    * aggregation, not a window: max_by with a total tiebreak does
+    * map-side partials and shuffles N rows, not N×nCells. */
+  private def nearestCell(scored: DataFrame, key: String,
+      carry: Seq[String]): DataFrame =
+    scored.groupBy(col(key))
+      .agg(max_by(col("cent_id"), struct(col("cent_cos"), -col("cent_id")))
           .as("cent_id"),
-        first(col("n_id_vec")).as("n_id_vec"),
-        first(col("n_id_n2")).as("n_id_n2"))
+        carry.map(c => first(col(c)).as(c)): _*)
+
+  /** Nearest-centroid assignment of `df` against broadcast `cents`:
+    * (n_id, cent_id, n_id_vec, n_id_n2). */
+  private def assignCells(df: DataFrame, cents: DataFrame): DataFrame =
+    nearestCell(cellScored(df, "n_id", cents), "n_id",
+      Seq("n_id_vec", "n_id_n2"))
 
   /** Probe a (centroids, cells) IVF index: nProbe best cells per query,
     * exact rescoring within them. Identical output to [[ivfTopK]]. */
@@ -727,48 +735,31 @@ object Similarity {
     // subvector table
     val seedVecs = corpus.orderBy(col("vec_id")).limit(nCents)
     val wseed = Window.partitionBy(col("sub_j")).orderBy(col("vec_id"))
-    var cents = subVectorTable(seedVecs, m, subDim)
+    val seeds = subVectorTable(seedVecs, m, subDim)
       .withColumn("rn", row_number().over(wseed))
       .select(col("sub_j"), (col("rn") - 1).cast("bigint").as("code"),
         col("svec").as("cent_vec"), col("s2").as("cent_n2"))
       .localCheckpoint()
-    for (_ <- 0 until iters) {
-      val assigned = sv.join(broadcast(cents), "sub_j")
-        .withColumn("d2", col("s2") -
-          lit(2L) * intDot(col("svec"), col("cent_vec")) + col("cent_n2"))
-        .groupBy(col("vec_id"), col("sub_j"))
-        .agg(min_by(col("code"), struct(col("d2"), col("code"))).as("code"),
-          first(col("svec")).as("svec"))
-      // element-wise integer mean in ONE hash aggregate: subDim per-
-      // position sums as plain columns (bounded state, map-side partials)
-      // instead of posexplode + positional groupBy + array reassembly
-      val sums = (0 until subDim).map(i =>
-        sum(element_at(col("svec"), i + 1)).as(s"m$i"))
-      val meanVec = array((0 until subDim).map(i =>
-        (col(s"m$i").cast("double") / col("n")).cast("bigint")): _*)
-      val means = assigned
-        .groupBy(col("sub_j"), col("code"))
-        .agg(count(lit(1)).as("n"), sums: _*)
-        .select(col("sub_j"), col("code"), meanVec.as("cent_vec"))
-        .withColumn("cent_n2", intDot(col("cent_vec"), col("cent_vec")))
-      cents = means.unionByName(
-          cents.join(means.select(col("sub_j"), col("code")),
-            Seq("sub_j", "code"), "left_anti"))
-        .localCheckpoint()
+    (0 until iters).foldLeft(seeds) { (cents, _) =>
+      lloydUpdate(pqEncode(sv, cents, Seq("svec")), cents,
+        Seq("sub_j", "code"), "svec", subDim)
     }
-    cents
   }
 
   /** PQ-encode: each vector → m small codes (nearest sub-centroid by
-    * integer L2², ties to the lower code). (vec_id, sub_j, code) — at
-    * m=8, nCents=16 that is 8×4 bits = 4 BYTES per vector, vs 256 bytes
-    * of float32: the reason PQ is the 100 TB in-memory ANN path. */
-  private def pqEncode(sv: DataFrame, cents: DataFrame): DataFrame =
-    sv.join(broadcast(cents), "sub_j")
+    * integer L2², ties to the lower code). (vec_id, sub_j, code,
+    * carry…) — the `carry` columns (constant per (vec_id, sub_j)) ride
+    * along in the same aggregate. At m=8, nCents=16 that is 8×4 bits =
+    * 4 BYTES per vector, vs 256 bytes of float32: the reason PQ is the
+    * 100 TB in-memory ANN path. */
+  private def pqEncode(sv: DataFrame, cb: DataFrame,
+      carry: Seq[String] = Nil): DataFrame =
+    sv.join(broadcast(cb), "sub_j")
       .withColumn("d2", col("s2") -
         lit(2L) * intDot(col("svec"), col("cent_vec")) + col("cent_n2"))
       .groupBy(col("vec_id"), col("sub_j"))
-      .agg(min_by(col("code"), struct(col("d2"), col("code"))).as("code"))
+      .agg(min_by(col("code"), struct(col("d2"), col("code"))).as("code"),
+        carry.map(c => first(col(c)).as(c)): _*)
 
   /** Product-quantization ANN top-k (asymmetric distance computation):
     * corpus vectors are m 4-bit codes; a query precomputes its partial
@@ -980,14 +971,9 @@ object Similarity {
       .withColumn("s2", intDot(col("svec"), col("svec")))
       .localCheckpoint()
     val cb = pqCodebook(sv, corpus, m, nCents, pqLloyd, dim)
-    // pqEncode plus the cell tag (constant per vec_id) in the same
+    // the cell tag (constant per vec_id) rides in the encode's
     // aggregate — the one shuffle the encode already pays
-    val codes = sv.join(broadcast(cb), "sub_j")
-      .withColumn("d2", col("s2") -
-        lit(2L) * intDot(col("svec"), col("cent_vec")) + col("cent_n2"))
-      .groupBy(col("vec_id"), col("sub_j"))
-      .agg(min_by(col("code"), struct(col("d2"), col("code"))).as("code"),
-        first(col("cent_id")).as("cent_id"))
+    val codes = pqEncode(sv, cb, Seq("cent_id"))
     val nv = cells.select(col("n_id"), col("n_id_vec").as("n_vec"),
       col("n_id_n2").as("n_n2"))
     (cents, cb, codes, nv)
@@ -1230,14 +1216,9 @@ object Similarity {
   def semCells(corpus: DataFrame, nCells: Int = 16,
       lloydIters: Int = 2): DataFrame = {
     val cents = broadcast(lloydCentroids(corpus, nCells, lloydIters))
-    // nearest-centroid assignment: same argmax + lower-id tiebreak as
-    // the IVF corpus side
-    cellScored(corpus, "v", cents)
-      .groupBy(col("v"))
-      .agg(max_by(col("cent_id"), struct(col("cent_cos"), -col("cent_id")))
-          .as("cent_id"),
-        first(col("v_vec")).as("vec"), first(col("v_n2")).as("n2"))
-      .select(col("v").as("id"), col("vec"), col("n2"), col("cent_id"))
+    assignCells(corpus, cents)
+      .select(col("n_id").as("id"), col("n_id_vec").as("vec"),
+        col("n_id_n2").as("n2"), col("cent_id"))
   }
 
   /** The dedup half of [[semDedup]]: id-greedy within-cell dominance
@@ -1480,15 +1461,10 @@ object Similarity {
     * (q_id, rank, n_id, cos_bp) rows, top `kOut` per query. */
   private def beamTopKOut(b: DataFrame, q: DataFrame, nc: DataFrame,
       kOut: Int): DataFrame =
-    b.join(q, "q_id").join(nc, "cand")
-      .select(col("q_id"), col("cand").as("n_id"),
-        cosBpFrom(intDot(col("q_vec"), col("c_vec")),
-          col("q_n2"), col("c_n2")).as("cos_bp"))
-      .withColumn("rank", row_number()
-        .over(Window.partitionBy("q_id")
-          .orderBy(col("cos_bp").desc, col("n_id")))
-        .cast("bigint"))
-      .filter(col("rank") <= kOut)
+    topKPerQuery(b.join(q, "q_id").join(nc, "cand")
+        .select(col("q_id"), col("cand").as("n_id"),
+          cosBpFrom(intDot(col("q_vec"), col("c_vec")),
+            col("q_n2"), col("c_n2")).as("cos_bp")), kOut)
       .select(col("q_id"), col("rank"), col("n_id"), col("cos_bp"))
 
   /** Persist the HNSW upper layer over `emb` next to an [[nndIndexWrite]]

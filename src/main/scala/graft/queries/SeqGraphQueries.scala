@@ -422,6 +422,19 @@ object SeqGraphQueries {
 
   // ---------------------------------------------------------------- op202
 
+  /** One k-core peel step, shared by op202 and op293: the vertices (v)
+    * of the symmetric edge list `und` (p1, p2) with degree ≥ k. */
+  private def kCoreKeep(und: DataFrame, k: Int): DataFrame =
+    und.groupBy(col("p1")).agg(count(lit(1)).as("deg"))
+      .filter(col("deg") >= k)
+      .select(col("p1").as("v"))
+
+  /** `und` restricted to the edges with both endpoints in `keep` (v). */
+  private def kCoreRestrict(und: DataFrame, keep: DataFrame): DataFrame =
+    und.join(keep.select(col("v").as("p1")), "p1")
+      .join(keep.select(col("v").as("p2")), "p2")
+      .select(col("p1"), col("p2"))
+
   /** op202 core parameter and peel-round unroll depth. */
   private val kcoreK = 3
   private val kcoreRounds = 10
@@ -467,19 +480,13 @@ object SeqGraphQueries {
           lit(nAlive).as("n_before"), lit(nAlive).as("n_core"),
           lit(0L).as("n_removed"))
       else {
-        val keep = und.groupBy("p1").agg(count(lit(1)).as("deg"))
-          .where(col("deg") >= kcoreK)
-          .select(col("p1").as("v")).localCheckpoint()
+        val keep = kCoreKeep(und, kcoreK).localCheckpoint()
         val nNext = keep.count()
         val row = s.range(1).select(lit(r.toLong).as("round"),
           lit(nAlive).as("n_before"), lit(nNext).as("n_core"),
           lit(nAlive - nNext).as("n_removed"))
         converged = nNext == nAlive
-        if (!converged)
-          und = und
-            .join(keep.select(col("v").as("p1")), "p1")
-            .join(keep.select(col("v").as("p2")), "p2")
-            .select("p1", "p2").localCheckpoint()
+        if (!converged) und = kCoreRestrict(und, keep).localCheckpoint()
         nAlive = nNext
         row
       }
@@ -753,14 +760,7 @@ object SeqGraphQueries {
     var round = 0
     var stable = false
     while (!stable && round < kCoreMaxRounds) {
-      val keep = und.groupBy(col("p1"))
-        .agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= kCoreK)
-        .select(col("p1").as("kv"))
-      und = und
-        .join(keep.select(col("kv").as("p1")), "p1")
-        .join(keep.select(col("kv").as("p2")), "p2")
-        .select(col("p1"), col("p2")).localCheckpoint()
+      und = kCoreRestrict(und, kCoreKeep(und, kCoreK)).localCheckpoint()
       val nv = und.select(col("p1")).distinct().count()
       stable = nv == prevV
       prevV = nv
@@ -2395,18 +2395,8 @@ object SeqGraphQueries {
          |  (SELECT CAST(count(*) AS BIGINT) FROM a${r - 1})
          |    - (SELECT CAST(count(*) AS BIGINT) FROM a$r) AS n_removed""".stripMargin
     }.mkString("\nUNION ALL\n")
-    s"""WITH li AS MATERIALIZED (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       |small AS MATERIALIZED (SELECT l_orderkey FROM li GROUP BY 1
-       |          HAVING count(*) <= $prBasketCap),
-       |li2 AS MATERIALIZED (SELECT li.l_orderkey, li.l_partkey
-       |        FROM li JOIN small USING (l_orderkey)),
-       |pairs AS MATERIALIZED (SELECT a.l_partkey AS p1, b.l_partkey AS p2
-       |          FROM li2 a JOIN li2 b ON a.l_orderkey = b.l_orderkey
-       |            AND a.l_partkey < b.l_partkey
-       |          GROUP BY 1, 2 HAVING count(*) >= 2),
-       |und AS MATERIALIZED (SELECT p1, p2 FROM pairs
-       |        UNION ALL SELECT p2, p1 FROM pairs),
-       |a0 AS MATERIALIZED (SELECT DISTINCT p1 AS v FROM und),
+    s"""WITH $graphBaseSql,
+       |a0 AS MATERIALIZED (SELECT v FROM verts),
        |$roundCtes
        |SELECT * FROM (
        |$rows) ORDER BY round""".stripMargin

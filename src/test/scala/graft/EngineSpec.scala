@@ -58,7 +58,7 @@ class EngineSpec extends SparkSpec {
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true") {
       val nonce = s"graft_bcomp_${System.nanoTime()}"
-      val dir = java.nio.file.Files.createTempDirectory("graft_bcomp_")
+      val dir = tempDir("graft_bcomp_")
       try {
         val l = graft.sources.Tables.lineitem(spark, sfDir)
           .select(col("l_orderkey"), col("l_extendedprice"))
@@ -133,7 +133,7 @@ class EngineSpec extends SparkSpec {
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true") {
       val nonce = s"graft_b2t_${System.nanoTime()}"
-      val dir = java.nio.file.Files.createTempDirectory("graft_b2t_")
+      val dir = tempDir("graft_b2t_")
       try {
         val l = graft.sources.Tables.lineitem(spark, sfDir)
           .select(col("l_orderkey"), col("l_extendedprice"))

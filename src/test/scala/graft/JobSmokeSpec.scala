@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.apps.{AnnServeJob, CurationJob, DedupJob, IngestGateJob, LakehouseJob}
@@ -19,8 +20,9 @@ import graft.apps.{AnnServeJob, CurationJob, DedupJob, IngestGateJob, LakehouseJ
   * spark-submit) and a fresh one is brought up for the assertions.
   * Suites run sequentially in the forked test JVM, and later suites'
   * getOrCreate transparently builds a new session after our stop, so
-  * the stop stays contained. */
-class JobSmokeSpec extends AnyFunSuite {
+  * the stop stays contained. For the same reason it keeps its own
+  * temporary root rather than [[SparkSpec.tempDir]]'s. */
+class JobSmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
 
@@ -34,8 +36,13 @@ class JobSmokeSpec extends AnyFunSuite {
     .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
     .getOrCreate()
 
+  private lazy val root: Path = Files.createTempDirectory("graft_JobSmokeSpec_")
+
   private def tmp(tag: String): Path =
-    Files.createTempDirectory(s"graft_job_$tag")
+    Files.createTempDirectory(root, s"graft_job_$tag")
+
+  override def afterAll(): Unit =
+    try SparkSpec.deleteTree(root) finally super.afterAll()
 
   test("CurationJob.main writes the op113 manifest partitioned by shard") {
     freshSession()

@@ -47,7 +47,7 @@ class LayoutSpec extends SparkSpec {
     // still prunes; the aligned case shows the mechanism cleanly.
     val rect = col("lang_id") === 2L && col("len_bucket").between(16L, 23L)
 
-    val base = s"/tmp/graft_layout_spec_${ProcessHandle.current().pid()}"
+    val base = tempDir("graft_layout_spec_").toString
     Layout.writeClustered(docs,
       Layout.mortonKey(col("lang_id"), col("len_bucket")), 16, s"$base/clustered")
     docs.repartition(16).write.mode("overwrite").parquet(s"$base/roundrobin")
@@ -98,7 +98,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("append adds key-sorted files + manifest rows without touching existing ones") {
-    val base = s"/tmp/graft_layout_spec_append_${ProcessHandle.current().pid()}"
+    val base = tempDir("graft_layout_spec_append_").toString
     val docs = Layout.denseDimIds(Tables.documents(spark, sfDir), "lang", "lang_id")
       .withColumn("len_bucket",
         least(expr("n_chars div 16"), lit(65535L)).cast("bigint"))
@@ -138,7 +138,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("compaction merges fragmented files, rebuilds the manifest, moves no rows") {
-    val base = s"/tmp/graft_layout_spec_compact_${ProcessHandle.current().pid()}"
+    val base = tempDir("graft_layout_spec_compact_").toString
     val docs = Layout.denseDimIds(Tables.documents(spark, sfDir), "lang", "lang_id")
       .withColumn("len_bucket",
         least(expr("n_chars div 16"), lit(65535L)).cast("bigint"))
@@ -172,7 +172,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("time travel: snapshots pin every version of the append/delete lifecycle; expiry fails loudly") {
-    val base = s"/tmp/graft_layout_spec_tt_${ProcessHandle.current().pid()}"
+    val base = tempDir("graft_layout_spec_tt_").toString
     val docs = Layout.denseDimIds(Tables.documents(spark, sfDir), "lang", "lang_id")
       .withColumn("len_bucket",
         least(expr("n_chars div 16"), lit(65535L)).cast("bigint"))
@@ -213,7 +213,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("metadata-only count: contained files answer from stats, boundary files scan, result exact") {
-    val base = s"/tmp/graft_layout_spec_stats_${ProcessHandle.current().pid()}"
+    val base = tempDir("graft_layout_spec_stats_").toString
     val docs = Layout.denseDimIds(Tables.documents(spark, sfDir), "lang", "lang_id")
       .withColumn("len_bucket",
         least(expr("n_chars div 16"), lit(65535L)).cast("bigint"))
@@ -262,7 +262,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("merge-on-read delete: tombstones hide keys everywhere, compaction applies them physically") {
-    val base = s"/tmp/graft_layout_spec_delete_${ProcessHandle.current().pid()}"
+    val base = tempDir("graft_layout_spec_delete_").toString
     val docs = Layout.denseDimIds(Tables.documents(spark, sfDir), "lang", "lang_id")
       .withColumn("len_bucket",
         least(expr("n_chars div 16"), lit(65535L)).cast("bigint"))
@@ -307,7 +307,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("merge-on-read upsert: latest batch wins per key, deletes win by absence, compaction applies the changelog") {
-    val base = s"/tmp/graft_layout_spec_upsert_${ProcessHandle.current().pid()}"
+    val base = tempDir("graft_layout_spec_upsert_").toString
     val st = s"$base/st"
     val rows = (0L until 100L).map(i => (i, i % 4, i % 8, i * 10))
     val df = rows.toDF("id", "a", "b", "v")
@@ -363,7 +363,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("snapshotDiff reads only added files + tombstone delta; refuses across a compaction") {
-    val base = s"/tmp/graft_layout_spec_diff_${ProcessHandle.current().pid()}"
+    val base = tempDir("graft_layout_spec_diff_").toString
     val st = s"$base/st"
     val all = (0L until 100L).map(i => (i, i % 4, i % 8, i))
     val df = all.toDF("id", "a", "b", "v")
@@ -413,7 +413,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("schema evolution: appended files widen the schema; evolved read null-fills old files exactly") {
-    val base = s"/tmp/graft_layout_spec_evolve_${ProcessHandle.current().pid()}"
+    val base = tempDir("graft_layout_spec_evolve_").toString
     val st = s"$base/st"
     val baseRows = (0L until 60L).map(i => (i, i % 4, i % 8))
     val newRows = (60L until 80L).map(i => (i, i % 4, i % 8, i * 7))
@@ -435,7 +435,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("applyChanges rejects duplicate keys, bad _op values, and schema drift") {
-    val base = s"/tmp/graft_layout_spec_upguard_${ProcessHandle.current().pid()}"
+    val base = tempDir("graft_layout_spec_upguard_").toString
     val st = s"$base/st"
     val df = (0L until 20L).map(i => (i, i % 2, i % 4, i)).toDF("id", "a", "b", "v")
     val zk = Layout.mortonKey(col("a"), col("b"))
@@ -463,7 +463,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("per-file bloom index plans point lookups from the manifest without false negatives") {
-    val base = s"/tmp/graft_layout_spec_bloom_${ProcessHandle.current().pid()}"
+    val base = tempDir("graft_layout_spec_bloom_").toString
     val docs = Layout.denseDimIds(Tables.documents(spark, sfDir), "lang", "lang_id")
       .withColumn("len_bucket",
         least(expr("n_chars div 16"), lit(65535L)).cast("bigint"))
@@ -510,7 +510,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("clustered scan pushes the rectangle predicate to the parquet scan") {
-    val base = s"/tmp/graft_layout_spec_push_${ProcessHandle.current().pid()}"
+    val base = tempDir("graft_layout_spec_push_").toString
     val docs = Layout.denseDimIds(Tables.documents(spark, sfDir), "lang", "lang_id")
       .withColumn("len_bucket",
         least(expr("n_chars div 16"), lit(65535L)).cast("bigint"))

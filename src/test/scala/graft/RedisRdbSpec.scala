@@ -67,7 +67,7 @@ class RedisRdbSpec extends SparkSpec {
     // 6-bit, 14-bit, and 32-bit length encodings all round-trip: member
     // lengths span the tiers, and an 18k-entry set forces the 32-bit
     // count path (op125's writer dual of the parse path)
-    val tmp = java.nio.file.Files.createTempFile("graft_rdbw_", ".rdb")
+    val tmp = tempDir("graft_rdbw_").resolve("zset.rdb")
     try {
       val long14 = "m" * 100       // 14-bit string length
       val entries = Seq("short" -> 1.5, long14 -> -0.25) ++

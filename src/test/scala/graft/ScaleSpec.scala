@@ -139,7 +139,7 @@ class ScaleSpec extends SparkSpec {
       val want = graft.streaming.StreamingDecontaminate.flagAgainstStore(
           docs.filter(col("doc_id") % 50 =!= 0), {
             // unbucketed store dir for the reference computation
-            val d = java.nio.file.Files.createTempDirectory("graft_dc_ref_")
+            val d = tempDir("graft_dc_ref_")
             graft.streaming.StreamingDecontaminate.storeWrite(
               docs.filter(col("doc_id") % 50 === 0), "doc_id", "text",
               d.toString)
@@ -220,7 +220,7 @@ class ScaleSpec extends SparkSpec {
     // (partition pruning), which at 100 TB turns an ANN probe into a
     // ~2^-bits fraction of the corpus read.
     import graft.functions.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("graft_lsh_store_")
+    val dir = tempDir("graft_lsh_store_")
     try {
       val emb = Tables.embeddings(spark, sfDir)
       val bucketed = Similarity.lshBucketsMulti(emb, "vec_id", nBits = 4,
@@ -256,7 +256,7 @@ class ScaleSpec extends SparkSpec {
     // directories, and the pruned probe must still equal the end-to-end
     // annTopK exactly.
     import graft.functions.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("graft_lsh_probe_")
+    val dir = tempDir("graft_lsh_probe_")
     try {
       val emb = Tables.embeddings(spark, sfDir)
       Similarity.lshIndexWrite(emb, dir.toString, nBits = 4, nTables = 8)
@@ -294,7 +294,7 @@ class ScaleSpec extends SparkSpec {
     // the codes scan — the probe reads only the probed cells' int8
     // codes, never the full store
     import graft.functions.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("graft_sq8_probe_")
+    val dir = tempDir("graft_sq8_probe_")
     try {
       val emb = Tables.embeddings(spark, sfDir)
       Similarity.sq8IndexWrite(emb, dir.toString, nCells = 16, lloydIters = 2)
@@ -320,7 +320,7 @@ class ScaleSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.functions.Similarity
     import graft.streaming.StreamingAnn
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_probe_")
+    val dir = tempDir("graft_ivfpq_probe_")
     try {
       val emb = Tables.embeddings(spark, sfDir)
       Similarity.ivfPqIndexWrite(emb, dir.toString, nCells = 16,
@@ -369,7 +369,7 @@ class ScaleSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.functions.Similarity
     import graft.streaming.StreamingAnn
-    val dir = java.nio.file.Files.createTempDirectory("graft_pqadc_prune_")
+    val dir = tempDir("graft_pqadc_prune_")
     try {
       val emb = Tables.embeddings(spark, sfDir)
       Similarity.ivfPqIndexWrite(emb, dir.toString, nCells = 16,
@@ -427,7 +427,7 @@ class ScaleSpec extends SparkSpec {
     // nProbe/nCells of the corpus — partition pruning, same mechanics
     // the LSH layout proves above.
     import graft.functions.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_store_")
+    val dir = tempDir("graft_ivf_store_")
     try {
       val emb = Tables.embeddings(spark, sfDir)
       Similarity.ivfIndexWrite(emb, dir.toString, nCells = 16)

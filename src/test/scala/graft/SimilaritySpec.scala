@@ -122,6 +122,43 @@ class SimilaritySpec extends SparkSpec {
     assert(run() == pq, "PQ results differ between identical runs")
   }
 
+  test("integer Lloyd: an empty cell keeps its centroid, ties go to the lower id (IVF and PQ)") {
+    // ids 0 and 1 are the same vector, so everything near it ties
+    // between seeds 0 and 1: the lower id wins every tie and seed 1
+    // wins no members
+    val corpus = Seq(
+        0L -> Seq(1f, 0f, 1f, 0f), 1L -> Seq(1f, 0f, 1f, 0f),
+        2L -> Seq(0f, 1f, 0f, 1f), 3L -> Seq(1f, 0.5f, 1f, 0.5f),
+        4L -> Seq(0.5f, 1f, 0.5f, 1f))
+      .toDF("vec_id", "embedding")
+    val ivf = Similarity.lloydCentroids(corpus, nCells = 3, iters = 1, dim = 4)
+      .orderBy("cent_id").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1)).toSeq
+    assert(ivf == Seq(
+      0L -> Seq(1000000L, 166666L, 1000000L, 166666L),  // mean of ids 0, 1, 3
+      1L -> Seq(1000000L, 0L, 1000000L, 0L),            // no members: the seed
+      2L -> Seq(250000L, 1000000L, 250000L, 1000000L))) // mean of ids 2, 4
+    // PQ: two 2-wide subspaces, each seeded with codes 0..2 from ids 0..2
+    def codebook(iters: Int): Map[(Int, Long), List[Long]] = {
+      val dir = tempDir("graft_pq_retain_").toString
+      Similarity.pqIndexWrite(corpus, dir, m = 2, nCents = 3,
+        lloydIters = iters, dim = 4)
+      spark.read.parquet(s"$dir/codebook").collect()
+        .map(r => (r.getAs[Int]("sub_j"), r.getAs[Long]("code")) ->
+          r.getSeq[Long](r.fieldIndex("cent_vec")).toList)
+        .toMap
+    }
+    val seeds = codebook(0)
+    val trained = codebook(1)
+    assert(seeds.size == 6 && trained.keySet == seeds.keySet)
+    for (j <- 0 to 1) {
+      assert(trained((j, 1L)) == seeds((j, 1L)),
+        s"subspace $j: the memberless code 1 must keep its seed")
+      assert(trained((j, 0L)) != seeds((j, 0L)),
+        s"subspace $j: code 0 must win the ties and move to its members' mean")
+    }
+  }
+
   test("hyperplane generation matches golden values (shared root of every LSH bucket)") {
     // the md5-seeded planes are the one shared root of op66/op68
     // correctness AND of any LSH-bucketed storage layout already written
@@ -154,7 +191,7 @@ class SimilaritySpec extends SparkSpec {
     // stored values are bigint, so the storage round-trip is exact)
     val emb = Tables.embeddings(spark, sfDir)
     val queries = emb.filter(col("vec_id") < 32)
-    val dir = java.nio.file.Files.createTempDirectory("graft_index_eq_")
+    val dir = tempDir("graft_index_eq_")
     try {
       def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long, Long)] =
         df.orderBy("q_id", "rank").collect()
@@ -201,7 +238,7 @@ class SimilaritySpec extends SparkSpec {
     val rest = emb.filter(col("vec_id") % 2 =!= 0)
     val queries = emb.filter(col("vec_id") < 16)
     val n = emb.count().toInt
-    val dir = java.nio.file.Files.createTempDirectory("graft_index_append_")
+    val dir = tempDir("graft_index_append_")
     def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long, Long)] =
       df.orderBy("q_id", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
@@ -366,8 +403,7 @@ class SimilaritySpec extends SparkSpec {
     assert(full.toSeq == want)
     // op109's amortized spelling: a band probe over the persisted index
     // equals the end-to-end mining run with matching parameters
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_hardneg_idx").toString
+    val dir = tempDir("graft_hardneg_idx").toString
     Similarity.ivfIndexWrite(emb, dir, nCells = 16, lloydIters = 2)
     val probed = Similarity.hardNegativesProbe(queries, dir, 5, lo, hi,
       nProbe = 4).orderBy("q_id", "rank").collect()
@@ -592,8 +628,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("streaming graph-ANN walk is bit-identical to the batch search") {
     val emb = Tables.embeddings(spark, sfDir)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_nnd_spec_").toString
+    val dir = tempDir("graft_nnd_spec_").toString
     Similarity.nndIndexWrite(emb, dir, k = 16, rounds = 3, capR = 16)
     val batch = Similarity.graphSearch(emb,
         spark.read.parquet(s"$dir/graph"), nQueries = 8,
@@ -623,8 +658,7 @@ class SimilaritySpec extends SparkSpec {
     val n = emb.count()
     val g = Similarity.nnDescent(emb, k = 16, rounds = 3, capR = 16)
       .localCheckpoint()
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_hnsw_spec_").toString
+    val dir = tempDir("graft_hnsw_spec_").toString
     Similarity.hnswUpperWrite(emb, dir, mod = 8, k = 8, rounds = 2, capR = 8)
     val um = spark.read.parquet(s"$dir/level1_map")
     val ug = spark.read.parquet(s"$dir/upper_graph")
@@ -723,8 +757,7 @@ class SimilaritySpec extends SparkSpec {
     def v(axis: Int, wiggle: Int): Seq[Float] =
       Seq.tabulate(64)(i => if (i == axis) 1.0f
         else if (i == (axis + 1 + wiggle) % 64) 0.01f * (wiggle + 1) else 0.0f)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_op314_spec_").toString
+    val dir = tempDir("graft_op314_spec_").toString
     (0L until 20L).map(id =>
         (id, v(if (id % 2 == 0) 0 else 32, (id % 5).toInt),
           (id % 2).toInt))
@@ -752,8 +785,7 @@ class SimilaritySpec extends SparkSpec {
       Seq.tabulate(64)(i => if (i == main) 1.0f
         else if (i == leak) 0.1f else 0.0f)
     def writeFixture(odd: Seq[Float]): String = {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_op305_spec_").toString
+      val dir = tempDir("graft_op305_spec_").toString
       // the real fixtures are single parquet FILES (the streaming file
       // source in Drain.files lists a symlink to them) — reduce the
       // Spark output dir to one and move it into place
@@ -782,8 +814,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("streaming HNSW walk is bit-identical to the batch two-layer search") {
     val emb = Tables.embeddings(spark, sfDir)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_hnsw_stream_spec_").toString
+    val dir = tempDir("graft_hnsw_stream_spec_").toString
     Similarity.nndIndexWrite(emb, dir, k = 16, rounds = 3, capR = 16)
     Similarity.hnswUpperWrite(emb, s"$dir/up", mod = 8, k = 8, rounds = 2,
       capR = 8)

@@ -47,8 +47,7 @@ class SketchSpec extends SparkSpec {
   }
 
   test("op169: stream-maintained CMS grid is bit-equal to one-shot") {
-    val state = java.nio.file.Files
-      .createTempDirectory("graft_sketchspec_").toString
+    val state = tempDir("graft_sketchspec_").toString
     val streamed = graft.streaming.SketchStream
       .maintainedCounters(spark, sfDir, 4, 64, state)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2))

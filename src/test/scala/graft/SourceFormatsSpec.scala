@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.sources.Tables
 
 /** OP-02 breadth: the loaders and operators are format-agnostic
@@ -14,7 +12,7 @@ class SourceFormatsSpec extends SparkSpec {
     val doc = Tables.documents(spark, sfDir)
       .select("doc_id", "text", "lang", "source")
     val want = doc.orderBy("doc_id").collect().map(_.toSeq).toSeq
-    val tmp = Files.createTempDirectory("graft_fmt_").toString
+    val tmp = tempDir("graft_fmt_").toString
     try {
       doc.write.mode("overwrite").json(s"$tmp/json")
       // symmetric quote/escape so embedded quotes round-trip

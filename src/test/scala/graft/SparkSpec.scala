@@ -35,13 +35,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def tempDir(prefix: String): Path =
     Files.createTempDirectory(suiteRoot, prefix)
 
-  /** Deletes the suite's root depth-first without following symlinks,
-    * so a link to a fixture never takes the fixture with it. */
   override def afterAll(): Unit =
-    try root.foreach { r =>
-      val all = Files.walk(r)
-      try all.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(p => Files.delete(p))
-      finally all.close()
-    } finally super.afterAll()
+    try root.foreach(SparkSpec.deleteTree) finally super.afterAll()
+}
+
+object SparkSpec {
+
+  /** Deletes `r` depth-first without following symlinks, so a link to a
+    * fixture never takes the fixture with it. */
+  def deleteTree(r: Path): Unit = {
+    val all = Files.walk(r)
+    try all.sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => Files.delete(p))
+    finally all.close()
+  }
 }

@@ -14,7 +14,7 @@ class VerifySpec extends SparkSpec {
 
   private def run(qs: Seq[(String, (SparkSession, String) => DataFrame)])
       : (String, Map[String, String]) = {
-    val out = Files.createTempDirectory("graft_verify_spec").toString
+    val out = tempDir("graft_verify_spec").toString
     val errs = Verify.dumpQueries(spark, sfDir, out, qs)
     (out, errs)
   }
@@ -71,7 +71,7 @@ class VerifySpec extends SparkSpec {
     // whole loop). Pin the fix by OBSERVING the artifact mid-run: the
     // second query reads _summary.json while "running" and must find
     // the first query's completed entry in a fully-parseable document.
-    val out = Files.createTempDirectory("graft_verify_spec").toString
+    val out = tempDir("graft_verify_spec").toString
     @volatile var midRun: String = null
     val observer: (SparkSession, String) => DataFrame = (s, d) => {
       midRun = Files.readString(Paths.get(s"$out/_summary.json"))
@@ -103,7 +103,7 @@ class VerifySpec extends SparkSpec {
   }
 
   test("a query that breaks on rerun REPLACES its stale passing dump") {
-    val out = Files.createTempDirectory("graft_verify_spec").toString
+    val out = tempDir("graft_verify_spec").toString
     assert(Verify.dumpQueries(spark, sfDir, out, Seq("q" -> good)).isEmpty)
     assert(new java.io.File(s"$out/q").isDirectory)
     val boom: (SparkSession, String) => DataFrame =
