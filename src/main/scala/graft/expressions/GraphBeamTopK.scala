@@ -35,9 +35,8 @@ case class GraphShard(
   * Bit-identical to [[graft.functions.Similarity.graphSearch]], hop
   * for hop: entries are (qId·48271 + j·1299721) mod N for j in
   * 1..beam; every candidate is rescored with the exact integer cosine
-  * (floor(10⁴·dot/(√q_n2·√n2)), zero-norm → 0 — cosBpFrom's operand
-  * order); each round's candidate set is current-beam ∪ its
-  * out-neighbors, deduplicated, self dropped, kept to `beam` by
+  * ([[ShardScan.cosBp]]); each round's candidate set is current-beam
+  * ∪ its out-neighbors, deduplicated, self dropped, kept to `beam` by
   * (cos_bp desc, id asc). A scored id is memoized within the walk —
   * scores are pure, so the memo changes nothing but work.
   *
@@ -82,14 +81,9 @@ case class GraphBeamTopK(qId: Expression, qVec: Expression,
   override def nullSafeEval(qIdV: Any, qVecV: Any, qN2V: Any): Any = {
     val s = shard.value
     val qid = qIdV.asInstanceOf[Long]
-    val qv = qVecV.asInstanceOf[ArrayData]
-    val qn2 = qN2V.asInstanceOf[Long]
+    val q = qVecV.asInstanceOf[ArrayData].toLongArray()
     val n = s.vecs.length
-    val dim = qv.numElements()
-    val q = new Array[Long](dim)
-    var i = 0
-    while (i < dim) { q(i) = qv.getLong(i); i += 1 }
-    val qSqrt = math.sqrt(qn2.toDouble)
+    val qSqrt = math.sqrt(qN2V.asInstanceOf[Long].toDouble)
     // per-walk score memo: open-addressing int→long (dense ids < 2³¹,
     // asserted at shard load), no boxing — this eval runs once per
     // QUERY ROW every micro-batch, so the constant factor is the
@@ -126,19 +120,11 @@ case class GraphBeamTopK(qId: Expression, qVec: Expression,
         if (k == id) return mvals(h)
         if (k < 0) {
           val v = s.vecs(id)
-          if (v.length != dim)
+          if (v.length != q.length)
             throw new IllegalArgumentException(
-              s"graft_graph_beam: dimension mismatch ($dim vs ${v.length})")
-          val n2 = s.n2s(id)
-          val bp =
-            if (qn2 == 0L || n2 == 0L) 0L
-            else {
-              var dot = 0L
-              var d = 0
-              while (d < dim) { dot += q(d) * v(d); d += 1 }
-              math.floor(
-                dot.toDouble / (qSqrt * math.sqrt(n2.toDouble)) * 10000d).toLong
-            }
+              s"graft_graph_beam: dimension mismatch " +
+                s"(${q.length} vs ${v.length})")
+          val bp = ShardScan.cosBp(ShardScan.dot(q, v), qSqrt, s.n2s(id))
           mkeys(h) = id; mvals(h) = bp; msize += 1
           if (msize * 2 > mcap) rehash()
           return bp
@@ -255,7 +241,7 @@ case class GraphBeamTopK(qId: Expression, qVec: Expression,
     }
     val kept = math.min(kOut, beamLen)
     val out = new Array[Any](kept)
-    i = 0
+    var i = 0
     while (i < kept) {
       out(i) = InternalRow(score(beamArr(i)), beamArr(i).toLong)
       i += 1

@@ -55,17 +55,7 @@ object PqShard {
       centN2s: Array[Long], blockIds: Array[Array[Long]],
       blockRows: Array[Array[Array[Long]]], cbVecs: Array[Array[Long]],
       cbN2s: Array[Long], m: Int, nCents: Int, subDim: Int): PqShard = {
-    val flat = blockRows.map { rows =>
-      val out = new Array[Long](rows.length * m)
-      var j = 0
-      while (j < rows.length) {
-        require(rows(j).length == m,
-          s"packed code length ${rows(j).length} != m=$m")
-        System.arraycopy(rows(j), 0, out, j * m, m)
-        j += 1
-      }
-      out
-    }
+    val flat = ShardScan.flatBlocks(blockRows, m, "packed code length")
     PqShard(cellIds, centVecs, centN2s, blockIds, flat, cbVecs, cbN2s,
       m, nCents, subDim)
   }
@@ -86,8 +76,9 @@ object PqShard {
   *
   * Bit-identical to the join spelling: the LUT slot is
   * s2_j − 2·(sv_j·cb) + cb_n2 (adcLut's exact integer arithmetic),
-  * cell choice is [[SqShardTopK]]'s cell scoring verbatim, a candidate's
-  * d2 is Σ_j pd2[j·nCents + code_j], and n_id == qId is excluded.
+  * cell choice is [[ShardScan.rankCells]] (shared with [[SqShardTopK]]),
+  * a candidate's d2 is Σ_j pd2[j·nCents + code_j], and n_id == qId is
+  * excluded.
   * "Top-k of the per-row top-k" equals "top-k over all probed
   * candidates" because the downstream [[graft.functions.TopKAgg]]
   * fold is associative over (score desc, id asc).
@@ -130,15 +121,10 @@ case class PqShardTopK(qId: Expression, qVec: Expression,
       nqVecV: Any): Any = {
     val s = shard.value
     val qid = qIdV.asInstanceOf[Long]
-    val qv = qVecV.asInstanceOf[ArrayData]
-    val qn2 = qN2V.asInstanceOf[Long]
-    val nq = nqVecV.asInstanceOf[ArrayData]
-    val dim = qv.numElements()
-    val q = new Array[Long](dim)
-    var i = 0
-    while (i < dim) { q(i) = qv.getLong(i); i += 1 }
-    require(nq.numElements() == s.m * s.subDim,
-      s"graft_pq_shard: normalized dim ${nq.numElements()} != " +
+    val q = qVecV.asInstanceOf[ArrayData].toLongArray()
+    val nq = nqVecV.asInstanceOf[ArrayData].toLongArray()
+    require(nq.length == s.m * s.subDim,
+      s"graft_pq_shard: normalized dim ${nq.length} != " +
         s"${s.m}·${s.subDim}")
     // ADC LUT: pd2[j·nCents + c] = s2_j − 2·(sv_j·cb) + cb_n2 —
     // adcLut's exact integer arithmetic, once per QUERY row
@@ -149,7 +135,7 @@ case class PqShardTopK(qId: Expression, qVec: Expression,
       var s2 = 0L
       var d = 0
       while (d < s.subDim) {
-        val x = nq.getLong(base + d); s2 += x * x; d += 1
+        val x = nq(base + d); s2 += x * x; d += 1
       }
       var c = 0
       while (c < s.nCents) {
@@ -157,42 +143,21 @@ case class PqShardTopK(qId: Expression, qVec: Expression,
         val cb = s.cbVecs(slot)
         var dot = 0L
         d = 0
-        while (d < s.subDim) { dot += nq.getLong(base + d) * cb(d); d += 1 }
+        while (d < s.subDim) { dot += nq(base + d) * cb(d); d += 1 }
         pd2(slot) = s2 - 2L * dot + s.cbN2s(slot)
         c += 1
       }
       j += 1
     }
-    // cell ranking — the batch probe's scoring verbatim
-    // (cosBpFrom∘intDot, (cos_bp desc, cent_id asc))
-    val qSqrt = math.sqrt(qn2.toDouble)
-    val nc = s.cellIds.length
-    val bps = new Array[Long](nc)
-    var c = 0
-    while (c < nc) {
-      val cv = s.centVecs(c)
-      if (cv.length != dim)
-        throw new IllegalArgumentException(
-          s"graft_pq_shard: dimension mismatch ($dim vs ${cv.length})")
-      var dot = 0L
-      var d = 0
-      while (d < dim) { dot += q(d) * cv(d); d += 1 }
-      bps(c) =
-        if (qn2 == 0L || s.centN2s(c) == 0L) 0L
-        else math.floor(
-          dot.toDouble / (qSqrt * math.sqrt(s.centN2s(c).toDouble)) * 10000d)
-          .toLong
-      c += 1
-    }
-    val cellOrder = Array.range(0, nc).sortWith { (a, b) =>
-      bps(a) > bps(b) || (bps(a) == bps(b) && s.cellIds(a) < s.cellIds(b))
-    }
+    val cellOrder = ShardScan.rankCells(q,
+      math.sqrt(qN2V.asInstanceOf[Long].toDouble), s.cellIds, s.centVecs,
+      s.centN2s, "graft_pq_shard")
     // scan the nProbe best cells' blocks: m LUT lookups per candidate,
     // k-kept through the bounded-insertion selector (no candidate-sized
     // allocation, no boxed sort — see [[BoundedTopK]])
-    val probes = math.min(nProbe, nc)
+    val probes = math.min(nProbe, s.cellIds.length)
     val sel = new BoundedTopK(k)
-    i = 0
+    var i = 0
     while (i < probes) {
       val ci = cellOrder(i)
       val bIds = s.blockIds(ci)

@@ -58,17 +58,7 @@ object SqShard {
     val dim = centVecs(0).length
     centVecs.foreach(v => require(v.length == dim,
       s"centroid dim ${v.length} != $dim"))
-    val flat = blockRows.map { rows =>
-      val out = new Array[Long](rows.length * dim)
-      var j = 0
-      while (j < rows.length) {
-        require(rows(j).length == dim,
-          s"block vector dim ${rows(j).length} != $dim")
-        System.arraycopy(rows(j), 0, out, j * dim, dim)
-        j += 1
-      }
-      out
-    }
+    val flat = ShardScan.flatBlocks(blockRows, dim, "block vector dim")
     SqShard(cellIds, centVecs, centN2s, blockIds, flat, blockN2s, dim)
   }
 }
@@ -94,10 +84,9 @@ object SqShard {
   * module already uses for PQ, scaled up through a broadcast because
   * code blocks are megabytes where codebooks are kilobytes.
   *
-  * Scoring is bit-identical to Similarity.cosBpFrom∘intDot (same
-  * operand order, Math.sqrt/floor, zero-norm guard); cell choice is
-  * bit-identical to the batch probe's (cos_bp desc, cent_id asc)
-  * ranking; candidates with n_id == qId are
+  * Scoring is bit-identical to Similarity.cosBpFrom∘intDot and cell
+  * choice to the batch probe's (cos_bp desc, cent_id asc) ranking
+  * (both are [[ShardScan]]'s); candidates with n_id == qId are
   * excluded. Equality of "top-k of union of per-cell top-ks" and
   * "top-k over all candidates" holds because every global winner ranks
   * ≤ k within its own cell. */
@@ -130,44 +119,19 @@ case class SqShardTopK(qId: Expression, qVec: Expression,
   override def nullSafeEval(qIdV: Any, qVecV: Any, qN2V: Any): Any = {
     val s = shard.value
     val qid = qIdV.asInstanceOf[Long]
-    val qv = qVecV.asInstanceOf[ArrayData]
-    val qn2 = qN2V.asInstanceOf[Long]
-    val dim = qv.numElements()
-    val q = new Array[Long](dim)
-    var i = 0
-    while (i < dim) { q(i) = qv.getLong(i); i += 1 }
-    val qSqrt = math.sqrt(qn2.toDouble)
-    def bp(dot: Long, n2: Long): Long =
-      if (qn2 == 0L || n2 == 0L) 0L
-      else math.floor(
-        dot.toDouble / (qSqrt * math.sqrt(n2.toDouble)) * 10000d).toLong
-    // cell ranking (the batch probe's exact (cos_bp desc, cent_id asc))
-    val nc = s.cellIds.length
-    val cellBps = new Array[Long](nc)
-    var c = 0
-    while (c < nc) {
-      val cv = s.centVecs(c)
-      if (cv.length != dim)
-        throw new IllegalArgumentException(
-          s"graft_shard_topk: dimension mismatch ($dim vs ${cv.length})")
-      var dot = 0L
-      var d = 0
-      while (d < dim) { dot += q(d) * cv(d); d += 1 }
-      cellBps(c) = bp(dot, s.centN2s(c))
-      c += 1
-    }
-    val cellOrder = Array.range(0, nc).sortWith { (a, b) =>
-      cellBps(a) > cellBps(b) ||
-        (cellBps(a) == cellBps(b) && s.cellIds(a) < s.cellIds(b))
-    }
+    val q = qVecV.asInstanceOf[ArrayData].toLongArray()
+    val dim = q.length
+    val qSqrt = math.sqrt(qN2V.asInstanceOf[Long].toDouble)
+    val cellOrder = ShardScan.rankCells(q, qSqrt, s.cellIds, s.centVecs,
+      s.centN2s, "graft_shard_topk")
     // scan the nProbe best cells' blocks through the bounded-insertion
     // selector (probed candidate volume is |corpus|·nProbe/nCells —
     // thousands of rows where k is 5; the old collect-all-then-sortWith
     // tail allocated three candidate-sized arrays and boxed the sort
     // per QUERY ROW per micro-batch — see [[BoundedTopK]])
-    val probes = math.min(nProbe, nc)
+    val probes = math.min(nProbe, s.cellIds.length)
     val sel = new BoundedTopK(k)
-    i = 0
+    var i = 0
     while (i < probes) {
       val ci = cellOrder(i)
       val bIds = s.blockIds(ci)
@@ -177,10 +141,12 @@ case class SqShardTopK(qId: Expression, qVec: Expression,
       var off = 0
       while (j < bIds.length) {
         if (bIds(j) != qid) {
+          // the dot stays inline here: this is the leg's hot loop, and
+          // the ShardScan.dot call measured 5-10% slower per query row
           var dot = 0L
           var d = 0
           while (d < dim) { dot += q(d) * flat(off + d); d += 1 }
-          sel.offer(bp(dot, bN2s(j)), bIds(j))
+          sel.offer(ShardScan.cosBp(dot, qSqrt, bN2s(j)), bIds(j))
         }
         j += 1
         off += dim

@@ -1,8 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
+import graft.expressions.{GraphBeamTopK, GraphShard, PqShard, PqShardTopK, SqShard, SqShardTopK}
 import graft.functions.{Similarity, TopKAgg}
 
 /** Online ANN serving — the streaming half of the similarity story: a
@@ -38,7 +42,7 @@ object StreamingAnn {
     * every query with no matches — zero candidates through the same
     * explode → TopKAgg shape, so output-mode semantics and schema are
     * unchanged — instead of require-failing at stream build. */
-  private def emptyTopK(scoreField: String): org.apache.spark.sql.Column =
+  private def emptyTopK(scoreField: String): Column =
     expr(s"CAST(array() AS array<struct<$scoreField: bigint, n_id: bigint>>)")
 
   /** Probe the persisted IVF index at `dir` with a STREAMING frame of
@@ -57,55 +61,9 @@ object StreamingAnn {
     * the join spelling (op96 hash-green; the per-query top-k over all
     * probed candidates is what the join's global TopKAgg computed). */
   def ivfProbeStream(queryStream: DataFrame, dir: String, k: Int,
-      nProbe: Int = 4): DataFrame = {
-    val spark = queryStream.sparkSession
-    val centRows = spark.read.parquet(s"$dir/centroids")
-      .select(col("cent_id"), col("cent_vec"), col("cent_n2"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getLong(2)))
-      .sortBy(_._1)
-    // cent_id is a partition directory on disk; restore its bigint type
-    val cellRows = spark.read.parquet(s"$dir/cells")
-      .select(col("cent_id").cast("bigint"), col("n_id"), col("n_id_vec"),
-        col("n_id_n2"))
-      .collect()
-      .map(r => (r.getLong(0),
-        (r.getLong(1), r.getSeq[Long](2).toArray, r.getLong(3))))
-      .groupBy(_._1)
-    val blocks = centRows.map { case (cid, _, _) =>
-      // deterministic block order (by n_id) — irrelevant to results
-      // (the scan keeps all candidates) but keeps the shard reproducible
-      cellRows.getOrElse(cid, Array.empty).map(_._2).sortBy(_._1)
-    }
-    val qVec = Similarity.quantize(col("embedding"))
-    val q0 = queryStream.select(col("vec_id").as("q_id"), qVec.as("q_vec"))
-      .withColumn("q_n2", Similarity.intDot(col("q_vec"), col("q_vec")))
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    // cold-bootstrap EMPTY index (r15 advice): the legacy stream-static
-    // join spelling answered every query with no matches; the shard
-    // spelling must do the same, not require-fail at stream build
-    val topExpr =
-      if (centRows.isEmpty) emptyTopK("sq_bp")
-      else {
-        val shard = spark.sparkContext.broadcast(
-          graft.expressions.SqShard.fromRows(
-            centRows.map(_._1),
-            centRows.map(_._2),
-            centRows.map(_._3),
-            blocks.map(_.map(_._1)),
-            blocks.map(_.map(_._2)),
-            blocks.map(_.map(_._3))))
-        ColumnBridge.column(graft.expressions.SqShardTopK(
-          ColumnBridge.expression(col("q_id")),
-          ColumnBridge.expression(col("q_vec")),
-          ColumnBridge.expression(col("q_n2")), shard, k, nProbe))
-      }
-    q0.select(col("q_id"), explode(topExpr).as("t"))
-      .select(col("q_id"), col("t.sq_bp").as("cos_bp"),
-        col("t.n_id").as("n_id"))
-      .groupBy(col("q_id"))
-      .agg(TopKAgg.topK(k)(col("cos_bp"), col("n_id")).as("top"))
-  }
+      nProbe: Int = 4): DataFrame =
+    blockShardProbe(queryStream, dir, "cells", "n_id_vec", "n_id_n2",
+      "cos_bp", k, nProbe)
 
   /** Probe the persisted SQ8 index at `dir`
     * ([[graft.functions.Similarity.sq8IndexWrite]]) with a STREAMING
@@ -138,56 +96,36 @@ object StreamingAnn {
     * cross-trigger folding. At 100 TB the blocks live partitioned on
     * executors (disk-spillable), exactly like the unpinned store. */
   def sq8ProbeStream(queryStream: DataFrame, dir: String, k: Int,
-      nProbe: Int = 4): DataFrame = {
+      nProbe: Int = 4): DataFrame =
+    blockShardProbe(queryStream, dir, "codes", "codes", "c_n2", "sq_bp", k,
+      nProbe)
+
+  /** The one IVF-flat / SQ8 serving body: the shard is loaded ONCE at
+    * stream build into the flat array layout an ANN server scans and
+    * shipped as one broadcast value (see [[SqShardTopK]]'s scaladoc for
+    * why this beats the stream-static join at serving cadence and how it
+    * remains the honest 100 TB shape). `table` is the cell-block store,
+    * `vecCol`/`n2Col` its vector and norm columns, and the probe's score
+    * is emitted as `scoreName`. An EMPTY index answers with no matches
+    * (the cold-bootstrap contract of [[emptyTopK]]). */
+  private def blockShardProbe(queryStream: DataFrame, dir: String,
+      table: String, vecCol: String, n2Col: String, scoreName: String,
+      k: Int, nProbe: Int): DataFrame = {
     val spark = queryStream.sparkSession
-    // load the shard ONCE at stream build into the flat array layout an
-    // ANN server scans, and ship it as one broadcast value — see
-    // SqShardTopK's scaladoc for why this beats the stream-static join
-    // at serving cadence and how it remains the honest 100 TB shape
-    val centRows = spark.read.parquet(s"$dir/centroids")
-      .select(col("cent_id"), col("cent_vec"), col("cent_n2"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getLong(2)))
-      .sortBy(_._1)
-    val codeRows = spark.read.parquet(s"$dir/codes")
-      .select(col("cent_id").cast("bigint"), col("n_id"), col("codes"),
-        col("c_n2"))
-      .collect()
-      .map(r => (r.getLong(0),
-        (r.getLong(1), r.getSeq[Long](2).toArray, r.getLong(3))))
-      .groupBy(_._1)
-    val blocks = centRows.map { case (cid, _, _) =>
-      // deterministic block order (by n_id) — irrelevant to results
-      // (the scan keeps all candidates) but keeps the shard reproducible
-      codeRows.getOrElse(cid, Array.empty).map(_._2).sortBy(_._1)
-    }
-    val qVec = Similarity.quantize(col("embedding"))
-    val q0 = queryStream.select(col("vec_id").as("q_id"), qVec.as("q_vec"))
-      .withColumn("q_n2", Similarity.intDot(col("q_vec"), col("q_vec")))
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    // empty-index short-circuit — same cold-bootstrap contract as
-    // ivfProbeStream above
+    val (cellIds, centVecs, centN2s) = loadCentroids(spark, dir)
+    val blocks = cellBlocks(spark, s"$dir/$table", cellIds, vecCol, n2Col)
     val topExpr =
-      if (centRows.isEmpty) emptyTopK("sq_bp")
+      if (cellIds.isEmpty) emptyTopK("sq_bp")
       else {
-        val shard = spark.sparkContext.broadcast(
-          graft.expressions.SqShard.fromRows(
-            centRows.map(_._1),
-            centRows.map(_._2),
-            centRows.map(_._3),
-            blocks.map(_.map(_._1)),
-            blocks.map(_.map(_._2)),
-            blocks.map(_.map(_._3))))
-        ColumnBridge.column(graft.expressions.SqShardTopK(
-          ColumnBridge.expression(col("q_id")),
-          ColumnBridge.expression(col("q_vec")),
-          ColumnBridge.expression(col("q_n2")), shard, k, nProbe))
+        val shard = spark.sparkContext.broadcast(SqShard.fromRows(
+          cellIds, centVecs, centN2s,
+          blocks.map(_.map(_.getLong(1))),
+          blocks.map(_.map(_.getSeq[Long](2).toArray)),
+          blocks.map(_.map(_.getLong(3)))))
+        ColumnBridge.column(SqShardTopK(qExpr("q_id"), qExpr("q_vec"),
+          qExpr("q_n2"), shard, k, nProbe))
       }
-    q0.select(col("q_id"), explode(topExpr).as("t"))
-      .select(col("q_id"), col("t.sq_bp").as("sq_bp"),
-        col("t.n_id").as("n_id"))
-      .groupBy(col("q_id"))
-      .agg(TopKAgg.topK(k)(col("sq_bp"), col("n_id")).as("top"))
+    topKOf(queryRows(queryStream), topExpr, "sq_bp", scoreName, k)
   }
 
   /** Probe the persisted PQ index at `dir`
@@ -326,92 +264,78 @@ object StreamingAnn {
   def ivfPqProbeStream(queryStream: DataFrame, dir: String, k: Int,
       nProbe: Int = 4): DataFrame = {
     val spark = queryStream.sparkSession
-    val shardOpt = loadPqShard(spark, dir)
     // raw quantized vector drives the cell choice (the IVF metric);
     // the normalized vector drives the ADC LUT (the PQ metric) — both
     // are per-row projections over the same embedding
-    val q0 = queryStream.select(col("vec_id").as("q_id"),
-        Similarity.quantize(col("embedding")).as("q_vec"),
-        Similarity.normalizedEmbedding(col("embedding")).as("nq_vec"))
-      .withColumn("q_n2", Similarity.intDot(col("q_vec"), col("q_vec")))
-    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val q0 = queryRows(queryStream,
+      Similarity.normalizedEmbedding(col("embedding")).as("nq_vec"))
     // empty-index short-circuit — the ivfProbeStream cold-bootstrap
     // contract (r15 review: this leg used to crash on `empty.max` in
     // the codebook geometry inference at stream build)
-    val topExpr = shardOpt.fold(emptyTopK("neg_d2")) { shard =>
-      ColumnBridge.column(graft.expressions.PqShardTopK(
-        ColumnBridge.expression(col("q_id")),
-        ColumnBridge.expression(col("q_vec")),
-        ColumnBridge.expression(col("q_n2")),
-        ColumnBridge.expression(col("nq_vec")), shard, k, nProbe))
+    val topExpr = loadPqShard(spark, dir).fold(emptyTopK("neg_d2")) {
+      shard =>
+        ColumnBridge.column(PqShardTopK(qExpr("q_id"), qExpr("q_vec"),
+          qExpr("q_n2"), qExpr("nq_vec"), shard, k, nProbe))
     }
-    q0.select(col("q_id"), explode(topExpr).as("t"))
-      .select(col("q_id"), col("t.neg_d2").as("neg_d2"),
-        col("t.n_id").as("n_id"))
-      .groupBy(col("q_id"))
-      .agg(TopKAgg.topK(k)(col("neg_d2"), col("n_id")).as("top"))
+    topKOf(q0, topExpr, "neg_d2", "neg_d2", k)
   }
 
   /** Flatten the persisted IVF-PQ index (centroids + codebook +
     * packed codes grouped by cell) into the [[graft.expressions.PqShard]]
     * layout — the one-time stream-build load. */
   private def loadPqShard(spark: SparkSession, dir: String)
-      : Option[org.apache.spark.broadcast.Broadcast[graft.expressions.PqShard]] = {
-    val cents = spark.read.parquet(s"$dir/centroids")
-      .select(col("cent_id"), col("cent_vec"), col("cent_n2"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getLong(2)))
-      .sortBy(_._1)
+      : Option[Broadcast[PqShard]] = {
+    val (cellIds, centVecs, centN2s) = loadCentroids(spark, dir)
+    val cbOpt = loadCodebook(spark, dir)
+    // cold bootstrap: a fully empty index short-circuits at the caller;
+    // a PARTIAL index (one store present, the other empty) is a build
+    // error — name it instead of failing further in
+    if (cellIds.isEmpty && cbOpt.isEmpty) return None
+    require(cellIds.nonEmpty && cbOpt.nonEmpty,
+      s"partial IVF-PQ index at $dir: centroids=${cellIds.length} rows, " +
+        s"codebook=${cbOpt.fold(0)(_.n2s.length)} rows — an empty index " +
+        "must be empty in BOTH")
+    val cb = cbOpt.get
+    val blocks = cellBlocks(spark, s"$dir/codes_packed", cellIds, "codes")
+    Some(spark.sparkContext.broadcast(PqShard.fromRows(
+      cellIds, centVecs, centN2s,
+      blocks.map(_.map(_.getLong(1))),
+      blocks.map(_.map(_.getSeq[Long](2).toArray)),
+      cb.vecs, cb.n2s, cb.m, cb.nCents, cb.subDim)))
+  }
+
+  /** A PQ codebook in slot order (slot = j·nCents + code). */
+  private case class PqCodebook(vecs: Array[Array[Long]], n2s: Array[Long],
+      m: Int, nCents: Int, subDim: Int)
+
+  /** Collect `dir/codebook` (m×nCents rows — bytes) and infer its
+    * geometry from the observed maxima; None when it is empty. */
+  private def loadCodebook(spark: SparkSession, dir: String)
+      : Option[PqCodebook] = {
     val cb = spark.read.parquet(s"$dir/codebook").collect()
       .map(r => (r.getInt(r.fieldIndex("sub_j")),
         r.getLong(r.fieldIndex("code"))) ->
         ((r.getSeq[Long](r.fieldIndex("cent_vec")).toArray,
           r.getLong(r.fieldIndex("cent_n2")))))
       .toMap
-    // cold bootstrap: a fully empty index short-circuits at the caller;
-    // a PARTIAL index (one store present, the other empty) is a build
-    // error — name it instead of crashing on `empty.max` below
-    if (cents.isEmpty && cb.isEmpty) return None
-    require(cents.nonEmpty && cb.nonEmpty,
-      s"partial IVF-PQ index at $dir: centroids=${cents.length} rows, " +
-        s"codebook=${cb.size} rows — an empty index must be empty in BOTH")
+    if (cb.isEmpty) return None
     val m = cb.keys.map(_._1).max + 1
     val nCents = cb.keys.map(_._2).max.toInt + 1
-    val subDim = cb.values.head._1.length
-    val cbVecs = new Array[Array[Long]](m * nCents)
-    val cbN2s = new Array[Long](m * nCents)
-    for (j <- 0 until m; c <- 0 until nCents) {
+    val slots = Array.tabulate(m * nCents) { slot =>
+      val (j, c) = (slot / nCents, slot % nCents)
       // m/nCents are inferred from the observed maxima, so a gap in the
       // codebook would otherwise surface as a bare NoSuchElementException
       // at stream build — name the hole instead
-      val (v, n2) = cb.getOrElse((j, c.toLong), sys.error(
+      cb.getOrElse((j, c.toLong), sys.error(
         s"PQ codebook hole: no row for (sub_j=$j, code=$c) " +
           s"(inferred m=$m, nCents=$nCents from the observed maxima)"))
-      cbVecs(j * nCents + c) = v
-      cbN2s(j * nCents + c) = n2
     }
-    val blocks = spark.read.parquet(s"$dir/codes_packed")
-      .select(col("cent_id").cast("bigint"), col("n_id"), col("codes"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).toArray))
-      .groupBy(_._1)
-    val shard = graft.expressions.PqShard.fromRows(
-      cents.map(_._1),
-      cents.map(_._2),
-      cents.map(_._3),
-      // block row order is irrelevant (every probed candidate is
-      // scored; the rank is (neg_d2, id)) but keep it byte-reproducible
-      cents.map(c => blocks.getOrElse(c._1, Array.empty).sortBy(_._2)
-        .map(_._2)),
-      cents.map(c => blocks.getOrElse(c._1, Array.empty).sortBy(_._2)
-        .map(_._3)),
-      cbVecs, cbN2s, m, nCents, subDim)
-    Some(spark.sparkContext.broadcast(shard))
+    Some(PqCodebook(slots.map(_._1), slots.map(_._2), m, nCents,
+      cb.values.head._1.length))
   }
 
-  /** Shared ADC LUT for the PQ-scoring streaming legs: collects
-    * `dir/codebook` ONCE at stream build (m×nCents rows — bytes),
-    * infers the subspace geometry from it, and returns
+  /** Shared ADC LUT for the PQ-scoring streaming legs: loads the
+    * codebook ONCE at stream build and returns
     * (m, nCents, subDim, lutOf) where lutOf(svs, s2s) is the per-row
     * array of m·nCents partial distances (LUT slot = j·nCents + code).
     * The whole codebook rides as ONE flat plan literal traversed by a
@@ -420,31 +344,18 @@ object StreamingAnn {
     * codegen enough to dominate the probe at stream start. The lambda
     * interprets, but only over m·nCents cells per QUERY row; the
     * per-CANDIDATE lookup path stays codegen'd. */
-  private def adcLut(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (Int, Int, Int,
-        (org.apache.spark.sql.Column, org.apache.spark.sql.Column) =>
-          org.apache.spark.sql.Column) = {
-    val cb = spark.read.parquet(s"$dir/codebook").collect()
-      .map(r => (r.getInt(r.fieldIndex("sub_j")),
-        r.getLong(r.fieldIndex("code"))) ->
-        ((r.getSeq[Long](r.fieldIndex("cent_vec")),
-          r.getLong(r.fieldIndex("cent_n2")))))
-      .toMap
-    val m = cb.keys.map(_._1).max + 1
-    val nCents = cb.keys.map(_._2).max.toInt + 1
-    val subDim = cb.values.head._1.length
-    val cbFlat = (0 until m).flatMap { j =>
-      (0 until nCents).map { c =>
-        val (cvec, cn2) = cb((j, c.toLong)); (j, cvec, cn2)
-      }
-    }
-    val lutOf = (svs: org.apache.spark.sql.Column,
-        s2s: org.apache.spark.sql.Column) =>
+  private def adcLut(spark: SparkSession, dir: String)
+      : (Int, Int, Int, (Column, Column) => Column) = {
+    val cb = loadCodebook(spark, dir).getOrElse(
+      sys.error(s"PQ index at $dir has an empty codebook"))
+    val cbFlat: Seq[(Int, Seq[Long], Long)] = cb.vecs.indices.map(slot =>
+      (slot / cb.nCents, cb.vecs(slot).toSeq, cb.n2s(slot)))
+    val lutOf = (svs: Column, s2s: Column) =>
       transform(typedlit(cbFlat), e =>
         element_at(s2s, e.getField("_1") + 1) - lit(2L) *
           Similarity.intDot(element_at(svs, e.getField("_1") + 1),
             e.getField("_2")) + e.getField("_3"))
-    (m, nCents, subDim, lutOf)
+    (cb.m, cb.nCents, cb.subDim, lutOf)
   }
 
   /** Probe the persisted NN-Descent graph index at `dir`
@@ -483,8 +394,7 @@ object StreamingAnn {
     * layer) into the flat [[graft.expressions.GraphShard]] layout — the
     * once-at-stream-build read every serving leg amortizes. */
   private def loadGraphShard(spark: SparkSession, dir: String,
-      upperDir: Option[String]): org.apache.spark.broadcast.Broadcast[
-      graft.expressions.GraphShard] = {
+      upperDir: Option[String]): Broadcast[GraphShard] = {
     val vecRows = spark.read.parquet(s"$dir/vectors")
       .select(col("id"), col("vec"), col("n2"))
       .collect()
@@ -526,7 +436,7 @@ object StreamingAnn {
             uAdjOf.getOrElse(l, Array.empty).map(_._2).sorted })
     }
     spark.sparkContext.broadcast(
-      graft.expressions.GraphShard(
+      GraphShard(
         vecRows.map(_._2),
         vecRows.map(_._3),
         // neighbor order is irrelevant (expansion is a set union) but
@@ -537,25 +447,60 @@ object StreamingAnn {
   }
 
   private def beamProbeStream(queryStream: DataFrame,
-      shard: org.apache.spark.broadcast.Broadcast[
-        graft.expressions.GraphShard],
-      kOut: Int, beam: Int, hops: Int, upperBeam: Int,
-      upperHops: Int): DataFrame = {
-    val q0 = queryStream.select(col("vec_id").as("q_id"),
-        Similarity.quantize(col("embedding")).as("q_vec"))
+      shard: Broadcast[GraphShard], kOut: Int, beam: Int, hops: Int,
+      upperBeam: Int, upperHops: Int): DataFrame = {
+    val topExpr = ColumnBridge.column(GraphBeamTopK(qExpr("q_id"),
+      qExpr("q_vec"), qExpr("q_n2"), shard, beam, hops, kOut, upperBeam,
+      upperHops))
+    topKOf(queryRows(queryStream), topExpr, "cos_bp", "cos_bp", kOut)
+  }
+
+  /** The (cent_id, cent_vec, cent_n2) rows of `dir/centroids` in cent_id
+    * order, as (cellIds, centVecs, centN2s). */
+  private def loadCentroids(spark: SparkSession, dir: String)
+      : (Array[Long], Array[Array[Long]], Array[Long]) =
+    spark.read.parquet(s"$dir/centroids")
+      .select(col("cent_id"), col("cent_vec"), col("cent_n2"))
+      .collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getLong(2)))
+      .sortBy(_._1)
+      .unzip3
+
+  /** One block per cell, in `cellIds` order, of the cent_id-partitioned
+    * store at `path`: rows (cent_id, n_id, cols…). cent_id is a partition
+    * directory on disk, so its bigint type is restored here. Blocks are
+    * sorted by n_id — irrelevant to results (the scan scores every
+    * probed candidate) but keeps the shard byte-reproducible. */
+  private def cellBlocks(spark: SparkSession, path: String,
+      cellIds: Array[Long], cols: String*): Array[Array[Row]] = {
+    val byCell = spark.read.parquet(path)
+      .select(col("cent_id").cast("bigint") +: ("n_id" +: cols).map(col): _*)
+      .collect()
+      .groupBy(_.getLong(0))
+    cellIds.map(c => byCell.getOrElse(c, Array.empty[Row]).sortBy(_.getLong(1)))
+  }
+
+  /** The (q_id, q_vec, extra…, q_n2) projection every cell and graph leg
+    * scores from: the quantized query vector and its squared norm. */
+  private def queryRows(queryStream: DataFrame, extra: Column*): DataFrame =
+    queryStream.select(col("vec_id").as("q_id") +:
+        Similarity.quantize(col("embedding")).as("q_vec") +: extra: _*)
       .withColumn("q_n2", Similarity.intDot(col("q_vec"), col("q_vec")))
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val topExpr = ColumnBridge.column(graft.expressions.GraphBeamTopK(
-      ColumnBridge.expression(col("q_id")),
-      ColumnBridge.expression(col("q_vec")),
-      ColumnBridge.expression(col("q_n2")), shard, beam, hops, kOut,
-      upperBeam, upperHops))
+
+  private def qExpr(name: String): Expression =
+    ColumnBridge.expression(col(name))
+
+  /** Explode the shard expression's top-k array into
+    * (q_id, `scoreName`, n_id) rows and fold them through the one
+    * bounded stateful [[TopKAgg]]; `field` names the score inside the
+    * expression's struct. */
+  private def topKOf(q0: DataFrame, topExpr: Column, field: String,
+      scoreName: String, k: Int): DataFrame =
     q0.select(col("q_id"), explode(topExpr).as("t"))
-      .select(col("q_id"), col("t.cos_bp").as("cos_bp"),
+      .select(col("q_id"), col(s"t.$field").as(scoreName),
         col("t.n_id").as("n_id"))
       .groupBy(col("q_id"))
-      .agg(TopKAgg.topK(kOut)(col("cos_bp"), col("n_id")).as("top"))
-  }
+      .agg(TopKAgg.topK(k)(col(scoreName), col("n_id")).as("top"))
 
   /** Explode a (q_id, top) frame from [[ivfProbeStream]] /
     * [[pqAdcProbeStream]] into the batch probe's row shape:

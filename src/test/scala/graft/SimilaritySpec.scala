@@ -122,15 +122,16 @@ class SimilaritySpec extends SparkSpec {
     assert(run() == pq, "PQ results differ between identical runs")
   }
 
+  // ids 0 and 1 are the same vector, so everything near it ties between
+  // seeds 0 and 1: the lower id wins every tie and seed 1 wins no members
+  private def tieCorpus = Seq(
+      0L -> Seq(1f, 0f, 1f, 0f), 1L -> Seq(1f, 0f, 1f, 0f),
+      2L -> Seq(0f, 1f, 0f, 1f), 3L -> Seq(1f, 0.5f, 1f, 0.5f),
+      4L -> Seq(0.5f, 1f, 0.5f, 1f))
+    .toDF("vec_id", "embedding")
+
   test("integer Lloyd: an empty cell keeps its centroid, ties go to the lower id (IVF and PQ)") {
-    // ids 0 and 1 are the same vector, so everything near it ties
-    // between seeds 0 and 1: the lower id wins every tie and seed 1
-    // wins no members
-    val corpus = Seq(
-        0L -> Seq(1f, 0f, 1f, 0f), 1L -> Seq(1f, 0f, 1f, 0f),
-        2L -> Seq(0f, 1f, 0f, 1f), 3L -> Seq(1f, 0.5f, 1f, 0.5f),
-        4L -> Seq(0.5f, 1f, 0.5f, 1f))
-      .toDF("vec_id", "embedding")
+    val corpus = tieCorpus
     val ivf = Similarity.lloydCentroids(corpus, nCells = 3, iters = 1, dim = 4)
       .orderBy("cent_id").collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toSeq
@@ -157,6 +158,67 @@ class SimilaritySpec extends SparkSpec {
       assert(trained((j, 0L)) != seeds((j, 0L)),
         s"subspace $j: code 0 must win the ties and move to its members' mean")
     }
+  }
+
+  test("streaming IVF legs rank tied cells by the lower cent_id, as the build assigns them") {
+    // seeds 0 and 1 are the same vector and lloydIters = 0 keeps them, so
+    // centroids 0 and 1 tie for every query: the build puts ids 0, 1 and
+    // 3 in cell 0 and leaves cell 1 empty. With nProbe = 1 a leg that
+    // broke the tie toward cell 1 would scan the empty cell.
+    import graft.streaming.StreamingAnn
+    val corpus = tieCorpus
+    val queries = Seq(99L -> Seq(1f, 0f, 1f, 0f), 98L -> Seq(1f, 0.2f, 1f, 0.2f))
+      .toDF("vec_id", "embedding")
+    val dir = tempDir("graft_tie_idx_").toString
+    Similarity.ivfIndexWrite(corpus, s"$dir/ivf", nCells = 3)
+    Similarity.sq8IndexWrite(corpus, s"$dir/sq8", nCells = 3)
+    Similarity.ivfPqIndexWrite(corpus, s"$dir/ivfpq", nCells = 3, m = 2,
+      nCents = 3, dim = 4)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long, Long)] =
+      df.orderBy("q_id", "rank").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    val ivf = rows(StreamingAnn.explodeTopK(
+      StreamingAnn.ivfProbeStream(queries, s"$dir/ivf", 3, nProbe = 1)))
+    assert(ivf.map(r => (r._1, r._2)).toSet ==
+      Set(98L, 99L).flatMap(q => Seq(0L, 1L, 3L).map(q -> _)))
+    assert(ivf == rows(Similarity.ivfProbe(queries, s"$dir/ivf", 3, nProbe = 1)),
+      "streaming IVF leg diverged from the batch probe on tied cells")
+    val sq8 = rows(StreamingAnn.explodeTopK(
+      StreamingAnn.sq8ProbeStream(queries, s"$dir/sq8", 3, nProbe = 1), "sq_bp"))
+    val pq = rows(StreamingAnn.explodeTopK(
+      StreamingAnn.ivfPqProbeStream(queries, s"$dir/ivfpq", 3, nProbe = 1),
+      "neg_d2"))
+    for ((name, got) <- Seq("ivf" -> ivf, "sq8" -> sq8, "ivfpq" -> pq))
+      assert(got.groupBy(_._1).map { case (q, rs) => q -> rs.size } ==
+        Map(98L -> 3, 99L -> 3), s"$name leg: expected 3 rows per query: $got")
+  }
+
+  test("shard integer cosine equals Similarity.cosBpFrom (zero norms, signs, bp boundaries)") {
+    // (dot, q_n2, n2) triples; the last two come from 64-dim vectors at
+    // quantize's range (|component| = 10⁶, the quantized ±1.0)
+    val big = 1000000L
+    val ones = Array.fill(64)(big)
+    val alt = Array.tabulate(64)(i => if (i % 3 == 0) -big else big)
+    def dot(a: Array[Long], b: Array[Long]): Long =
+      a.indices.map(i => a(i) * b(i)).sum
+    val cases = Seq(
+      (5L, 0L, 4L),                 // zero query norm, nonzero dot
+      (5L, 4L, 0L),                 // zero candidate norm
+      (0L, 0L, 0L),
+      (-1L, big * big, big * big),  // tiny negative floors to -1, not 0
+      (500L, 100L, 10000L),         // exactly 0.5: 5000
+      (-500L, 100L, 10000L),        // exactly -0.5: -5000
+      (57L, 10000L, 1L),            // 5699 in this operand order, not 5700
+      (dot(ones, ones), dot(ones, ones), dot(ones, ones)),
+      (dot(ones, alt), dot(ones, ones), dot(alt, alt)))
+    val want = cases.toDF("dot", "q_n2", "n2")
+      .select(Similarity.cosBpFrom(col("dot"), col("q_n2"), col("n2")))
+      .collect().map(_.getLong(0)).toSeq
+    val got = cases.map { case (d, qn2, n2) =>
+      graft.expressions.ShardScan.cosBp(d, math.sqrt(qn2.toDouble), n2)
+    }
+    assert(got == want)
+    assert(want.take(7) == Seq(0L, 0L, 0L, -1L, 5000L, -5000L, 5699L))
   }
 
   test("hyperplane generation matches golden values (shared root of every LSH bucket)") {
